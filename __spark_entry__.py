@@ -95,27 +95,22 @@ _EXPR_JS = (
 )
 
 
-def _get_index(spark: SparkSession, sf_dir: str) -> Index:
-    key = os.path.normpath(sf_dir)
+def _get_index(spark: SparkSession, sf_dir: str, variant: str = "") -> Index:
+    """Memoized fixture index over ``sf_dir``'s documents: the
+    ``_FIXTURE_INDEXES[variant]`` docs transform, then build_index with
+    that entry's kwargs, cached under ``.cache/docidx_<tag>``."""
+    key = os.path.normpath(sf_dir) + (f"|{variant}" if variant else "")
     if key in _INDEXES:
         return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_")
+    tag = key.strip("/").replace("/", "_").replace("|", "_")
     idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
+    transform, kwargs = _FIXTURE_INDEXES[variant]
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    # second tokenized field: the document head (first 200 chars) — the
-    # classic title/body shape; per-field postings, norms and stats
-    docs = docs.withColumn("head", F.substring(F.col("text"), 1, 200))
+    if transform is not None:
+        docs = transform(docs)
     build_index(
-        spark,
-        docs,
-        idx_dir,
-        text_col="text",
-        extra_fields={"head": "head"},
-        doc_id_col="doc_id",
-        keep_cols=["lang", "source", "n_chars"],
-        num_buckets=8,
-        salt_rows=2048,
-        resume=True,
+        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
+        num_buckets=8, salt_rows=2048, resume=True, **kwargs,
     )
     _INDEXES[key] = Index(spark, idx_dir)
     return _INDEXES[key]
@@ -158,23 +153,6 @@ def _an_derive_col():
     return F.when(F.col("doc_id") % 2 == 1, plural).otherwise(F.col("text"))
 
 
-def _get_an_index(spark: SparkSession, sf_dir: str) -> Index:
-    key = os.path.normpath(sf_dir) + "|an"
-    if key in _INDEXES:
-        return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_").replace("|", "_")
-    idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    docs = docs.withColumn("text", _an_derive_col())
-    build_index(
-        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
-        keep_cols=["lang"], num_buckets=8, salt_rows=2048, resume=True,
-        analyzer=_AN_ANALYZER,
-    )
-    _INDEXES[key] = Index(spark, idx_dir)
-    return _INDEXES[key]
-
-
 # Snowball (Porter2) analyzer index: the fixture corpus carries no
 # inflected forms, so the gate derives them deterministically (the same
 # trick as _AN_DERIVE_SQL): merge -> merges/merging/merged by doc_id
@@ -206,29 +184,12 @@ def _snow_derive_col():
     )
 
 
-def _get_snow_index(spark: SparkSession, sf_dir: str) -> Index:
-    key = os.path.normpath(sf_dir) + "|snow"
-    if key in _INDEXES:
-        return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_").replace("|", "_")
-    idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    docs = docs.withColumn("text", _snow_derive_col())
-    build_index(
-        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
-        keep_cols=["lang"], num_buckets=8, salt_rows=2048, resume=True,
-        analyzer=_SNOW_ANALYZER,
-    )
-    _INDEXES[key] = Index(spark, idx_dir)
-    return _INDEXES[key]
-
-
 def _q_snowball_term(qtext: str, k: int):
     """Query text through the snowball analyzer chain (stem at query
     side too, QueryBuilder re-analysis), scored on the snowball index."""
 
     def fn(spark, sf_dir):
-        s = Searcher(_get_snow_index(spark, sf_dir), scoring="double")
+        s = Searcher(_get_index(spark, sf_dir, "snow"), scoring="double")
         toks = s.analyze(qtext)
         return _topk_rounded(s.scored(TermQ(toks[0])), k)
 
@@ -264,29 +225,12 @@ def _br_derive_col():
     )
 
 
-def _get_br_index(spark: SparkSession, sf_dir: str) -> Index:
-    key = os.path.normpath(sf_dir) + "|br"
-    if key in _INDEXES:
-        return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_").replace("|", "_")
-    idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    docs = docs.withColumn("text", _br_derive_col())
-    build_index(
-        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
-        num_buckets=8, salt_rows=2048, resume=True,
-        analyzer=_BR_ANALYZER,
-    )
-    _INDEXES[key] = Index(spark, idx_dir)
-    return _INDEXES[key]
-
-
 def _q_brazilian_term(qtext: str, k: int):
     """Query text through the Brazilian analyzer chain (stemmed at
     query side too), scored on the Brazilian-stemmed index."""
 
     def fn(spark, sf_dir):
-        s = Searcher(_get_br_index(spark, sf_dir), scoring="double")
+        s = Searcher(_get_index(spark, sf_dir, "br"), scoring="double")
         toks = s.analyze(qtext)
         return _topk_rounded(s.scored(TermQ(toks[0])), k)
 
@@ -304,36 +248,12 @@ _PATH_COL_SQL = (
 )
 
 
-def _get_path_index(spark: SparkSession, sf_dir: str) -> Index:
-    key = os.path.normpath(sf_dir) + "|path"
-    if key in _INDEXES:
-        return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_").replace("|", "_")
-    idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    docs = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("source"), F.lit("/"), F.col("lang"), F.lit("/p"),
-            (F.col("doc_id") % 13).cast("string"), F.lit("/f"),
-            F.col("doc_id").cast("string"),
-        ).alias("text"),
-    )
-    build_index(
-        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
-        num_buckets=8, salt_rows=2048, resume=True,
-        analyzer={"tokenizer": "path_hierarchy"},
-    )
-    _INDEXES[key] = Index(spark, idx_dir)
-    return _INDEXES[key]
-
-
 def _q_path_prefix_counts(n: int):
     """Path-hierarchy analysis e2e: top-n path prefixes by doc count
     out of the path-tokenized index's term dictionary."""
 
     def fn(spark, sf_dir):
-        idx = _get_path_index(spark, sf_dir)
+        idx = _get_index(spark, sf_dir, "path")
         return idx.high_freq_terms(n).select(
             "term", F.col("df").cast("long").alias("df"),
         )
@@ -409,78 +329,20 @@ _UAX_APPEND = " pkg.main don't v1.2 mix.4"
 _WD_APPEND = " getDataFrame parseJSONValue HTTPServer2"
 
 
-def _get_wd_index(spark: SparkSession, sf_dir: str) -> Index:
-    key = os.path.normpath(sf_dir) + "|wd"
-    if key in _INDEXES:
-        return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_").replace("|", "_")
-    idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    docs = docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 3 == 1, F.concat(F.col("text"), F.lit(_WD_APPEND))
-        ).otherwise(F.col("text")),
-    )
-    build_index(
-        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
-        keep_cols=["lang"], num_buckets=8, salt_rows=2048, resume=True,
-        analyzer={"tokenizer": "standard", "word_delimiter": True},
-    )
-    _INDEXES[key] = Index(spark, idx_dir)
-    return _INDEXES[key]
-
-
 def _q_wd_term(term: str, k: int):
     def fn(spark, sf_dir):
-        s = Searcher(_get_wd_index(spark, sf_dir), scoring="double")
+        s = Searcher(_get_index(spark, sf_dir, "wd"), scoring="double")
         return _topk_rounded(s.scored(TermQ(term)), k)
 
     return fn
-
-
-def _get_sh_index(spark: SparkSession, sf_dir: str) -> Index:
-    """ShingleFilter index: unigrams + adjacent bigrams ('data_line'),
-    bigrams as posIncr=0 overlaps (dl counts unigrams only)."""
-    key = os.path.normpath(sf_dir) + "|sh"
-    if key in _INDEXES:
-        return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_").replace("|", "_")
-    idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    build_index(
-        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
-        keep_cols=["lang"], num_buckets=8, salt_rows=2048, resume=True,
-        analyzer={"tokenizer": "standard", "shingles": True},
-    )
-    _INDEXES[key] = Index(spark, idx_dir)
-    return _INDEXES[key]
 
 
 def _q_sh_term(term: str, k: int):
     def fn(spark, sf_dir):
-        s = Searcher(_get_sh_index(spark, sf_dir), scoring="double")
+        s = Searcher(_get_index(spark, sf_dir, "sh"), scoring="double")
         return _topk_rounded(s.scored(TermQ(term)), k)
 
     return fn
-
-
-def _get_pay_index(spark: SparkSession, sf_dir: str) -> Index:
-    """Payload index: per-position f32 payloads (token_length source) in
-    the pay stream (PayloadAttribute / .pay file analog)."""
-    key = os.path.normpath(sf_dir) + "|pay"
-    if key in _INDEXES:
-        return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_").replace("|", "_")
-    idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    build_index(
-        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
-        keep_cols=["lang"], num_buckets=8, salt_rows=2048, resume=True,
-        analyzer={"payloads": "token_length"},
-    )
-    _INDEXES[key] = Index(spark, idx_dir)
-    return _INDEXES[key]
 
 
 def _q_payload_span(terms: tuple, func: str, k: int):
@@ -491,7 +353,7 @@ def _q_payload_span(terms: tuple, func: str, k: int):
     def fn(spark, sf_dir):
         from lucene_spark.search import PayloadScoreQ, SpanOrQ, SpanTermQ
 
-        s = Searcher(_get_pay_index(spark, sf_dir), scoring="double")
+        s = Searcher(_get_index(spark, sf_dir, "pay"), scoring="double")
         q = PayloadScoreQ(
             SpanOrQ(tuple(SpanTermQ(t) for t in terms)), func
         )
@@ -592,59 +454,6 @@ ORDER BY round({sim}, 4) DESC, df DESC, suggestion
 LIMIT {n}"""
 
 
-def _get_uax_index(spark: SparkSession, sf_dir: str) -> Index:
-    key = os.path.normpath(sf_dir) + "|uax"
-    if key in _INDEXES:
-        return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_").replace("|", "_")
-    idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    docs = docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 3 == 0, F.concat(F.col("text"), F.lit(_UAX_APPEND))
-        ).otherwise(F.col("text")),
-    )
-    build_index(
-        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
-        keep_cols=["lang"], num_buckets=8, salt_rows=2048, resume=True,
-        analyzer={"tokenizer": "uax29"},
-    )
-    _INDEXES[key] = Index(spark, idx_dir)
-    return _INDEXES[key]
-
-
-def _get_cjk_index(spark: SparkSession, sf_dir: str) -> Index:
-    """Index over a deterministic synthetic Han corpus (no external
-    data: 6 consecutive-codepoint chars derived from doc_id, both the
-    Spark synthesis and the DuckDB oracle regenerate it) analyzed with
-    the CJK chain (analysis_cjk.py width fold + per-char split +
-    CJKBigramFilter)."""
-    key = os.path.normpath(sf_dir) + "|cjk"
-    if key in _INDEXES:
-        return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_").replace("|", "_")
-    idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-    @F.pandas_udf("string")
-    def _mk_cjk(ids: pd.Series) -> pd.Series:
-        return ids.map(
-            lambda d: "".join(
-                chr(0x4E00 + (int(d) * 7 + i) % 64) for i in range(6)
-            )
-        )
-
-    docs = docs.select("doc_id", _mk_cjk(F.col("doc_id")).alias("text"))
-    build_index(
-        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
-        num_buckets=8, salt_rows=2048, resume=True,
-        analyzer={"cjk": True},
-    )
-    _INDEXES[key] = Index(spark, idx_dir)
-    return _INDEXES[key]
-
-
 # Japanese (kuromoji analog) gate corpus: deterministic noun+particle
 # sentences — for doc d, 3 + d%4 units of NOUNS[(d*7+i*3)%24] ·
 # PARTS[(d*11+i*5)%10], concatenated WITHOUT separators. The engine
@@ -670,38 +479,13 @@ def _ja_units(d: int) -> list[str]:
     return toks
 
 
-def _get_ja_index(spark: SparkSession, sf_dir: str) -> Index:
-    """Index over the deterministic Japanese corpus analyzed with the
-    kuromoji-analog chain (analysis_ja.ja_tokenize, Viterbi lattice
-    over the vendored lexicon; JapaneseTokenizer.java:70 semantics)."""
-    key = os.path.normpath(sf_dir) + "|ja"
-    if key in _INDEXES:
-        return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_").replace("|", "_")
-    idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-    @F.pandas_udf("string")
-    def _mk_ja(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda d: "".join(_ja_units(int(d))))
-
-    docs = docs.select("doc_id", _mk_ja(F.col("doc_id")).alias("text"))
-    build_index(
-        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
-        num_buckets=8, salt_rows=2048, resume=True,
-        analyzer={"ja": {"mode": "search"}},
-    )
-    _INDEXES[key] = Index(spark, idx_dir)
-    return _INDEXES[key]
-
-
 def _q_ja_term(term: str, k: int):
     """Kuromoji-analog e2e gate: BM25 top-k for one Japanese noun over
     the Viterbi-segmented index. Correct iff the tokenizer recovers
     exactly the generated segmentation for every doc."""
 
     def fn(spark, sf_dir):
-        s = Searcher(_get_ja_index(spark, sf_dir), scoring="double")
+        s = Searcher(_get_index(spark, sf_dir, "ja"), scoring="double")
         return _topk_rounded(s.scored(TermQ(term)), k)
 
     return fn
@@ -773,32 +557,103 @@ def _zh_units(d: int) -> list[str]:
     return [_ZH_WORDS[(d * 11 + i * 3) % 16] for i in range(4 + d % 4)]
 
 
-def _get_lat_index(spark: SparkSession, sf_dir: str, lang: str) -> Index:
-    key = os.path.normpath(sf_dir) + f"|{lang}"
-    if key in _INDEXES:
-        return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_").replace("|", "_")
-    idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    units = _ko_units if lang == "ko" else _zh_units
+def _derived_text(col_fn):
+    """docs transform: rewrite ``text`` with a derive column (each has a
+    DuckDB SQL twin the oracle applies to the same rows)."""
+    return lambda docs: docs.withColumn("text", col_fn())
 
-    @F.pandas_udf("string")
-    def _mk(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda d: "".join(units(int(d))))
 
-    docs = docs.select("doc_id", _mk(F.col("doc_id")).alias("text"))
-    build_index(
-        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
-        num_buckets=8, salt_rows=2048, resume=True,
-        analyzer={lang: {}},
+def _appended_text(mod: int, rem: int, suffix: str):
+    """docs transform: append ``suffix`` to docs with doc_id % mod == rem."""
+    return lambda docs: docs.withColumn(
+        "text",
+        F.when(
+            F.col("doc_id") % mod == rem, F.concat(F.col("text"), F.lit(suffix))
+        ).otherwise(F.col("text")),
     )
-    _INDEXES[key] = Index(spark, idx_dir)
-    return _INDEXES[key]
+
+
+def _generated_text(gen):
+    """docs transform: text is a pure function of doc_id (no external
+    data), so the DuckDB oracle regenerates the same corpus."""
+
+    def transform(docs):
+        @F.pandas_udf("string")
+        def _mk(ids: pd.Series) -> pd.Series:
+            return ids.map(lambda d: gen(int(d)))
+
+        return docs.select("doc_id", _mk(F.col("doc_id")).alias("text"))
+
+    return transform
+
+
+def _path_text(docs):
+    # one deterministic repo-style path per doc (_PATH_COL_SQL twin)
+    return docs.select(
+        "doc_id",
+        F.concat(
+            F.col("source"), F.lit("/"), F.col("lang"), F.lit("/p"),
+            (F.col("doc_id") % 13).cast("string"), F.lit("/f"),
+            F.col("doc_id").cast("string"),
+        ).alias("text"),
+    )
+
+
+# Fixture indexes: key suffix -> (docs transform or None, build_index
+# kwargs on top of text_col/doc_id_col/num_buckets/salt_rows/resume).
+_FIXTURE_INDEXES = {
+    # base: plus a second tokenized field, the document head (first 200
+    # chars) — the classic title/body shape; per-field postings, norms
+    # and stats
+    "": (
+        lambda docs: docs.withColumn("head", F.substring(F.col("text"), 1, 200)),
+        {"extra_fields": {"head": "head"},
+         "keep_cols": ["lang", "source", "n_chars"]},
+    ),
+    "an": (_derived_text(_an_derive_col),
+           {"keep_cols": ["lang"], "analyzer": _AN_ANALYZER}),
+    "snow": (_derived_text(_snow_derive_col),
+             {"keep_cols": ["lang"], "analyzer": _SNOW_ANALYZER}),
+    "br": (_derived_text(_br_derive_col), {"analyzer": _BR_ANALYZER}),
+    "path": (_path_text, {"analyzer": {"tokenizer": "path_hierarchy"}}),
+    "wd": (_appended_text(3, 1, _WD_APPEND),
+           {"keep_cols": ["lang"],
+            "analyzer": {"tokenizer": "standard", "word_delimiter": True}}),
+    # ShingleFilter: unigrams + adjacent bigrams ('data_line') as
+    # posIncr=0 overlaps (dl counts unigrams only)
+    "sh": (None, {"keep_cols": ["lang"],
+                  "analyzer": {"tokenizer": "standard", "shingles": True}}),
+    # per-position f32 payloads (token_length source) in the pay stream
+    "pay": (None, {"keep_cols": ["lang"],
+                   "analyzer": {"payloads": "token_length"}}),
+    "uax": (_appended_text(3, 0, _UAX_APPEND),
+            {"keep_cols": ["lang"], "analyzer": {"tokenizer": "uax29"}}),
+    # synthetic Han corpus: 6 consecutive-codepoint chars from doc_id,
+    # CJK chain (width fold + per-char split + CJKBigramFilter)
+    "cjk": (
+        _generated_text(
+            lambda d: "".join(chr(0x4E00 + (d * 7 + i) % 64) for i in range(6))
+        ),
+        {"analyzer": {"cjk": True}},
+    ),
+    # kuromoji-analog chain (Viterbi lattice over the vendored lexicon)
+    "ja": (_generated_text(lambda d: "".join(_ja_units(d))),
+           {"analyzer": {"ja": {"mode": "search"}}}),
+    "ko": (_generated_text(lambda d: "".join(_ko_units(d))),
+           {"analyzer": {"ko": {}}}),
+    "zh": (_generated_text(lambda d: "".join(_zh_units(d))),
+           {"analyzer": {"zh": {}}}),
+    # edge n-grams of length 2-4 stacked at the source position plus the
+    # original token: a short TermQ behaves as a prefix match
+    "ng": (None, {"keep_cols": ["lang"],
+                  "analyzer": {"token_ngrams": {"min": 2, "max": 4, "edge": True,
+                                                "preserve_original": True}}}),
+}
 
 
 def _q_lat_term(lang: str, term: str, k: int):
     def fn(spark, sf_dir):
-        s = Searcher(_get_lat_index(spark, sf_dir, lang), scoring="double")
+        s = Searcher(_get_index(spark, sf_dir, lang), scoring="double")
         return _topk_rounded(s.scored(TermQ(term)), k)
 
     return fn
@@ -854,7 +709,7 @@ def _q_cjk_bigram_terms(n: int):
     pure function of doc_id."""
 
     def fn(spark, sf_dir):
-        idx = _get_cjk_index(spark, sf_dir)
+        idx = _get_index(spark, sf_dir, "cjk")
         return idx.high_freq_terms(n).select(
             "term",
             F.col("df").cast("long").alias("df"),
@@ -866,7 +721,7 @@ def _q_cjk_bigram_terms(n: int):
 
 def _q_uax_term(term: str, k: int):
     def fn(spark, sf_dir):
-        s = Searcher(_get_uax_index(spark, sf_dir), scoring="double")
+        s = Searcher(_get_index(spark, sf_dir, "uax"), scoring="double")
         return _topk_rounded(s.scored(TermQ(term)), k)
 
     return fn
@@ -877,7 +732,7 @@ def _q_analyzed_term(qtext: str, k: int):
     re-analysis), then a scored TermQuery on the analyzer index."""
 
     def fn(spark, sf_dir):
-        s = Searcher(_get_an_index(spark, sf_dir), scoring="double")
+        s = Searcher(_get_index(spark, sf_dir, "an"), scoring="double")
         toks = s.analyze(qtext)
         return _topk_rounded(s.scored(TermQ(toks[0])), k)
 
@@ -2599,31 +2454,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return _topk_rounded(s.scored(q), 100)
 
 
-def _get_ngram_index(spark: SparkSession, sf_dir: str) -> Index:
-    """Edge-ngram index (analysis/ngram EdgeNGramTokenFilter): grams of
-    length 2-4 stacked at the source position plus the original token —
-    so a short TermQ behaves as a prefix match, which the oracle can
-    express exactly (gram 'vec' exists in a doc iff some token of the
-    doc starts with 'vec')."""
-    key = os.path.normpath(sf_dir) + "|ng"
-    if key in _INDEXES:
-        return _INDEXES[key]
-    tag = key.strip("/").replace("/", "_").replace("|", "_")
-    idx_dir = os.path.join(_CACHE_ROOT, f"docidx_{tag}")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    build_index(
-        spark, docs, idx_dir, text_col="text", doc_id_col="doc_id",
-        keep_cols=["lang"], num_buckets=8, salt_rows=2048, resume=True,
-        analyzer={"token_ngrams": {"min": 2, "max": 4, "edge": True,
-                                   "preserve_original": True}},
-    )
-    _INDEXES[key] = Index(spark, idx_dir)
-    return _INDEXES[key]
-
-
 def _q_edge_ngram_docs(gram: str):
     def fn(spark, sf_dir):
-        s = Searcher(_get_ngram_index(spark, sf_dir), scoring="double")
+        s = Searcher(_get_index(spark, sf_dir, "ng"), scoring="double")
         return _docset_sorted(s.doc_set(TermQ(gram)))
 
     return fn

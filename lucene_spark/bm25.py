@@ -84,19 +84,6 @@ def score(freq, norm_bytes, weight: np.float32, cache: np.ndarray) -> np.ndarray
     return (w - w / (np.float32(1.0) + f * inv)).astype(np.float32)
 
 
-def max_block_score(impacts, weight: np.float32, cache: np.ndarray) -> float:
-    """Max achievable score of a block from its (freq, norm) impact pairs.
-
-    Mirrors MaxScoreCache.computeMaxScore (search/MaxScoreCache.java:70-108):
-    evaluate the scorer on every competitive (freq, norm) pair, take max.
-    """
-    if len(impacts) == 0:
-        return float("inf")
-    freqs = np.array([p[0] for p in impacts], dtype=np.float32)
-    norms = np.array([p[1] for p in impacts], dtype=np.int64)
-    return float(np.max(score(freqs, norms, weight, cache)))
-
-
 # ---------------------------------------------------------------------------
 # Double-precision oracle-comparable variant (same formula, float64).
 # Used only by queries that are cross-checked against an ANSI-SQL oracle.

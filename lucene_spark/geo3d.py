@@ -184,7 +184,7 @@ class _Segment:
     cp_b: tuple     # end cutoff plane normal (positive toward a)
 
 
-def _path_segments(points, model: PlanetModel) -> list:
+def _path_segments(points, model: PlanetModel) -> tuple[list, list]:
     pts = [model.point(la, lo) for la, lo in points]
     segs = []
     for a, b in zip(pts, pts[1:]):
@@ -238,12 +238,6 @@ def path_predicate(
 # -- two-phase DataFrame helpers (bbox prune -> exact plane refine) ---------
 
 
-def _bbox_prefilter(lat_col: str, lon_col: str, lat_bounds, lon_ok) -> Column:
-    lo, hi = lat_bounds
-    c = (F.col(lat_col) >= F.lit(lo)) & (F.col(lat_col) <= F.lit(hi))
-    return c if lon_ok is None else c & lon_ok
-
-
 def within_circle(
     df: DataFrame,
     lat_col: str,
@@ -258,8 +252,8 @@ def within_circle(
     longitude band is only safe away from the poles, so latitude-only
     is the conservative prune."""
     deg = math.degrees(cutoff_radians) + 1e-9
-    pre = _bbox_prefilter(
-        lat_col, lon_col, (lat - deg - 0.5, lat + deg + 0.5), None
+    pre = (F.col(lat_col) >= F.lit(lat - deg - 0.5)) & (
+        F.col(lat_col) <= F.lit(lat + deg + 0.5)
     )
     return df.filter(pre).filter(
         circle_predicate(lat_col, lon_col, lat, lon, cutoff_radians, model)
@@ -274,12 +268,10 @@ def within_path(
     cutoff_radians: float,
     model: PlanetModel = WGS84,
 ) -> DataFrame:
-    deg = math.degrees(cutoff_radians) + 1e-9
-    lats = [la for la, _ in points]
-    pre = _bbox_prefilter(
-        lat_col, lon_col, (min(lats) - deg - 0.5, max(lats) + deg + 0.5), None
-    )
-    return df.filter(pre).filter(
+    """The exact corridor predicate alone. A latitude band from the
+    vertices' min/max is unsound here: a great-circle segment bulges
+    poleward past its endpoints, so corridor points can lie outside it."""
+    return df.filter(
         path_predicate(lat_col, lon_col, points, cutoff_radians, model)
     )
 

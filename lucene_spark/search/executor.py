@@ -137,6 +137,14 @@ def _edit_distance(a: str, b: str, transpositions: bool) -> int:
     return d[la + 1][lb + 1]
 
 
+def _impact_max(score, impacts, weight) -> float:
+    """Max of a block scorer over the block's competitive (freq, norm)
+    impacts — its score upper bound (MaxScoreCache.java:70-108)."""
+    f = np.array([p["freq"] for p in impacts], dtype=np.float32)
+    nm = np.array([p["norm"] for p in impacts], dtype=np.int64)
+    return float(np.max(score(f, nm, weight)))
+
+
 def _decode_positions_row(pos_bin: bytes, freqs: np.ndarray) -> list:
     """pos stream -> list of per-doc position arrays (delta decode)."""
     d = decode_value_stream(bytes(pos_bin)).astype(np.int64)
@@ -151,9 +159,10 @@ def _decode_positions_row(pos_bin: bytes, freqs: np.ndarray) -> list:
 
 class Searcher:
     # Below this many estimated postings (sum of clause dfs) the WAND
-    # machinery's extra driver round-trips (θ sampling + verification)
-    # cost more than the decode they would save — route to the plain
-    # one-job plan instead. Cost-based, like the reference's rewrite
+    # plan's extra work — the bounds pass plus the θ subtree (per-term
+    # top-k samples, candidate verification) fused into the query's one
+    # action — costs more than the decode it would save, so the query
+    # takes the plain plan. Cost-based, like the reference's rewrite
     # decisions; at 100 TB any hot clause clears this instantly.
     WAND_MIN_POSTINGS = 5_000_000
     WAND_META_CACHE_MAX = 32  # persisted bounds DataFrames kept (LRU)
@@ -254,26 +263,27 @@ class Searcher:
     # decode UDFs
     # ------------------------------------------------------------------
 
-    def _sim_score(self):
-        """Bound scorer for the installed similarity honoring the scoring
-        mode: float64, or the reference's float32 final cast ("lucene").
-        Returns float64 arrays either way (DataFrame score columns are
-        double)."""
+    def _scorer(self, field: str | None = None):
+        """The one per-block scorer: ``score(freqs, norms, weight)`` ->
+        float64 ndarray, in the searcher's scoring mode and similarity
+        ("lucene" keeps the reference's float32 arithmetic; score
+        columns are double either way). The closure captures only the
+        similarity object, the field's norm cache and avgdl — never
+        ``self`` — because it is pickled into mapInPandas / pandas_udf."""
         sim = self.sim
-        if self.scoring == "lucene":
-            return lambda f, qdl, w: sim.score_f32(f, qdl, w).astype(np.float64)
-        return sim.score
 
-    def _score_arrays(self, freqs, norms, weight):
-        if self.sim is not None:
-            qdl = LENGTH_TABLE[np.asarray(norms, dtype=np.int64) & 0xFF]
-            return self._sim_score()(freqs, qdl, weight)
+        def qdl(norms):
+            return LENGTH_TABLE[np.asarray(norms, dtype=np.int64) & 0xFF]
+
+        if sim is not None:
+            if self.scoring == "lucene":
+                return lambda f, nm, w: sim.score_f32(f, qdl(nm), w).astype(np.float64)
+            return lambda f, nm, w: sim.score(f, qdl(nm), w)
         if self.scoring == "lucene":
-            return bm25.score(freqs, norms, np.float32(weight), self.index.cache_f32).astype(
-                np.float64
-            )
-        qdl = LENGTH_TABLE[np.asarray(norms, dtype=np.int64) & 0xFF]
-        return bm25.score_double(freqs, qdl, weight, self.index.avgdl_dbl)
+            cache = self.index.cache_f32_for(field)
+            return lambda f, nm, w: bm25.score(f, nm, np.float32(w), cache).astype(np.float64)
+        avgdl = self.index.avgdl_dbl_for(field)
+        return lambda f, nm, w: bm25.score_double(f, qdl(nm), w, avgdl)
 
     def _scored_term_rows(self, terms_weights: dict[str, float], k: int | None,
                           field: str | None = None) -> DataFrame:
@@ -283,11 +293,7 @@ class Searcher:
         impact-derived max score can't enter the local running top-k
         (ImpactsDISI.java:61-91 / MaxScoreCache.java:70-108 effect)."""
         rows = self.index.postings_for_terms(list(terms_weights), field)
-        scoring = self.scoring
-        sim = self.sim
-        sim_score = self._sim_score() if sim is not None else None
-        cache_f32 = self.index.cache_f32_for(field)
-        avgdl_dbl = self.index.avgdl_dbl_for(field)
+        score = self._scorer(field)
         prune = k is not None and len(terms_weights) == 1
 
         def fn(iterator):
@@ -297,33 +303,16 @@ class Searcher:
             topk = np.zeros(0, dtype=np.float64)
             threshold = -np.inf
 
-            def block_max(impacts, weight):
-                f = np.array([p["freq"] for p in impacts], dtype=np.float32)
-                nm = np.array([p["norm"] for p in impacts], dtype=np.int64)
-                if sim is not None:
-                    return float(np.max(sim_score(f, LENGTH_TABLE[nm & 0xFF], weight)))
-                if scoring == "lucene":
-                    return float(np.max(bm25.score(f, nm, np.float32(weight), cache_f32)))
-                qdl = LENGTH_TABLE[nm & 0xFF]
-                return float(np.max(bm25.score_double(f, qdl, weight, avgdl_dbl)))
-
             for pdf in iterator:
                 out_docs, out_scores = [], []
                 for row in pdf.itertuples(index=False):
                     w = terms_weights[row.term]
                     for blk in row.blocks:
                         if prune and len(topk) >= k and len(blk["impacts"]) > 0:
-                            if block_max(blk["impacts"], w) <= threshold:
+                            if _impact_max(score, blk["impacts"], w) <= threshold:
                                 continue  # non-competitive block skipped
                         d, f, nm = decode_block(blk)
-                        if sim is not None:
-                            qdl = LENGTH_TABLE[nm.astype(np.int64) & 0xFF]
-                            s = sim_score(f, qdl, w)
-                        elif scoring == "lucene":
-                            s = bm25.score(f, nm, np.float32(w), cache_f32).astype(np.float64)
-                        else:
-                            qdl = LENGTH_TABLE[nm.astype(np.int64) & 0xFF]
-                            s = bm25.score_double(f, qdl, w, avgdl_dbl)
+                        s = score(f, nm, w)
                         out_docs.append(d)
                         out_scores.append(s)
                         if prune:
@@ -1109,24 +1098,11 @@ class Searcher:
     def _score_freq_df(self, df: DataFrame, weight: float,
                        field: str | None = None) -> DataFrame:
         """(doc_id, freq, norm) -> (doc_id, score) via vectorized UDF."""
-        scoring = self.scoring
-        sim = self.sim
-        sim_score = self._sim_score() if sim is not None else None
-        cache_f32 = self.index.cache_f32_for(field)
-        avgdl_dbl = self.index.avgdl_dbl_for(field)
+        score = self._scorer(field)
 
         @F.pandas_udf(T.DoubleType())
         def score_udf(freq: pd.Series, norm: pd.Series) -> pd.Series:
-            f = freq.to_numpy()
-            nm = norm.to_numpy()
-            if sim is not None:
-                s = sim_score(f, LENGTH_TABLE[nm.astype(np.int64) & 0xFF], weight)
-            elif scoring == "lucene":
-                s = bm25.score(f, nm, np.float32(weight), cache_f32).astype(np.float64)
-            else:
-                qdl = LENGTH_TABLE[nm.astype(np.int64) & 0xFF]
-                s = bm25.score_double(f, qdl, weight, avgdl_dbl)
-            return pd.Series(s)
+            return pd.Series(score(freq.to_numpy(), norm.to_numpy(), weight))
 
         return df.select("doc_id", score_udf("freq", "norm").alias("score"))
 
@@ -2102,23 +2078,21 @@ class Searcher:
         HitQueue tie-break (search/HitQueue.java:78-84). Spark physical
         plan: per-partition top-k + driver merge (TakeOrderedAndProject),
         exactly the CollectorManager reduce contract
-        (IndexSearcher.java:660-712).
-
-        Boolean queries whose scoring clauses are all plain terms route
-        through the block-max WAND path (_bool_topk_wand) when pruning
-        is enabled — identical results, bounded decode."""
+        (IndexSearcher.java:660-712). The candidates come from
+        _topk_scored, the routine top_k_batch shares."""
         q = P.rewrite(q)
-        if not field_filters and isinstance(q, P.BoolQ) and self.prune_enabled:
-            wand = self._bool_topk_wand(q, k)
-            if wand is not None:
-                return wand
-        scored = self.scored(q, k=k)
-        for ff in field_filters:
-            scored = scored.join(self.doc_set(ff), "doc_id", "left_semi")
+        if field_filters:
+            # no WAND: its θ ignores the filters, so it could overshoot
+            # the k-th best filtered total and prune true hits
+            scored = self.scored(q, k=k)
+            for ff in field_filters:
+                scored = scored.join(self.doc_set(ff), "doc_id", "left_semi")
+        else:
+            scored = self._topk_scored(q, k)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def top_k_batch(self, queries: dict[str, object], k: int) -> DataFrame:
-        """Run MANY top-k queries as ONE Spark job:
+        """Run MANY top-k queries as ONE Spark action:
         DataFrame(query_id, doc_id, score, rank), rank 1..k per query by
         (score desc, docID asc) — the same HitQueue contract as top_k.
 
@@ -2133,73 +2107,20 @@ class Searcher:
         run independently, one reduce at the end
         (IndexSearcher.java:660-712).
 
-        Block-max WAND pruning stays on per query (same routing as
-        top_k); its θ-sampling and candidate-verification driver jobs
-        are BATCHED across queries too (one tagged union action each)
-        so they never serialize the suite. The per-query limit is a
+        Each query's candidates come from _topk_scored, the same routine
+        top_k uses, so a WAND-routed query carries its θ subtree inside
+        this one action and building the batch runs no Spark job beyond
+        the memoized term-stats lookups. The per-query limit is a
         row_number window partitioned by query_id — one shuffle of at
-        most ~(candidates) rows, and WAND-pruned queries contribute
-        only their surviving blocks."""
+        most ~(candidates) rows."""
         from pyspark.sql.window import Window
 
-        rewritten = {qid: P.rewrite(q) for qid, q in queries.items()}
-        wand_st = {}
-        if self.prune_enabled:
-            for qid, qr in rewritten.items():
-                if isinstance(qr, P.BoolQ):
-                    st = self._wand_state(qr, k)
-                    if st is not None:
-                        wand_st[qid] = st
-        live = {qid: st for qid, st in wand_st.items() if st != "empty"}
-
-        # ---- batched WAND pass 1: every query's θ samples, ONE action ----
-        samples_by_qid: dict[str, list] = {qid: [] for qid in live}
-        if live:
-            u = None
-            for qid, st in live.items():
-                p = self._wand_sample_plan(st, k).select(
-                    F.lit(qid).alias("query_id"), "doc_id", "score"
-                )
-                u = p if u is None else u.unionByName(p)
-            for r in u.collect():
-                samples_by_qid[r["query_id"]].append(r)
-
-        # ---- batched θ verification: ONE action across queries ----
-        verified_by_qid: dict[str, list] = {}
-        vplans = None
-        for qid, st in live.items():
-            if self._wand_needs_verify(st):
-                verified_by_qid[qid] = []
-                ids = list({r["doc_id"] for r in samples_by_qid[qid]})
-                vp = self.scored(rewritten[qid], candidates=ids).select(
-                    F.lit(qid).alias("query_id"), "score"
-                )
-                vplans = vp if vplans is None else vplans.unionByName(vp)
-        if vplans is not None:
-            for r in vplans.collect():
-                verified_by_qid[r["query_id"]].append(float(r["score"]))
-
-        parts = []
-        for qid, qr in rewritten.items():
-            scored = None
-            st = wand_st.get(qid)
-            if st == "empty":
-                scored = self._empty_scored().limit(k)
-            elif st is not None:
-                theta = self._wand_theta(
-                    st, k, samples_by_qid[qid], verified_by_qid.get(qid)
-                )
-                scored = self._wand_pruned_plan(st, theta, k)
-            if scored is None:
-                scored = self.scored(qr, k=k)
-            parts.append(
-                scored.select(
-                    F.lit(qid).alias("query_id"), "doc_id", "score"
-                )
+        u = None
+        for qid, q in queries.items():
+            p = self._topk_scored(P.rewrite(q), k).select(
+                F.lit(qid).alias("query_id"), "doc_id", "score"
             )
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
+            u = p if u is None else u.unionByName(p)
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
@@ -2269,65 +2190,73 @@ class Searcher:
     # block-max WAND for boolean top-k
     # ------------------------------------------------------------------
 
+    def _topk_scored(self, q, k: int) -> DataFrame:
+        """The one top-k routine behind top_k and top_k_batch: a
+        rewritten query -> (doc_id, score) rows that contain its top k.
+        Boolean queries over plain terms take the one-action block-max
+        WAND plan when pruning is on; everything else is scored(q, k)."""
+        if self.prune_enabled and isinstance(q, P.BoolQ):
+            wand = self._bool_topk_wand(q, k)
+            if wand is not None:
+                return wand
+        return self.scored(q, k=k)
+
     def _bool_topk_wand(self, q: P.BoolQ, k: int) -> DataFrame | None:
         """Block-max WAND / block-max conjunction for top-k boolean
         queries over plain term clauses (search/WANDScorer.java:38-140,
         search/BlockMaxConjunctionScorer.java, MaxScoreCache.java).
 
-        Distributed shape (one decode scan + two tiny driver jobs):
-        1. θ_lb — a sound lower bound on the k-th best total score:
-           per-clause top-k (single-term block-max pruned, one job),
+        Distributed shape, all inside ONE Spark action:
+        1. θ — a sound lower bound on the k-th best total score: the
+           union of per-clause top-k (single-term block-max pruned),
            then exact totals for that candidate union (candidate-bounded
-           scored(), second tiny job; skipped for pure disjunctions where
-           driver-side partial sums already lower-bound totals). The k-th
-           best verified total ≤ true k-th best, so pruning on it is safe.
+           scored(); skipped for pure disjunctions, where partial sums
+           over the samples already lower-bound totals), reduced to a
+           one-row {__theta} DataFrame.
         2. salt-level cross-clause bounds — one column-pruned read of
            (term, salt, row_impacts): salt_max[t][s] = max possible score
            of t in docID shard s (no block bytes touched).
         3. pruned decode — a block of term t in salt s is skipped when
-           block_max(t) + Σ_{t'≠t} salt_max[t'][s] < θ_lb (WAND upper
+           block_max(t) + Σ_{t'≠t} salt_max[t'][s] < θ (WAND upper
            bound); for conjunctions a salt missing ANY must term is
            skipped wholesale (BlockMaxConjunction advance). Every true
-           top-k doc's blocks survive (its total ≥ θ_lb ≤ every covering
-           block's bound), so results are identical to the unpruned plan.
+           top-k doc's blocks survive (each covering block's bound ≥ its
+           total ≥ θ), so results equal the unpruned plan's. θ reaches
+           the decode through a broadcast cross join, so no θ value is
+           ever collected to the driver.
 
         Returns None when the shape doesn't apply (non-term clauses,
-        overlapping term sets, index without row_impacts).
-
-        Staged as _wand_state -> _wand_sample_plan (pass-1 collect) ->
-        optional candidate verification -> _wand_theta ->
-        _wand_pruned_plan so top_k_batch can run EVERY query's θ
-        sampling (and verification) as one tagged union action instead
-        of serial per-query driver jobs."""
+        overlapping term sets, index without row_impacts, decode below
+        wand_min_postings) and the empty scored frame when the query
+        provably has no hits."""
         st = self._wand_state(q, k)
         if st is None:
             return None
         if st == "empty":
-            return self._empty_scored().limit(k)
-        # θ as a PLAN, not a collected value: the sample union (and the
-        # candidate-bounded verification when the shape requires it)
-        # reduces to a one-row {__theta} DataFrame that the pruned
-        # decode consumes via a broadcast cross join. The whole query is
-        # then ONE Spark action — no θ driver round-trips at all — which
-        # is what bounds sequential query scaling (the per-action floor:
-        # Catalyst analysis + py4j + scheduling do not parallelize with
-        # cores; BENCH_scaling query_scaling_efficiency). Round 3 had
-        # already fused sampling+verification (3 actions -> 2); this
-        # folds the remaining θ collect into the final plan (2 -> 1).
-        sample_plan = self._wand_sample_plan(st, k)
-        if self._wand_needs_verify(st):
-            # exact totals for the sampled candidates (must/msm/filter/
-            # must_not shapes): the k-th best verified total ≤ true k-th
-            totals = self.scored(q, candidates=sample_plan).select(
+            return self._empty_scored()
+        weights = st["weights"]
+        sample = None
+        for t in st["terms"]:
+            tk = (
+                self._scored_term_rows({t: weights[t]}, k)
+                .orderBy(F.desc("score"), F.asc("doc_id"))
+                .limit(k)
+            )
+            sample = tk if sample is None else sample.unionByName(tk)
+        if q.must or st["msm"] > 1 or q.filter or q.must_not:
+            # exact totals for the sampled candidates
+            totals = self.scored(q, candidates=sample).select(
                 F.col("score").alias("__tot")
             )
         else:
-            # pure disjunction: per-doc partial sums over the per-term
-            # top-k samples already lower-bound the true totals
-            totals = sample_plan.groupBy("doc_id").agg(
+            # pure disjunction: per-doc partial sums over the samples
+            totals = sample.groupBy("doc_id").agg(
                 F.sum("score").alias("__tot")
             )
-        theta_df = (
+        # θ soundness: every verified total or partial sum is ≤ that
+        # doc's true total, so their k-th best is ≤ the true k-th best;
+        # the shave covers float reassociation against stored totals.
+        theta = (
             totals.orderBy(F.desc("__tot"))
             .limit(k)
             .agg(
@@ -2335,8 +2264,6 @@ class Searcher:
                 .otherwise(F.lit(float("-inf")))
                 .alias("__t0")
             )
-            # same soundness shave as _wand_theta: partial sums /
-            # reassociated float adds can overshoot stored totals by ulps
             .select(
                 (
                     F.col("__t0")
@@ -2345,7 +2272,7 @@ class Searcher:
                 ).alias("__theta")
             )
         )
-        return self._wand_pruned_plan(st, theta_df, k)
+        return self._wand_pruned_plan(st, theta)
 
     def _wand_state(self, q: P.BoolQ, k: int):
         """Shape check + stats lookup for the WAND path. Returns None
@@ -2378,7 +2305,7 @@ class Searcher:
         if len(weights) < 2:
             return None  # single-term: the plain path already prunes
         if sum(stats[t][0] for t in weights) < self.wand_min_postings:
-            return None  # decode too small to amortize θ round-trips
+            return None  # decode too small to amortize the θ subtree
         return {
             "q": q,
             "weights": weights,
@@ -2388,83 +2315,18 @@ class Searcher:
             "msm": msm,
         }
 
-    def _wand_sample_plan(self, st, k: int) -> DataFrame:
-        """Pass 1 plan: union of per-term top-k (single-term block-max
-        pruned) — the θ_lb candidate sample."""
-        weights = st["weights"]
-        union = None
-        for t in st["terms"]:
-            tk = (
-                self._scored_term_rows({t: weights[t]}, k)
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-            )
-            union = tk if union is None else union.unionByName(tk)
-        return union
-
-    def _wand_needs_verify(self, st) -> bool:
-        q = st["q"]
-        return bool(q.must or st["msm"] > 1 or q.filter or q.must_not)
-
-    def _wand_theta(self, st, k: int, samples, verified) -> float:
-        """θ_lb from the pass-1 samples; ``verified`` is the exact
-        candidate-bounded score list when the query shape requires it
-        (must/msm/filter/must_not), else None and driver-side partial
-        sums already lower-bound the totals."""
-        theta = -np.inf
-        if verified is not None:
-            vs = sorted(verified, reverse=True)
-            if len(vs) >= k:
-                theta = float(vs[k - 1])
-        else:
-            partial: dict[int, float] = {}
-            for r in samples:
-                partial[r["doc_id"]] = partial.get(r["doc_id"], 0.0) + r["score"]
-            tots = sorted(partial.values(), reverse=True)
-            if len(tots) >= k:
-                theta = float(tots[k - 1])
-        if np.isfinite(theta):
-            # shave a hair off θ: partial sums / reassociated float adds
-            # can overshoot the engine's stored totals by ulps — keep the
-            # bound strictly sound (costs ~nothing in pruning power)
-            theta -= 1e-9 * abs(theta) + 1e-12
-        return float(theta)
-
-    def _wand_pruned_plan(self, st, theta, k: int) -> DataFrame:
+    def _wand_pruned_plan(self, st, theta: DataFrame) -> DataFrame:
         """Passes 2+3 (see _bool_topk_wand): distributive salt-level
         cross-clause bounds, then the pruned decode scan + assembly.
-
-        ``theta``: either a driver float (top_k_batch's batched θ passes)
-        or a one-row {__theta} DataFrame fused into the scan as a
-        broadcast cross join (single-query path — keeps the whole query
-        one Spark action)."""
+        ``theta`` is the one-row {__theta} DataFrame, fused into the
+        scan as a broadcast cross join."""
         q = st["q"]
         weights = st["weights"]
         terms = st["terms"]
         must_set = st["must_set"]
         should_set = st["should_set"]
         msm = st["msm"]
-
-        # ---- pass 2: salt-level upper bounds (metadata-only read) ----
-        scoring = self.scoring
-        sim = self.sim
-        sim_score = self._sim_score() if sim is not None else None
-        cache_f32 = self.index.cache_f32
-        avgdl_dbl = self.index.avgdl_dbl
-
-        def imp_max(impacts, w) -> float:
-            f = np.array([p["freq"] for p in impacts], dtype=np.float32)
-            nm = np.array([p["norm"] for p in impacts], dtype=np.int64)
-            if len(f) == 0:
-                return 0.0
-            if sim is not None:
-                return float(np.max(sim_score(f, LENGTH_TABLE[nm & 0xFF], w)))
-            if scoring == "lucene":
-                return float(np.max(bm25.score(f, nm, np.float32(w), cache_f32)))
-            return float(
-                np.max(bm25.score_double(f, LENGTH_TABLE[nm & 0xFF], w, avgdl_dbl))
-            )
-
+        score = self._scorer()
         weights_b = dict(weights)
 
         @F.pandas_udf(T.DoubleType())
@@ -2477,7 +2339,7 @@ class Searcher:
                     # 0.0, or pruning would silently drop their blocks
                     out.append(np.inf)
                 else:
-                    out.append(imp_max(arr, weights_b[t]))
+                    out.append(_impact_max(score, arr, weights_b[t]))
             return pd.Series(out)
 
         # ---- pass 2: salt-level upper bounds, computed DISTRIBUTIVELY ----
@@ -2524,26 +2386,19 @@ class Searcher:
         n_must = len(must_set)
 
         # ---- pass 3: pruned decode scan (bounds joined in, not collected) ----
-        rows = self.index.postings_for_terms(terms).join(
-            bounds, ["term", "salt"], "left"
+        # one-row broadcast: every decode row carries __theta; the
+        # sample/verify subtree executes inside this same action
+        rows = (
+            self.index.postings_for_terms(terms)
+            .join(bounds, ["term", "salt"], "left")
+            .crossJoin(F.broadcast(theta))
         )
-        theta_is_df = isinstance(theta, DataFrame)
-        if theta_is_df:
-            # one-row broadcast: every decode row carries __theta; the
-            # sample/verify subtree executes inside this same action
-            rows = rows.crossJoin(F.broadcast(theta))
-            theta_f = None
-        else:
-            theta_f = float(theta)
 
         def fn(iterator):
             for pdf in iterator:
-                if theta_is_df:
-                    if not len(pdf):
-                        continue
-                    th = float(pdf["__theta"].iat[0])
-                else:
-                    th = theta_f
+                if not len(pdf):
+                    continue
+                th = float(pdf["__theta"].iat[0])
                 parts = []
                 for row in pdf.itertuples(index=False):
                     t = row.term
@@ -2562,26 +2417,16 @@ class Searcher:
                     w = weights_b[t]
                     for blk in row.blocks:
                         bmax = (
-                            imp_max(blk["impacts"], w)
+                            _impact_max(score, blk["impacts"], w)
                             if len(blk["impacts"])
                             else own
                         )
                         if bmax + others < th:
                             continue
                         d, f, nm = decode_block(blk)
-                        if sim is not None:
-                            qdl = LENGTH_TABLE[nm.astype(np.int64) & 0xFF]
-                            sc = sim_score(f, qdl, w)
-                        elif scoring == "lucene":
-                            sc = bm25.score(f, nm, np.float32(w), cache_f32).astype(
-                                np.float64
-                            )
-                        else:
-                            qdl = LENGTH_TABLE[nm.astype(np.int64) & 0xFF]
-                            sc = bm25.score_double(f, qdl, w, avgdl_dbl)
                         parts.append(
                             pd.DataFrame(
-                                {"doc_id": d, "term": t, "score": sc}
+                                {"doc_id": d, "term": t, "score": score(f, nm, w)}
                             )
                         )
                 if parts:
@@ -2650,7 +2495,7 @@ class Searcher:
                 combined = combined.withColumn(
                     "score", F.col("score") * F.lit(float(q.boost))
                 )
-        return combined.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return combined
 
     def search_after(self, q, k: int, after_score: float, after_doc: int,
                      field_filters: tuple = ()) -> DataFrame:
@@ -2706,9 +2551,7 @@ class Searcher:
             dc = self.index.doc_count_for(q.field)
             w = self._weight(df, q.boost, q.field, ttf=stats[q.term][1])
             val = float(
-                self._score_arrays(
-                    np.array([freq]), np.array([norm]), w
-                )[0]
+                self._scorer(q.field)(np.array([freq]), np.array([norm]), w)[0]
             )
             dl = float(LENGTH_TABLE[norm & 0xFF])
             return {

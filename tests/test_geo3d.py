@@ -151,3 +151,30 @@ def test_path_corner_cap(spark):
         path_predicate("lat", "lon", path, cutoff)
     ).count()
     assert got == 1
+
+
+def test_path_bulge_beyond_vertex_latitudes(spark):
+    # a great-circle segment bulges poleward past its endpoints: this
+    # point lies 0.1490 rad from the (35, -20)->(15, 60) great circle on
+    # a sphere — inside the 0.15 rad corridor — yet above 44.094°, the
+    # cap of a latitude band built from the vertices' max ± (cutoff + 0.5°)
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            [("bulge", 44.13, -7.17), ("far", 50.0, -7.17)],
+            columns=["name", "lat", "lon"],
+        )
+    )
+    path = [(35.0, -20.0), (15.0, 60.0)]
+    cutoff = 0.15
+    got = {
+        r["name"]
+        for r in within_path(df, "lat", "lon", path, cutoff, SPHERE).collect()
+    }
+    assert got == {"bulge"}
+    want = {
+        r["name"]
+        for r in df.filter(
+            path_predicate("lat", "lon", path, cutoff, SPHERE)
+        ).collect()
+    }
+    assert got == want

@@ -50,6 +50,35 @@ def test_term_topk_plan(searcher):
     assert plan.count("Exchange") == 0, plan  # term query: shuffle-free
 
 
+@pytest.mark.parametrize("api", ["top_k", "top_k_batch"])
+def test_wand_plan_build_runs_no_job(searcher, api):
+    """A forced-WAND query's θ is a plan, not a collect: once the term
+    stats are memoized, building the top-k DataFrame runs no Spark job
+    through either entry point."""
+    from lucene_spark.search import BoolQ
+    from lucene_spark.search import plans as P
+
+    s = Searcher(searcher.index, wand_min_postings=0)
+    q = BoolQ(must=(TermQ("license"), TermQ("file")),
+              must_not=(TermQ("java"),))
+    assert isinstance(s._wand_state(P.rewrite(q), 5), dict)  # WAND route
+
+    def build():
+        if api == "top_k":
+            return s.top_k(q, 5)
+        return s.top_k_batch({"q": q, "q2": BoolQ(should=q.must)}, 5)
+
+    build()  # warms the term-stats memo and the WAND bounds cache
+    sc = searcher.index.spark.sparkContext
+    group = f"wand_plan_build_{api}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_multiterm_expansion_broadcast(searcher):
     plan = plan_of(searcher.doc_set(PrefixQ("lic")))
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan

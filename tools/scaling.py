@@ -358,6 +358,7 @@ def main() -> None:
             except (AttributeError, OSError):
                 pass
             kernel_sec = _phase_kernel(cpus)
+            kernel_first = None
             calib_ref = calib.get("kernel", {}).get(cpus)
             if calib_ref and kernel_sec > 1.3 * calib_ref:
                 print(
@@ -367,10 +368,10 @@ def main() -> None:
                     file=sys.stderr,
                 )
                 time.sleep(75)
-                first = kernel_sec
+                kernel_first = kernel_sec
                 kernel_sec = _phase_kernel(cpus)
                 print(
-                    f"[scaling] re-probe: {first} -> {kernel_sec}s/proc",
+                    f"[scaling] re-probe: {kernel_first} -> {kernel_sec}s/proc",
                     file=sys.stderr,
                 )
             print(
@@ -402,6 +403,9 @@ def main() -> None:
             ][-1]
             r = json.loads(line)
             r["phase_kernel_sec"] = kernel_sec
+            if kernel_first is not None:
+                # the discarded pre-probe reading, kept for the record
+                r["phase_kernel_sec_first"] = kernel_first
             # post-phase probe: attempt-K rep 3 passed the boundary drift
             # check (0.02) yet its local[8] slowed MID-phase (corpus stage
             # 68s vs 48-54s in clean reps). Probing again right after the
