@@ -90,6 +90,9 @@ class Index:
         # DataFrame plans are immutable for its lifetime; NRT reopen
         # constructs a fresh Index and re-lists once.
         self._table_memo: dict[str, DataFrame] = {}
+        # (field, term) -> (df, ttf), None for an absent term
+        # (stats_for_terms)
+        self._stats_memo: dict[tuple, tuple | None] = {}
 
     # --- per-field statistics (CollectionStatistics per field) ----------
 
@@ -241,10 +244,12 @@ class Index:
         return int.from_bytes(hashlib.md5(term.encode()).digest()[8:16], "little") % num_buckets
 
     def postings_for_terms(self, terms: list[str], field: str | None = None) -> DataFrame:
-        """Bucket-pruned posting rows for exact terms in one field.
+        """Posting rows for exact terms in one field.
 
-        The bucket partition column prunes parquet directories (Lucene
-        analog: the terms-dict FST routes to one block,
+        Postings are written flat (no directory partitioning); ``bucket``
+        and ``term`` are pushed scan filters that prune through parquet
+        row-group statistics and dictionary filtering (Lucene analog:
+        the terms-dict FST routes to one block,
         blocktree/Lucene90BlockTreeTermsWriter.java:198).
         """
         buckets = sorted({self.bucket_of(t, self.num_buckets) for t in terms})
@@ -264,8 +269,6 @@ class Index:
         if not terms:
             return {}
         fld = self.resolve_field(field)
-        if not hasattr(self, "_stats_memo"):
-            self._stats_memo: dict[tuple, tuple | None] = {}
         missing = [t for t in terms if (fld, t) not in self._stats_memo]
         if missing:
             buckets = sorted({self.bucket_of(t, self.num_buckets) for t in missing})

@@ -23,7 +23,7 @@ Two scoring modes:
 
 from __future__ import annotations
 
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 
 import math
 
@@ -145,6 +145,81 @@ def _impact_max(score, impacts, weight) -> float:
     return float(np.max(score(f, nm, weight)))
 
 
+# clause kind tagging each decoded row of a term-leaf BoolQ's one scan
+# (Searcher._term_bool_plan)
+_MUST, _SHOULD, _FILTER, _MUST_NOT = 0, 1, 2, 3
+_TAGGED_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("kind", T.IntegerType()),
+        T.StructField("score", T.DoubleType()),
+    ]
+)
+
+
+def _tagged_decode(kinds: dict, weights: dict, score, n_must: int, pruned: bool):
+    """The one decode of a term-leaf BoolQ, shared by its plain and WAND
+    plans: postings rows -> (doc_id, kind, score) batches, every row
+    tagged with its term's clause kind. Terms in ``weights`` are scored
+    with ``score`` (Searcher._scorer); FILTER / MUST_NOT rows carry score
+    0 and are never pruned.
+
+    ``pruned`` (the WAND plan): rows also carry their salt's bounds
+    (m_ts, others, must_cnt) and __theta. A scoring block is skipped when
+    block_max + others < θ, a scoring row when its salt lacks a MUST term
+    (BlockMaxConjunction advance). A missing bound (NaN: no bounds row,
+    or inf - inf) is unknown and never prunes."""
+
+    def fn(iterator):
+        for pdf in iterator:
+            if not len(pdf):
+                continue
+            th = float(pdf["__theta"].iat[0]) if pruned else -np.inf
+            docs, tags, scores = [], [], []
+            for row in pdf.itertuples(index=False):
+                kind = kinds[row.term]
+                w = weights.get(row.term)
+                if w is None:  # FILTER / MUST_NOT: match only
+                    for blk in row.blocks:
+                        d = decode_block(blk)[0]
+                        docs.append(d)
+                        tags.append(np.full(len(d), kind, np.int32))
+                        scores.append(np.zeros(len(d)))
+                    continue
+                own = others = np.inf
+                if pruned:
+                    if (n_must and pd.notna(row.must_cnt)
+                            and int(row.must_cnt) < n_must):
+                        continue  # conjunction impossible in this shard
+                    if pd.notna(row.others):
+                        others = row.others
+                    if pd.notna(row.m_ts):
+                        own = row.m_ts
+                for blk in row.blocks:
+                    if pruned:
+                        bmax = (
+                            _impact_max(score, blk["impacts"], w)
+                            if len(blk["impacts"])
+                            else own
+                        )
+                        if bmax + others < th:
+                            continue
+                    d, f, nm = decode_block(blk)
+                    docs.append(d)
+                    tags.append(np.full(len(d), kind, np.int32))
+                    scores.append(score(f, nm, w))
+            if docs:
+                yield pd.DataFrame(
+                    {
+                        "doc_id": np.concatenate(docs),
+                        "kind": np.concatenate(tags),
+                        "score": np.concatenate(scores),
+                    }
+                )
+
+    return fn
+
+
 def _decode_positions_row(pos_bin: bytes, freqs: np.ndarray) -> list:
     """pos stream -> list of per-doc position arrays (delta decode)."""
     d = decode_value_stream(bytes(pos_bin)).astype(np.int64)
@@ -162,8 +237,10 @@ class Searcher:
     # plan's extra work — the bounds pass plus the θ subtree (per-term
     # top-k samples, candidate verification) fused into the query's one
     # action — costs more than the decode it would save, so the query
-    # takes the plain plan. Cost-based, like the reference's rewrite
-    # decisions; at 100 TB any hot clause clears this instantly.
+    # takes the plain plan: the same one-scan decode and assembly
+    # (_term_bool_plan) without bounds or θ. Cost-based, like the
+    # reference's rewrite decisions; at 100 TB any hot clause clears
+    # this instantly.
     WAND_MIN_POSTINGS = 5_000_000
     WAND_META_CACHE_MAX = 32  # persisted bounds DataFrames kept (LRU)
 
@@ -292,7 +369,10 @@ class Searcher:
         Pruning (single-term top-k only, k given): skip blocks whose
         impact-derived max score can't enter the local running top-k
         (ImpactsDISI.java:61-91 / MaxScoreCache.java:70-108 effect)."""
-        rows = self.index.postings_for_terms(list(terms_weights), field)
+        # mapInPandas blocks column pruning: select what fn reads
+        rows = self.index.postings_for_terms(list(terms_weights), field).select(
+            "term", "blocks"
+        )
         score = self._scorer(field)
         prune = k is not None and len(terms_weights) == 1
 
@@ -334,7 +414,7 @@ class Searcher:
 
     def _doc_rows(self, terms: list[str], field: str | None = None) -> DataFrame:
         """Decoded (doc_id) rows for a term set — non-scoring (FILTER path)."""
-        rows = self.index.postings_for_terms(terms, field)
+        rows = self.index.postings_for_terms(terms, field).select("blocks")
 
         def fn(iterator):
             for pdf in iterator:
@@ -387,7 +467,7 @@ class Searcher:
         matching = stats.filter(predicate).select("term", "bucket")
         rows = posts.join(
             F.broadcast(matching), ["term", "bucket"], "left_semi"
-        )
+        ).select("blocks")
 
         def fn(iterator):
             for pdf in iterator:
@@ -399,7 +479,7 @@ class Searcher:
 
     def _freq_rows(self, terms: list[str], field: str | None = None) -> DataFrame:
         """(doc_id, term, freq, norm) rows — synonym/blended scoring input."""
-        rows = self.index.postings_for_terms(terms, field)
+        rows = self.index.postings_for_terms(terms, field).select("term", "blocks")
 
         def fn(iterator):
             for pdf in iterator:
@@ -436,7 +516,9 @@ class Searcher:
                 "index built without payloads; rebuild with "
                 'analyzer={"payloads": ...} for PayloadScoreQuery'
             )
-        rows = self.index.postings_for_terms(terms, field)
+        rows = self.index.postings_for_terms(terms, field).select(
+            "term", "blocks", "pos", *(["pay"] if with_payloads else [])
+        )
         idx_of = {t: i for i, t in enumerate(terms)}
         schema = _POS_PAY_SCHEMA if with_payloads else _POS_SCHEMA
 
@@ -624,11 +706,7 @@ class Searcher:
                 self.doc_set(q.inner).withColumn("score", F.lit(float(q.boost))), candidates
             )
         if isinstance(q, P.BoostQ):
-            inner = self.scored(q.inner, k, candidates)
-            if self.scoring == "lucene":
-                boosted = (F.col("score").cast("float") * F.lit(np.float32(q.boost)).cast("float"))
-                return inner.withColumn("score", boosted.cast("double"))
-            return inner.withColumn("score", F.col("score") * F.lit(float(q.boost)))
+            return self._boosted(self.scored(q.inner, k, candidates), q.boost)
         if isinstance(q, P.MatchAllQ):
             return self._cand(
                 self._live(self.index.docs.select("doc_id")).withColumn(
@@ -801,6 +879,16 @@ class Searcher:
             return df.join(F.broadcast(ids), "doc_id", "left_semi")
         return df.filter(F.col("doc_id").isin([int(d) for d in candidates]))
 
+    def _boosted(self, df: DataFrame, boost: float) -> DataFrame:
+        """BoostQuery over a scored frame: float32 score times float32
+        boost in 'lucene' mode (the BoostQuery weight), double otherwise."""
+        if boost == 1.0:
+            return df
+        if self.scoring == "lucene":
+            boosted = F.col("score").cast("float") * F.lit(np.float32(boost)).cast("float")
+            return df.withColumn("score", boosted.cast("double"))
+        return df.withColumn("score", F.col("score") * F.lit(float(boost)))
+
     def _sum_as_float(self, col):
         """Disjunction sum: float32 clause scores accumulated in double,
         result cast to float (DisjunctionSumScorer.java:38-44)."""
@@ -957,9 +1045,19 @@ class Searcher:
         """FuzzyTermsEnum + TopTermsRewrite: (term, df, boost) for the top
         max_expansions dictionary terms within edit distance, highest
         boost first (ties: lexicographically smaller term wins, the
-        ScoreTerm priority-queue order, TopTermsRewrite.java:210-212).
-        boost = 1 - ed / min(|candidate|, |query|); exact match = 1
-        (FuzzyTermsEnum.java:249-255)."""
+        ScoreTerm priority-queue order, TopTermsRewrite.java:210-212)."""
+        rows = (
+            self._fuzzy_candidates(q)
+            .orderBy(F.desc("boost"), F.asc("term"))
+            .limit(int(q.max_expansions))
+            .collect()
+        )
+        return [(r["term"], int(r["df"]), float(r["boost"])) for r in rows]
+
+    def _fuzzy_candidates(self, q: P.FuzzyQ) -> DataFrame:
+        """Every dictionary term within q's edit distance, as a lazy
+        (term, df, boost) plan: boost = 1 - ed / min(|candidate|,
+        |query|); exact match = 1 (FuzzyTermsEnum.java:249-255)."""
         target = q.term
         k = int(q.max_edits)
         stats = self.index.term_stats
@@ -994,13 +1092,7 @@ class Searcher:
         boost = F.when(F.col("ed") == 0, F.lit(1.0)).otherwise(
             1.0 - F.col("ed") / F.least(F.length("term"), F.lit(len(target))).cast("double")
         )
-        rows = (
-            cand.withColumn("boost", boost)
-            .orderBy(F.desc("boost"), F.asc("term"))
-            .limit(int(q.max_expansions))
-            .collect()
-        )
-        return [(r["term"], int(r["df"]), float(r["boost"])) for r in rows]
+        return cand.select("term", "df", boost.alias("boost"))
 
     def _fuzzy_like_this_vars(self, q: "P.FuzzyLikeThisQ") -> dict[str, float]:
         """FuzzyLikeThisQuery.rewrite (sandbox/queries/FuzzyLikeThisQuery
@@ -1016,27 +1108,60 @@ class Searcher:
         (weight desc, term asc). A term kept under two source tokens
         contributes both weights (two SHOULD clauses on the same term —
         scores sum, and the clause score is linear in the weight, so the
-        weights merge additively)."""
+        weights merge additively).
+
+        One bounded collect for all tokens: per token the JVM keeps the
+        top MAX_VARIANTS_PER_TERM variants plus one summary row (variant
+        count, Σdf, the exact token's df) for the avg-df fallback."""
         from lucene_spark.analysis import analyze_query_text
 
         tokens = list(dict.fromkeys(
             analyze_query_text(q.query_text, analyzer=self.index.analyzer)
         ))
+        if not tokens:
+            return {}
+        cap = P.FuzzyLikeThisQ.MAX_VARIANTS_PER_TERM
+        u = None
+        for i, tok in enumerate(tokens):
+            cand = self._fuzzy_candidates(P.FuzzyQ(
+                tok, max_edits=q.max_edits, prefix_len=q.prefix_len,
+                transpositions=True, field=q.field,
+            ))
+            top = (
+                cand.orderBy(F.desc("boost"), F.asc("term"))
+                .limit(cap)
+                .select(F.lit(i).alias("tok"), "term", "df", "boost")
+            )
+            summary = cand.agg(
+                F.lit(i).alias("tok"),
+                F.count(F.lit(1)).alias("n_var"),
+                F.sum("df").alias("df_sum"),
+                F.sum(F.when(F.col("term") == tok, F.col("df"))).alias("df_tok"),
+            )
+            part = top.unionByName(summary, allowMissingColumns=True)
+            u = part if u is None else u.unionByName(part)
+        per_tok: dict[int, list] = {}
+        fallback: dict[int, tuple] = {}
+        for r in u.collect():
+            if r["n_var"] is None:
+                per_tok.setdefault(r["tok"], []).append(
+                    (float(r["boost"]), r["term"])
+                )
+            else:
+                fallback[r["tok"]] = (
+                    int(r["n_var"]), int(r["df_sum"] or 0), int(r["df_tok"] or 0)
+                )
         n_docs = self.index.N
         kept: list[tuple[float, str]] = []
-        for tok in tokens:
-            exp = self._fuzzy_expansions(P.FuzzyQ(
-                tok, max_edits=q.max_edits, prefix_len=q.prefix_len,
-                max_expansions=1 << 30, transpositions=True, field=q.field,
-            ))
-            if not exp:
+        for i in range(len(tokens)):
+            n_var, df_sum, df_src = fallback[i]
+            if n_var == 0:
                 continue
-            df_src = next((df for t, df, _b in exp if t == tok), 0)
             if df_src == 0:
                 # integer average over ALL variants (java:158-161)
-                df_src = sum(df for _t, df, _b in exp) // len(exp)
+                df_src = df_sum // n_var
             idf = math.log((n_docs + 1) / float(df_src + 1)) + 1.0
-            for t, _df, b in exp[: P.FuzzyLikeThisQ.MAX_VARIANTS_PER_TERM]:
+            for b, t in sorted(per_tok.get(i, []), key=lambda x: (-x[0], x[1])):
                 kept.append((b * b * idf, t))
         # global ScoreTermQueue order: weight desc, ties smaller term
         # first (java:239-244 lessThan)
@@ -1400,9 +1525,19 @@ class Searcher:
         """BooleanQuery semantics (BooleanQuery.java:77-176,
         Boolean2ScorerSupplier.java:100-248): score = Σ scoring clauses;
         MUST = scoring intersection, SHOULD = scoring union (optional when
-        MUST present), FILTER = non-scoring semi join, MUST_NOT = anti join."""
-        spark = self.index.spark
-        scored_parts = []
+        MUST present), FILTER = non-scoring semi join, MUST_NOT = anti join.
+
+        Term-leaf queries (every MUST/SHOULD clause a TermQ of one field,
+        no term in two clauses) take the one-scan plan: one postings scan
+        and one decode over all their terms, one groupBy — the decode and
+        assembly the block-max WAND plan runs with bounds and θ, here with
+        neither (see _term_bool_plan). Everything else takes the join
+        tree below: one scored sub-plan per clause."""
+        st = self._term_bool_state(q)
+        if st == "empty":
+            return self._empty_scored()
+        if st is not None:
+            return self._term_bool_plan(st, candidates=candidates)
         # MUST: intersection of scored clauses
         must_df = None
         for c in q.must:
@@ -1475,17 +1610,7 @@ class Searcher:
         # MUST_NOT: anti join (ReqExclScorer semantics)
         for c in q.must_not:
             combined = combined.join(self.doc_set(c), "doc_id", "left_anti")
-        if q.boost != 1.0:
-            if self.scoring == "lucene":
-                combined = combined.withColumn(
-                    "score",
-                    (F.col("score").cast("float") * F.lit(np.float32(q.boost)).cast("float")).cast(
-                        "double"
-                    ),
-                )
-            else:
-                combined = combined.withColumn("score", F.col("score") * F.lit(float(q.boost)))
-        return combined.select("doc_id", "score")
+        return self._boosted(combined, q.boost).select("doc_id", "score")
 
     def _dismax_scored(self, q: P.DisMaxQ, candidates: list[int] | None = None) -> DataFrame:
         """DisjunctionMaxQuery.java:45: max + tiebreak * (sum - max)."""
@@ -2210,9 +2335,9 @@ class Searcher:
         1. θ — a sound lower bound on the k-th best total score: the
            union of per-clause top-k (single-term block-max pruned),
            then exact totals for that candidate union (candidate-bounded
-           scored(); skipped for pure disjunctions, where partial sums
-           over the samples already lower-bound totals), reduced to a
-           one-row {__theta} DataFrame.
+           scored(), i.e. the plain one-scan plan; skipped for pure
+           disjunctions, where partial sums over the samples already
+           lower-bound totals), reduced to a one-row {__theta} DataFrame.
         2. salt-level cross-clause bounds — one column-pruned read of
            (term, salt, row_impacts): salt_max[t][s] = max possible score
            of t in docID shard s (no block bytes touched).
@@ -2225,20 +2350,17 @@ class Searcher:
            the decode through a broadcast cross join, so no θ value is
            ever collected to the driver.
 
-        Returns None when the shape doesn't apply (non-term clauses,
-        overlapping term sets, index without row_impacts, decode below
-        wand_min_postings) and the empty scored frame when the query
-        provably has no hits."""
+        Returns None when the WAND gate fails (see _wand_state) and the
+        empty scored frame when the query provably has no hits."""
         st = self._wand_state(q, k)
         if st is None:
             return None
         if st == "empty":
             return self._empty_scored()
-        weights = st["weights"]
         sample = None
-        for t in st["terms"]:
+        for t, w in st["weights"].items():
             tk = (
-                self._scored_term_rows({t: weights[t]}, k)
+                self._scored_term_rows({t: w}, k, st["field"])
                 .orderBy(F.desc("score"), F.asc("doc_id"))
                 .limit(k)
             )
@@ -2274,60 +2396,91 @@ class Searcher:
         )
         return self._wand_pruned_plan(st, theta)
 
-    def _wand_state(self, q: P.BoolQ, k: int):
-        """Shape check + stats lookup for the WAND path. Returns None
-        (shape doesn't apply -> plain path), "empty" (provably no
-        hits), or the state dict the later stages consume."""
-        if not (q.must or q.should):
+    def _term_bool_state(self, q: P.BoolQ):
+        """Shape check + stats lookup for a term-leaf BoolQ, shared by
+        the one-scan plan (_bool_scored) and the WAND gate (_wand_state).
+        Returns None (a MUST/SHOULD clause that is not a TermQ of the
+        query's one field, or a term in two clauses: the join tree),
+        "empty" (provably no hits), or the state dict:
+
+        - ``kinds``: term -> clause kind (_MUST/_SHOULD/_FILTER/_MUST_NOT)
+          for every term the one scan decodes: the scoring terms plus
+          each FILTER / MUST_NOT TermQ of the same field and a new term;
+        - ``weights``: term -> createWeight output, scoring terms only;
+        - ``msm``: SHOULD matches a hit needs (0 = SHOULD optional);
+        - ``filter`` / ``must_not``: the clauses the one scan does not
+          carry, joined after the assembly."""
+        scoring = q.must + q.should
+        if not scoring or not all(isinstance(c, P.TermQ) for c in scoring):
             return None
-        if not all(
-            isinstance(c, P.TermQ) and c.field is None for c in q.must + q.should
-        ):
-            return None  # non-term or field-scoped clauses: plain path
-        must_t = [(c.term, c.boost) for c in q.must]
-        should_t = [(c.term, c.boost) for c in q.should]
-        all_terms = [t for t, _ in must_t + should_t]
-        if len(set(all_terms)) != len(all_terms):
-            return None  # duplicate/overlapping terms: fall back
-        if "row_impacts" not in self.index.postings.columns:
-            return None
-        stats = self.index.stats_for_terms(all_terms)
-        if any(t not in stats for t, _ in must_t):
+        field = scoring[0].field
+        kinds: dict[str, int] = {}
+        for kind, clauses in ((_MUST, q.must), (_SHOULD, q.should)):
+            for c in clauses:
+                if c.field != field or c.term in kinds:
+                    return None  # mixed fields / a term in two clauses
+                kinds[c.term] = kind
+        joined: dict[int, list] = {_FILTER: [], _MUST_NOT: []}
+        for kind, clauses in ((_FILTER, q.filter), (_MUST_NOT, q.must_not)):
+            for c in clauses:
+                if (isinstance(c, P.TermQ) and c.field == field
+                        and c.term not in kinds):
+                    kinds[c.term] = kind
+                else:
+                    joined[kind].append(c)
+        stats = self.index.stats_for_terms(list(kinds), field)
+        if any(kd in (_MUST, _FILTER) and t not in stats
+               for t, kd in kinds.items()):
+            return "empty"  # a required term matches nothing
+        kinds = {t: kd for t, kd in kinds.items() if t in stats}
+        # a pure disjunction needs one SHOULD match by construction
+        msm = q.min_should_match if q.must else max(1, q.min_should_match)
+        if q.should and msm > sum(kd == _SHOULD for kd in kinds.values()):
             return "empty"
-        should_t = [(t, b) for t, b in should_t if t in stats]
-        msm = q.min_should_match
-        if not must_t and len(should_t) < max(1, msm):
-            return "empty"
+        boosts = {c.term: c.boost for c in scoring}
         weights = {
-            t: self._weight(stats[t][0], b, ttf=stats[t][1])
-            for t, b in must_t + should_t
+            t: self._weight(stats[t][0], boosts[t], field, ttf=stats[t][1])
+            for t, kd in kinds.items() if kd in (_MUST, _SHOULD)
         }
-        if len(weights) < 2:
-            return None  # single-term: the plain path already prunes
-        if sum(stats[t][0] for t in weights) < self.wand_min_postings:
-            return None  # decode too small to amortize the θ subtree
         return {
             "q": q,
+            "field": field,
+            "kinds": kinds,
             "weights": weights,
-            "terms": list(weights),
-            "must_set": frozenset(t for t, _ in must_t),
-            "should_set": frozenset(t for t, _ in should_t),
+            "df_sum": sum(stats[t][0] for t in weights),
             "msm": msm,
+            "filter": joined[_FILTER],
+            "must_not": joined[_MUST_NOT],
         }
+
+    def _wand_state(self, q: P.BoolQ, k: int):
+        """The WAND gate over _term_bool_state: its state dict when
+        block-max WAND pays for this query, "empty" when the query
+        provably has no hits, else None (scored(q, k) then runs the
+        plain one-scan plan). WAND needs row_impacts (block bounds), two
+        or more scoring terms (one term has no cross-clause bound to
+        prune with) and Σdf ≥ wand_min_postings."""
+        st = self._term_bool_state(q)
+        if not isinstance(st, dict):
+            return st
+        if (
+            "row_impacts" not in self.index.postings.columns
+            or len(st["weights"]) < 2
+            or st["df_sum"] < self.wand_min_postings
+        ):
+            return None
+        return st
 
     def _wand_pruned_plan(self, st, theta: DataFrame) -> DataFrame:
         """Passes 2+3 (see _bool_topk_wand): distributive salt-level
-        cross-clause bounds, then the pruned decode scan + assembly.
-        ``theta`` is the one-row {__theta} DataFrame, fused into the
-        scan as a broadcast cross join."""
-        q = st["q"]
+        cross-clause bounds over the scoring terms, then the term-leaf
+        plan (_term_bool_plan) — the decode and assembly the plain plan
+        runs — with those bounds and ``theta``, the one-row {__theta}
+        DataFrame, fused into its scan."""
         weights = st["weights"]
-        terms = st["terms"]
-        must_set = st["must_set"]
-        should_set = st["should_set"]
-        msm = st["msm"]
-        score = self._scorer()
-        weights_b = dict(weights)
+        field = st["field"]
+        must = sorted(t for t, kd in st["kinds"].items() if kd == _MUST)
+        score = self._scorer(field)
 
         @F.pandas_udf(T.DoubleType())
         def row_max_udf(term: pd.Series, imps: pd.Series) -> pd.Series:
@@ -2339,7 +2492,7 @@ class Searcher:
                     # 0.0, or pruning would silently drop their blocks
                     out.append(np.inf)
                 else:
-                    out.append(_impact_max(score, arr, weights_b[t]))
+                    out.append(_impact_max(score, arr, weights[t]))
             return pd.Series(out)
 
         # ---- pass 2: salt-level upper bounds, computed DISTRIBUTIVELY ----
@@ -2348,12 +2501,13 @@ class Searcher:
         # cross-clause aggregates. Nothing is collected to the driver:
         # at 10^10 docs the (term, salt) metadata is millions of rows,
         # which pass 3 consumes via a join (AQE broadcasts it when small).
-        cache_key = frozenset(weights.items())
+        # must_cnt depends on which terms are MUST, so the key names them.
+        cache_key = (field, frozenset(weights.items()), tuple(must))
         bounds = self._wand_meta_cache.get(cache_key)
         if bounds is not None:
             self._wand_meta_cache.move_to_end(cache_key)
         else:
-            light = self.index.postings_for_terms(terms).select(
+            light = self.index.postings_for_terms(list(weights), field).select(
                 "term", "salt", "row_impacts"
             )
             ts_max = (
@@ -2361,11 +2515,10 @@ class Searcher:
                 .groupBy("term", "salt")
                 .agg(F.max("m_ts").alias("m_ts"))
             )
-            must_lc = sorted(must_set)
             salt_agg = ts_max.groupBy("salt").agg(
                 F.sum("m_ts").alias("salt_total"),
                 F.count(
-                    F.when(F.col("term").isin(must_lc), F.lit(1))
+                    F.when(F.col("term").isin(must), F.lit(1))
                 ).alias("must_cnt"),
             )
             bounds = (
@@ -2383,119 +2536,82 @@ class Searcher:
             while len(self._wand_meta_cache) > self.WAND_META_CACHE_MAX:
                 _, evicted = self._wand_meta_cache.popitem(last=False)
                 evicted.unpersist()
-        n_must = len(must_set)
+        # ---- pass 3: pruned decode + assembly (bounds joined, not collected) ----
+        return self._term_bool_plan(st, bounds=bounds, theta=theta)
 
-        # ---- pass 3: pruned decode scan (bounds joined in, not collected) ----
-        # one-row broadcast: every decode row carries __theta; the
-        # sample/verify subtree executes inside this same action
-        rows = (
-            self.index.postings_for_terms(terms)
-            .join(bounds, ["term", "salt"], "left")
-            .crossJoin(F.broadcast(theta))
-        )
+    def _term_bool_plan(self, st, candidates=None, bounds: DataFrame | None = None,
+                        theta: DataFrame | None = None) -> DataFrame:
+        """The one-scan plan of a term-leaf BoolQ (state from
+        _term_bool_state): one postings scan over every term in
+        ``st["kinds"]``, one decode tagging each row with its clause kind
+        (_tagged_decode), one groupBy("doc_id") assembly. The plain plan
+        passes no ``bounds``/``theta`` and prunes nothing; the WAND plan
+        (_wand_pruned_plan) joins the salt bounds and cross-joins the
+        one-row θ into the scan. ``candidates`` filters the decoded rows
+        before the shuffle (rescore / θ verification, see _cand).
 
-        def fn(iterator):
-            for pdf in iterator:
-                if not len(pdf):
-                    continue
-                th = float(pdf["__theta"].iat[0])
-                parts = []
-                for row in pdf.itertuples(index=False):
-                    t = row.term
-                    if (
-                        n_must
-                        and pd.notna(row.must_cnt)
-                        and int(row.must_cnt) < n_must
-                    ):
-                        continue  # conjunction impossible in this shard
-                    # inf - inf = NaN in the others column; NaN / missing
-                    # bound rows mean "unknown" -> no pruning (sound)
-                    others = row.others
-                    if pd.isna(others):
-                        others = np.inf
-                    own = row.m_ts if pd.notna(row.m_ts) else np.inf
-                    w = weights_b[t]
-                    for blk in row.blocks:
-                        bmax = (
-                            _impact_max(score, blk["impacts"], w)
-                            if len(blk["impacts"])
-                            else own
-                        )
-                        if bmax + others < th:
-                            continue
-                        d, f, nm = decode_block(blk)
-                        parts.append(
-                            pd.DataFrame(
-                                {"doc_id": d, "term": t, "score": score(f, nm, w)}
-                            )
-                        )
-                if parts:
-                    yield pd.concat(parts)
-
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("term", T.StringType()),
-                T.StructField("score", T.DoubleType()),
-            ]
-        )
-        decoded = self._live(rows.mapInPandas(fn, schema=schema))
-
-        # ---- assembly (same combine semantics as _bool_scored) ----
-        in_must = F.col("term").isin(list(must_set)) if must_set else F.lit(False)
-        in_should = F.col("term").isin(list(should_set)) if should_set else F.lit(False)
-        agg = decoded.groupBy("doc_id").agg(
-            F.sum(F.when(in_must, F.col("score"))).alias("m_sum"),
-            F.count(F.when(in_must, F.lit(1))).alias("m_cnt"),
-            F.sum(F.when(in_should, F.col("score"))).alias("s_sum"),
-            F.count(F.when(in_should, F.lit(1))).alias("s_cnt"),
-        )
-        if must_set:
-            agg = agg.filter(F.col("m_cnt") == len(must_set))
-        eff_msm = msm
-        if not must_set and eff_msm < 1:
-            eff_msm = 1
-        if should_set and eff_msm > 0:
-            if must_set and msm == 0:
-                pass  # optional should
-            else:
-                agg = agg.filter(F.col("s_cnt") >= eff_msm)
-        if must_set and should_set:
-            s_part = F.coalesce(F.col("s_sum"), F.lit(0.0))
-            if self.scoring == "lucene":
-                s_part = s_part.cast("float").cast("double")
-                total = (F.col("m_sum") + s_part).cast("float").cast("double")
-            else:
-                total = F.col("m_sum") + s_part
-        elif must_set:
-            total = F.col("m_sum")
-            if len(must_set) > 1 and self.scoring == "lucene":
-                total = total.cast("float").cast("double")
-        else:
-            total = (
-                F.col("s_sum").cast("float").cast("double")
-                if self.scoring == "lucene"
-                else F.col("s_sum")
+        A hit matches every MUST and FILTER term, no MUST_NOT term and at
+        least ``msm`` SHOULD terms. Float rules are the join tree's:
+        float32 clause scores summed in double; MUST sums stay uncast;
+        the SHOULD sum is cast to float before it is added to MUST
+        (DisjunctionSumScorer.java:38-44); the total is cast when more
+        than one MUST or a MUST+SHOULD mix adds up."""
+        q, kinds, field = st["q"], st["kinds"], st["field"]
+        pruned = theta is not None
+        rows = self.index.postings_for_terms(list(kinds), field)
+        if pruned:
+            rows = (
+                rows.select("term", "salt", "blocks")
+                .join(bounds, ["term", "salt"], "left")
+                .crossJoin(F.broadcast(theta))
             )
+        else:
+            rows = rows.select("term", "blocks")
+        n = Counter(kinds.values())
+        fn = _tagged_decode(
+            kinds, st["weights"], self._scorer(field), n[_MUST], pruned
+        )
+        decoded = self._cand(
+            self._live(rows.mapInPandas(fn, schema=_TAGGED_SCHEMA)), candidates
+        )
+
+        kind = F.col("kind")
+        aggs, keep = [], []
+        if n[_MUST]:
+            aggs.append(F.sum(F.when(kind == _MUST, F.col("score"))).alias("m_sum"))
+            aggs.append(F.count(F.when(kind == _MUST, F.lit(1))).alias("m_cnt"))
+            keep.append(F.col("m_cnt") == n[_MUST])
+        if n[_SHOULD]:
+            aggs.append(F.sum(F.when(kind == _SHOULD, F.col("score"))).alias("s_sum"))
+            aggs.append(F.count(F.when(kind == _SHOULD, F.lit(1))).alias("s_cnt"))
+            if st["msm"] > 0:
+                keep.append(F.col("s_cnt") >= st["msm"])
+        if n[_FILTER]:
+            aggs.append(F.count(F.when(kind == _FILTER, F.lit(1))).alias("f_cnt"))
+            keep.append(F.col("f_cnt") == n[_FILTER])
+        if n[_MUST_NOT]:
+            aggs.append(F.count(F.when(kind == _MUST_NOT, F.lit(1))).alias("x_cnt"))
+            keep.append(F.col("x_cnt") == 0)
+        agg = decoded.groupBy("doc_id").agg(*aggs)
+        for cond in keep:
+            agg = agg.filter(cond)
+
+        def as_float(c):
+            return c.cast("float").cast("double") if self.scoring == "lucene" else c
+
+        if n[_MUST] and n[_SHOULD]:
+            s_part = as_float(F.coalesce(F.col("s_sum"), F.lit(0.0)))
+            total = as_float(F.col("m_sum") + s_part)
+        elif n[_MUST]:
+            total = as_float(F.col("m_sum")) if n[_MUST] > 1 else F.col("m_sum")
+        else:
+            total = as_float(F.col("s_sum"))
         combined = agg.select("doc_id", total.alias("score"))
-        for c in q.filter:
+        for c in st["filter"]:
             combined = combined.join(self.doc_set(c), "doc_id", "left_semi")
-        for c in q.must_not:
+        for c in st["must_not"]:
             combined = combined.join(self.doc_set(c), "doc_id", "left_anti")
-        if q.boost != 1.0:
-            if self.scoring == "lucene":
-                combined = combined.withColumn(
-                    "score",
-                    (
-                        F.col("score").cast("float")
-                        * F.lit(np.float32(q.boost)).cast("float")
-                    ).cast("double"),
-                )
-            else:
-                combined = combined.withColumn(
-                    "score", F.col("score") * F.lit(float(q.boost))
-                )
-        return combined
+        return self._boosted(combined, q.boost)
 
     def search_after(self, q, k: int, after_score: float, after_doc: int,
                      field_filters: tuple = ()) -> DataFrame:

@@ -1,8 +1,11 @@
 """Physical-plan audit: the properties that make queries scale must be
 visible in the executed plan (SURVEY.md §4 / the .explain discipline).
 
-- term lookup: Parquet PartitionFilters on bucket (partition pruning),
-  PushedFilters on term (predicate pushdown to the scan)
+- term lookup: PushedFilters on bucket and term (postings are written
+  flat; parquet row-group stats and dictionary filtering prune), and the
+  scan reads only the columns the decode needs
+- term-leaf boolean top-k: one postings scan and one decode for all
+  clauses; other clause kinds keep the per-clause join tree
 - top-k: TakeOrderedAndProject (per-partition heap + merge, never a
   global sort)
 - multi-term expansion: broadcast semi join of the matching dictionary
@@ -12,13 +15,15 @@ visible in the executed plan (SURVEY.md §4 / the .explain discipline).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from lucene_spark.corpus import make_corpus
 from lucene_spark.index import Index, build_index
 from lucene_spark.pipeline import textstats
-from lucene_spark.search import PrefixQ, Searcher, TermQ
+from lucene_spark.search import BoolQ, PhraseQ, PrefixQ, Searcher, TermQ
 
 
 @pytest.fixture(scope="module")
@@ -50,12 +55,45 @@ def test_term_topk_plan(searcher):
     assert plan.count("Exchange") == 0, plan  # term query: shuffle-free
 
 
+def test_term_topk_reads_no_position_columns(searcher):
+    plan = plan_of(searcher.top_k(TermQ("license"), 10))
+    cols = {
+        c.split("#")[0]
+        for c in re.search(r"FileScan parquet \[([^\]]*)\]", plan).group(1).split(",")
+    }
+    assert "blocks" in cols, plan
+    assert not cols & {"pos", "off", "pay", "row_impacts"}, plan
+
+
+@pytest.mark.parametrize("q", [
+    BoolQ(should=(TermQ("license"), TermQ("file"))),
+    BoolQ(must=(TermQ("license"), TermQ("file"))),
+    BoolQ(must=(TermQ("license"),), must_not=(TermQ("the"),)),
+    BoolQ(should=(TermQ("license"), TermQ("file"), TermQ("the")),
+          min_should_match=2),
+], ids=["or", "and", "must_not", "msm"])
+def test_term_bool_topk_one_scan(searcher, q):
+    """A term-leaf boolean top-k is one postings scan and one decode,
+    whatever its clause kinds."""
+    st = searcher._term_bool_state(q)
+    assert len(st["kinds"]) == len(q.must + q.should + q.must_not)  # all present
+    plan = plan_of(searcher.top_k(q, 10))
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
+
+
+def test_bool_with_phrase_keeps_join_tree(searcher):
+    q = BoolQ(must=(TermQ("license"), PhraseQ(("apache", "license"))))
+    assert searcher._term_bool_state(q) is None
+    plan = plan_of(searcher.top_k(q, 10))
+    assert plan.count("MapInPandas") == 2 and "Join" in plan, plan
+
+
 @pytest.mark.parametrize("api", ["top_k", "top_k_batch"])
 def test_wand_plan_build_runs_no_job(searcher, api):
     """A forced-WAND query's θ is a plan, not a collect: once the term
     stats are memoized, building the top-k DataFrame runs no Spark job
     through either entry point."""
-    from lucene_spark.search import BoolQ
     from lucene_spark.search import plans as P
 
     s = Searcher(searcher.index, wand_min_postings=0)
