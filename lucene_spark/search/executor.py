@@ -68,6 +68,18 @@ _POS_PAY_SCHEMA = T.StructType(
     + [T.StructField("payloads", T.ArrayType(T.FloatType()))]
 )
 
+# Leaves whose doc set is their own plan (Searcher._doc_set_uncached):
+# predicates over the docs table, and the multi-term queries whose
+# constant-score rewrite (TermInSetQ's only one) scored() builds on the
+# doc set. Every other query's doc set is its scored plan's doc_id column.
+_DOC_PREDICATES = (P.FieldFilter, P.GeoBoxQ, P.GeoDistanceQ, P.ShapeQ)
+_MULTI_TERM = (P.PrefixQ, P.WildcardQ, P.RegexpQ, P.TermRangeQ, P.TermInSetQ)
+
+
+def _constant_score_multiterm(q) -> bool:
+    return (isinstance(q, _MULTI_TERM)
+            and getattr(q, "rewrite", "constant_score") == "constant_score")
+
 
 def _key_field(k) -> str | None:
     """Leaf-key field: keys are bare terms (default field) or
@@ -412,9 +424,24 @@ class Searcher:
 
         return self._live(rows.mapInPandas(fn, schema=_SCORE_SCHEMA))
 
-    def _doc_rows(self, terms: list[str], field: str | None = None) -> DataFrame:
-        """Decoded (doc_id) rows for a term set — non-scoring (FILTER path)."""
-        rows = self.index.postings_for_terms(terms, field).select("blocks")
+    def _doc_rows(self, terms: list[str] | None, field: str | None = None,
+                  predicate=None) -> DataFrame:
+        """Decoded (doc_id) rows, no freqs or scores: the postings of
+        ``terms``, or with ``predicate`` of every dictionary term it
+        matches — the MultiTermQuery constant-score path, a semi-join of
+        the postings scan against the matching slice of the terms
+        dictionary, broadcast (MultiTermQueryConstantScoreWrapper.java)."""
+        if predicate is None:
+            rows = self.index.postings_for_terms(terms, field)
+        else:
+            stats = self.index.term_stats
+            rows = self.index.postings
+            if self.index.has_field_column:
+                fld = self.index.resolve_field(field)
+                stats = stats.filter(F.col("field") == fld)
+                rows = rows.filter(F.col("field") == fld)
+            matching = stats.filter(predicate).select("term", "bucket")
+            rows = rows.join(F.broadcast(matching), ["term", "bucket"], "left_semi")
 
         def fn(iterator):
             for pdf in iterator:
@@ -422,7 +449,7 @@ class Searcher:
                 if outs:
                     yield pd.DataFrame({"doc_id": np.concatenate(outs)})
 
-        return self._live(rows.mapInPandas(fn, schema=_DOCS_SCHEMA))
+        return self._live(rows.select("blocks").mapInPandas(fn, schema=_DOCS_SCHEMA))
 
     def _stats_for_keys(self, keys: list) -> dict:
         """stats_for_terms over mixed-field leaf keys: one lookup per
@@ -453,29 +480,6 @@ class Searcher:
                 )
             out = p if out is None else out.unionByName(p)
         return out
-
-    def _doc_rows_for_predicate(self, predicate, field: str | None = None) -> DataFrame:
-        """MultiTermQuery constant-score path: semi-join the postings scan
-        against the matching slice of the terms dictionary (broadcast),
-        then decode docIDs (MultiTermQueryConstantScoreWrapper.java)."""
-        stats = self.index.term_stats
-        posts = self.index.postings
-        if self.index.has_field_column:
-            fld = self.index.resolve_field(field)
-            stats = stats.filter(F.col("field") == fld)
-            posts = posts.filter(F.col("field") == fld)
-        matching = stats.filter(predicate).select("term", "bucket")
-        rows = posts.join(
-            F.broadcast(matching), ["term", "bucket"], "left_semi"
-        ).select("blocks")
-
-        def fn(iterator):
-            for pdf in iterator:
-                outs = [decode_block(blk)[0] for blocks in pdf["blocks"] for blk in blocks]
-                if outs:
-                    yield pd.DataFrame({"doc_id": np.concatenate(outs)})
-
-        return self._live(rows.mapInPandas(fn, schema=_DOCS_SCHEMA))
 
     def _freq_rows(self, terms: list[str], field: str | None = None) -> DataFrame:
         """(doc_id, term, freq, norm) rows — synonym/blended scoring input."""
@@ -720,15 +724,19 @@ class Searcher:
             return self._cand(self._fuzzy_scored(q), candidates)
         if isinstance(q, P.FuzzyLikeThisQ):
             return self._cand(self._fuzzy_like_this_scored(q), candidates)
-        if isinstance(q, (P.PrefixQ, P.WildcardQ, P.RegexpQ, P.TermRangeQ, P.TermInSetQ)):
-            rw = getattr(q, "rewrite", "constant_score")
-            if rw == "constant_score":
-                # CONSTANT_SCORE_REWRITE default (MultiTermQuery.java:53-83)
-                return self._cand(
-                    self.doc_set(q).withColumn("score", F.lit(float(q.boost))),
-                    candidates,
-                )
-            return self._cand(self._multiterm_scored(q, rw), candidates)
+        if isinstance(q, _DOC_PREDICATES) or _constant_score_multiterm(q):
+            # ConstantScoreWeight over the doc set: the multi-term
+            # CONSTANT_SCORE_REWRITE default (MultiTermQuery.java:53-83)
+            # scores its boost; a docs-predicate leaf has no boost and
+            # scores ConstantScoreWeight's default 1.0
+            return self._cand(
+                self.doc_set(q).withColumn(
+                    "score", F.lit(float(getattr(q, "boost", 1.0)))
+                ),
+                candidates,
+            )
+        if isinstance(q, _MULTI_TERM):
+            return self._cand(self._multiterm_scored(q, q.rewrite), candidates)
         raise TypeError(f"unsupported query node: {q!r}")
 
     MAX_CLAUSE_COUNT = 1024  # IndexSearcher.maxClauseCount default
@@ -1231,6 +1239,28 @@ class Searcher:
 
         return df.select("doc_id", score_udf("freq", "norm").alias("score"))
 
+    def _freq_scored(self, pos: DataFrame, freq_udf, weight: float,
+                     field: str | None = None) -> DataFrame:
+        """The tail of the position-matching families: position rows
+        grouped per doc into ``plists`` (a list of (idx, positions[,
+        payloads]) structs) and a per-doc freq UDF over them -> (doc_id,
+        score) of the docs with freq > 0. The freq UDF is marked
+        nondeterministic so Catalyst neither pushes the freq filter below
+        it nor inlines it into both the Filter and the scoring Project:
+        each UDF is evaluated once per doc."""
+        plist = F.struct(*(c for c in ("idx", "positions", "payloads")
+                           if c in pos.columns))
+        grouped = pos.groupBy("doc_id").agg(
+            F.collect_list(plist).alias("plists"),
+            F.first("norm").alias("norm"),
+        )
+        matched = grouped.select(
+            "doc_id",
+            freq_udf.asNondeterministic()("plists").alias("freq"),
+            "norm",
+        ).filter(F.col("freq") > 0.0)
+        return self._score_freq_df(matched, weight, field)
+
     def _phrase_scored(self, q, candidates: list[int] | None = None) -> DataFrame:
         """Phrase family (PhraseQuery.java:71, MultiPhraseQuery.java:53).
 
@@ -1318,13 +1348,6 @@ class Searcher:
         slot_spec = [
             [idx_of[t] for t in alt] for alt in slots
         ]
-        grouped = (
-            pos.groupBy("doc_id")
-            .agg(
-                F.collect_list(F.struct("idx", "positions")).alias("plists"),
-                F.first("norm").alias("norm"),
-            )
-        )
 
         single_term_slots = all(len(idxs) == 1 for idxs in slot_spec)
 
@@ -1384,14 +1407,7 @@ class Searcher:
                 out[r] = float(len(cand[cand >= 0]))
             return pd.Series(out)
 
-        # filter on the *score* (0 iff freq == 0: BM25 weight > 0 always)
-        # rather than on freq: a freq filter makes Catalyst evaluate the
-        # phrase UDF twice (once for Filter, once for the downstream
-        # Project) — scoring first keeps a single ArrowEvalPython node.
-        matched = grouped.withColumn("freq", phrase_freq("plists"))
-        return self._score_freq_df(
-            matched.select("doc_id", "freq", "norm"), w, fld
-        ).filter(F.col("score") > 0.0)
+        return self._freq_scored(pos, phrase_freq, w, fld)
 
     def _slot_conjunction_docs(self, slots, stats, field: str | None = None) -> DataFrame:
         """Phase-1 approximation: docIDs containing some alternative of
@@ -1493,13 +1509,6 @@ class Searcher:
                 [(t,) for t in req_present], stats, fld
             )
             pos = pos.join(surv, "doc_id", "left_semi")
-        grouped = (
-            pos.groupBy("doc_id")
-            .agg(
-                F.collect_list(F.struct("idx", "positions")).alias("plists"),
-                F.first("norm").alias("norm"),
-            )
-        )
         # position-row idx (index into `present`) -> DFA symbol id
         sym_of_idx = [dfa.terms.index(t) for t in present]
 
@@ -1515,10 +1524,7 @@ class Searcher:
                 out[r] = float(TA.count_matches(events, dfa))
             return pd.Series(out)
 
-        matched = grouped.withColumn("freq", ta_freq("plists"))
-        return self._score_freq_df(
-            matched.select("doc_id", "freq", "norm"), w, fld
-        ).filter(F.col("score") > 0.0)
+        return self._freq_scored(pos, ta_freq, w, fld)
 
     def _bool_scored(self, q: P.BoolQ, k: int | None = None,
                      candidates: list[int] | None = None) -> DataFrame:
@@ -1699,13 +1705,6 @@ class Searcher:
         if candidates is not None:
             pos = self._cand(pos, candidates)
         pos = pos.join(surv, "doc_id", "left_semi")
-        grouped = (
-            pos.groupBy("doc_id")
-            .agg(
-                F.collect_list(F.struct("idx", "positions")).alias("plists"),
-                F.first("norm").alias("norm"),
-            )
-        )
         source = q.source
         uniq_l = list(uniq)
 
@@ -1721,10 +1720,7 @@ class Searcher:
                 out[r] = IV.freq_of(source, pos_by_term)
             return pd.Series(out)
 
-        matched = grouped.withColumn("freq", interval_freq("plists"))
-        return self._score_freq_df(
-            matched.select("doc_id", "freq", "norm"), w
-        ).filter(F.col("score") > 0.0)
+        return self._freq_scored(pos, interval_freq, w)
 
     def _payload_scored(self, q: P.PayloadScoreQ,
                         candidates: list[int] | None = None) -> DataFrame:
@@ -1790,7 +1786,11 @@ class Searcher:
             return pd.Series(out)
 
         scored = (
-            grouped.withColumn("pscore", payload_score("plists"))
+            # nondeterministic: the isNotNull filter stays above the UDF,
+            # which is then evaluated once per doc (see _freq_scored)
+            grouped.withColumn(
+                "pscore", payload_score.asNondeterministic()("plists")
+            )
             .filter(F.col("pscore").isNotNull())
             .select(
                 "doc_id", (F.col("pscore") * F.lit(boost)).alias("score")
@@ -1830,12 +1830,6 @@ class Searcher:
         if candidates is not None:
             pos = self._cand(pos, candidates)
         pos = pos.join(surv, "doc_id", "left_semi")
-        grouped = pos.groupBy("doc_id").agg(
-            F.collect_list(
-                F.struct("idx", "positions", "payloads")
-            ).alias("plists"),
-            F.first("norm").alias("norm"),
-        )
         uniq_l = list(uniq)
         refs = list(q.payloads)
         op = q.op
@@ -1881,10 +1875,7 @@ class Searcher:
                 out[r] = freq
             return pd.Series(out)
 
-        matched = grouped.withColumn("freq", check_freq("plists")).filter(
-            F.col("freq") > 0.0
-        )
-        return self._score_freq_df(matched.select("doc_id", "freq", "norm"), w)
+        return self._freq_scored(pos, check_freq, w)
 
     def _rewrite_common_terms(self, q: P.CommonTermsQ):
         """CommonTermsQuery plan rewrite (CommonTermsQuery.java:136-190):
@@ -2060,7 +2051,15 @@ class Searcher:
     # ------------------------------------------------------------------
 
     def doc_set(self, q) -> DataFrame:
-        """Plan node -> distinct DataFrame(doc_id), no scores (FILTER path).
+        """Plan node -> distinct DataFrame(doc_id): the query in filter
+        context, no scores (Lucene's ScoreMode.COMPLETE_NO_SCORES Weight).
+
+        One compiler: a query's doc set is its scored plan's doc_id
+        column, so filter context and scoring context cannot disagree
+        (msm, rewrites and every family scored() runs). Catalyst prunes
+        the unused score column, so a score computed as a Spark
+        expression costs nothing here. Only the leaves scored() itself
+        builds on keep their own plan (_doc_set_uncached).
 
         With a query_cache installed, repeated filters serve a persisted
         doc set once the usage-tracking policy threshold clears
@@ -2074,41 +2073,14 @@ class Searcher:
         return self._doc_set_uncached(q)
 
     def _doc_set_uncached(self, q) -> DataFrame:
-        if isinstance(q, P.TermQ):
-            return self._doc_rows([q.term], q.field).distinct()
-        if isinstance(q, P.BlendedTermQ) and q.fields:
-            # cross-field blend in filter context: a doc matches if ANY
-            # (field, term) pair matches (BlendedTermQuery rewrites to a
-            # disjunction over Term(field, text) pairs) — union per field.
-            u = None
-            for fld in q.fields:
-                s = self._doc_rows(list(q.terms), fld)
-                u = s if u is None else u.unionByName(s)
-            return u.distinct()
-        if isinstance(q, (P.SynonymQ, P.TermInSetQ, P.BlendedTermQ)):
-            return self._doc_rows(list(q.terms), getattr(q, "field", None)).distinct()
-        if isinstance(q, (P.PrefixQ, P.WildcardQ, P.RegexpQ)):
-            return self._doc_rows_for_predicate(
-                self._multiterm_pred(q), q.field
+        if isinstance(q, P.TermInSetQ):
+            return self._doc_rows(list(q.terms), q.field).distinct()
+        if _constant_score_multiterm(q):
+            return self._doc_rows(
+                None, q.field, predicate=self._multiterm_pred(q)
             ).distinct()
-        if isinstance(q, P.FuzzyQ):
-            # Same expansion set as the scored path (FuzzyTermsEnum with
-            # transpositions honored + pushed pre-filters) — a plain
-            # levenshtein predicate here would silently miss terms
-            # reachable only via a transposition (Damerau 1 / Lev 2).
-            terms = [t for t, _df, _b in self._fuzzy_expansions(q)]
-            if not terms:
-                return self.index.spark.createDataFrame([], _DOCS_SCHEMA)
-            return self._doc_rows(terms, q.field).distinct()
-        if isinstance(q, P.FuzzyLikeThisQ):
-            terms = list(self._fuzzy_like_this_vars(q))
-            if not terms:
-                return self.index.spark.createDataFrame([], _DOCS_SCHEMA)
-            return self._doc_rows(terms, q.field).distinct()
-        if isinstance(q, P.TermRangeQ):
-            return self._doc_rows_for_predicate(
-                self._multiterm_pred(q), q.field
-            ).distinct()
+        if not isinstance(q, _DOC_PREDICATES):
+            return self.scored(q).select("doc_id")
         if isinstance(q, P.FieldFilter):
             col = F.col(q.col)
             if q.op == "=":
@@ -2123,76 +2095,24 @@ class Searcher:
                 pred = col.isNotNull()
             else:
                 raise ValueError(q.op)
-            return self._live(self.index.docs.filter(pred).select("doc_id"))
-        if isinstance(q, P.GeoBoxQ):
+        elif isinstance(q, P.GeoBoxQ):
             from lucene_spark.geo import box_predicate
 
             pred = box_predicate(q.lat_col, q.lon_col, q.min_lat,
                                  q.max_lat, q.min_lon, q.max_lon)
-            return self._live(self.index.docs.filter(pred).select("doc_id"))
-        if isinstance(q, P.GeoDistanceQ):
+        elif isinstance(q, P.GeoDistanceQ):
             from lucene_spark.geo import distance_predicate
 
             pred = distance_predicate(q.lat_col, q.lon_col, q.lat, q.lon,
                                       q.radius_m)
-            return self._live(self.index.docs.filter(pred).select("doc_id"))
-        if isinstance(q, P.ShapeQ):
+        else:
             from lucene_spark.geo_shape import shape_relation_predicate
 
             pred = shape_relation_predicate(
                 q.lats_col, q.lons_col, q.polygon, q.relation, q.holes,
                 q.kind,
             )
-            return self._live(self.index.docs.filter(pred).select("doc_id"))
-        if isinstance(q, P.MatchAllQ):
-            return self._live(self.index.docs.select("doc_id"))
-        if isinstance(q, (P.ConstScoreQ, P.BoostQ)):
-            return self.doc_set(q.inner)
-        if isinstance(q, (P.PhraseQ, P.MultiPhraseQ)):
-            return self._phrase_scored(q).select("doc_id")
-        if isinstance(q, P.PhraseWildcardQ):
-            mp = self._phrase_wildcard_multiphrase(q)
-            if mp is None:
-                return self.index.spark.createDataFrame([], _DOCS_SCHEMA)
-            return self._phrase_scored(mp).select("doc_id")
-        if isinstance(q, P.TermAutomatonQ):
-            return self._term_automaton_scored(q).select("doc_id")
-        if isinstance(q, P.CommonTermsQ):
-            return self.doc_set(self._rewrite_common_terms(q))
-        if isinstance(q, P.IntervalQ):
-            return self._interval_scored(q).select("doc_id")
-        if isinstance(q, P.FeatureQ):
-            return self._live(
-                self.index.docs.filter(F.col(q.col).isNotNull()).select("doc_id")
-            )
-        if isinstance(q, P.DistanceFeatureQ):
-            return self._live(
-                self.index.docs.filter(F.col(q.col).isNotNull()).select("doc_id")
-            )
-        if isinstance(q, P.GeoDistanceFeatureQ):
-            return self._live(
-                self.index.docs.filter(
-                    F.col(q.lat_col).isNotNull()
-                    & F.col(q.lon_col).isNotNull()
-                ).select("doc_id")
-            )
-        if isinstance(q, P.BoolQ):
-            base = None
-            for c in list(q.must) + list(q.filter):
-                s = self.doc_set(c)
-                base = s if base is None else base.join(s, "doc_id", "left_semi")
-            if base is None and q.should:
-                u = None
-                for c in q.should:
-                    s = self.doc_set(c)
-                    u = s if u is None else u.unionByName(s)
-                base = u.distinct()
-            if base is None:
-                return self.index.spark.createDataFrame([], _DOCS_SCHEMA)
-            for c in q.must_not:
-                base = base.join(self.doc_set(c), "doc_id", "left_anti")
-            return base
-        raise TypeError(f"unsupported query node: {q!r}")
+        return self._live(self.index.docs.filter(pred).select("doc_id"))
 
     # ------------------------------------------------------------------
     # collectors

@@ -286,8 +286,9 @@ class FuzzyQ:
     transposition as one edit (Damerau; we use the unrestricted variant
     to stay bit-identical with the DuckDB oracle's damerau_levenshtein —
     Lucene's parametric automaton is the restricted/OSA variant, which
-    differs only on pathological pairs like 'ca'~'abc').
-    doc_set() keeps the CONSTANT_SCORE semantics."""
+    differs only on pathological pairs like 'ca'~'abc'). In filter
+    context (doc_set, count) it matches the docs of the same kept
+    expansions."""
 
     term: str
     max_edits: int = 2

@@ -71,16 +71,37 @@ def test_batch_matches_individual(built, wand_min_postings):
 
 def test_count_fast_path_matches_scan(built):
     """Weight#count: df-based term count == distributed doc-set count,
-    and MatchAll count == maxDoc (no deletes)."""
-    from lucene_spark.search import MatchAllQ
+    and MatchAll count == maxDoc (no deletes). Every other query counts
+    exactly its top_k hits: filter context is the scored plan's doc
+    set, whatever the query family."""
+    from lucene_spark.search import (
+        CombinedFieldQ, CommonTermsQ, DisMaxQ, FieldFilter, FunctionScoreQ,
+        MatchAllQ, SynonymQ,
+    )
 
     s = Searcher(built)
     for t in ["import", "class", "zzz_missing"]:
         assert s.count(TermQ(t)) == s.doc_set(TermQ(t)).count()
     assert s.count(MatchAllQ()) == built.N
     # compound queries still go through the distributed path
-    q = BoolQ(should=(TermQ("import"), TermQ("class")))
-    assert s.count(q) == s.doc_set(q).count()
+    for q in (
+        BoolQ(should=(TermQ("import"), TermQ("class"))),
+        DisMaxQ((TermQ("import"), TermQ("class")), tiebreak=0.1),
+        FunctionScoreQ(TermQ("class"), "dl"),
+        CombinedFieldQ(("import", "class"), (("content", 1.0),)),
+        CommonTermsQ(("the", "import", "chan")),
+        PhraseQ(("async", "def")),
+        SynonymQ(("async", "await")),
+        PrefixQ("var_", rewrite="top_terms_blended", max_expansions=2),
+        BoolQ(must=(TermQ("import"),),
+              should=(FieldFilter("dl", "between", (0, 40)),),
+              min_should_match=1),
+    ):
+        hits = [int(r["doc_id"]) for r in s.top_k(q, built.N).collect()]
+        assert hits, q
+        assert s.count(q) == len(hits), q
+        assert sorted(int(r["doc_id"]) for r in s.doc_set(q).collect()) \
+            == sorted(hits), q
 
 
 def test_explain_matches_score(built):

@@ -11,11 +11,16 @@ visible in the executed plan (SURVEY.md §4 / the .explain discipline).
 - multi-term expansion: broadcast semi join of the matching dictionary
   slice against postings
 - pipeline projections: no shuffle (no Exchange) for per-row text ops
+- Python UDFs: each evaluated once per row (one ArrowEvalPython node per
+  UDF), counted by ``udf_evals``
+- filter context: a doc set is the scored plan's doc_id column, so it
+  has the scored plan's scans and shuffles
 """
 
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -44,6 +49,14 @@ def searcher(spark, tmp_path_factory):
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def udf_evals(df) -> Counter:
+    """ArrowEvalPython evaluations per Python UDF name in the executed
+    plan of ``df``. Once an adaptive plan has run, its string lists the
+    final plan and then the initial one; only the final plan counts."""
+    plan = plan_of(df).split("== Initial Plan ==")[0]
+    return Counter(re.findall(r"ArrowEvalPython \[(\w+)\(", plan))
 
 
 def test_term_topk_plan(searcher):
@@ -231,9 +244,31 @@ def test_phrase_two_phase_plan(searcher):
     assert agg_at >= 0, plan
     below = plan[agg_at:]
     assert "LeftSemi" in below, plan
-    # and the phrase UDF is evaluated exactly once (no Filter-vs-Project
-    # double ArrowEvalPython of the same UDF)
-    assert plan.count("phrase_freq(plists") <= 2, plan  # defn + one eval ref
+
+    # the phrase freq UDF and the score UDF each run once per doc, for
+    # the phrase alone and as a MUST clause beside a term; the final
+    # adaptive plan of an executed query counts the same
+    once = Counter(phrase_freq=1, score_udf=1)
+    for q in (PhraseQ(("apache", "license")),
+              BoolQ(must=(TermQ("license"), PhraseQ(("apache", "license"))))):
+        df = searcher.top_k(q, 10)
+        assert udf_evals(df) == once, plan_of(df)
+        df.collect()
+        assert udf_evals(df) == once, plan_of(df)
+
+
+def test_term_doc_set_shuffle_free(searcher):
+    plan = plan_of(searcher.doc_set(TermQ("license")))
+    assert "Exchange" not in plan, plan
+
+
+def test_term_bool_count_one_scan(searcher):
+    """count() of a term-leaf BoolQ runs the scored plan's one postings
+    scan, not one scan per clause."""
+    q = BoolQ(should=(TermQ("license"), TermQ("file"), TermQ("the")),
+              min_should_match=2)
+    plan = plan_of(searcher.doc_set(q).groupBy().count())
+    assert plan.count("FileScan parquet") == 1, plan
 
 
 def test_ann_probe_partition_pruned(spark, tmp_path):

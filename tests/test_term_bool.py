@@ -10,7 +10,9 @@ the single-term decode) with BooleanQuery's float rules:
 - the total cast when more than one MUST or a MUST+SHOULD mix adds up;
 - a BoolQ boost as a float32 multiply.
 
-Ranks, doc_ids and float32 score bits must match."""
+Ranks, doc_ids and float32 score bits must match. In filter context
+(``doc_set``, ``count``) every shape must match the reference hit set,
+each doc once."""
 
 from __future__ import annotations
 
@@ -153,10 +155,25 @@ def _reference(s: Searcher, q: BoolQ, scores: dict,
     return sorted(out.items(), key=lambda x: (-x[1], x[0]))
 
 
-def _check(s: Searcher, batch: bool):
+def _doc_sets(s: Searcher, qs: dict) -> dict:
+    """{name: [doc_id, ...]} of every shape's doc_set, in one collect;
+    a doc listed twice stays listed twice."""
+    u = None
+    for name, q in qs.items():
+        part = s.doc_set(q).select(F.lit(name).alias("name"), "doc_id")
+        u = part if u is None else u.unionByName(part)
+    out: dict = {name: [] for name in qs}
+    for r in u.collect():
+        out[r["name"]].append(int(r["doc_id"]))
+    return out
+
+
+def _check(s: Searcher, batch: bool, filter_context: bool = True):
     """Every shape's hits against the reference: top_k one query at a
-    time, or all shapes in one top_k_batch."""
+    time, or all shapes in one top_k_batch; with ``filter_context`` also
+    its doc_set and count, the same query without scores."""
     scores, docs = _clause_rows(s, SHAPES)
+    doc_sets = _doc_sets(s, SHAPES) if filter_context else None
     n = s.index.N
     if batch:
         got_all: dict = {name: [] for name in SHAPES}
@@ -168,6 +185,10 @@ def _check(s: Searcher, batch: bool):
                    for k, rows in got_all.items()}
     for name, q in SHAPES.items():
         want = _reference(s, q, scores, docs)
+        if filter_context:
+            hits = {d for d, _ in want}
+            assert sorted(doc_sets[name]) == sorted(hits), name
+            assert s.count(q) == len(hits), name
         if batch:
             got = got_all[name]
         else:
@@ -200,7 +221,9 @@ SEARCHERS = {
 
 @pytest.mark.parametrize("config", list(SEARCHERS))
 def test_term_bool_matches_reference(plain, config):
-    _check(Searcher(plain, **SEARCHERS[config]), batch=config != "default")
+    # scoring settings do not change a doc set: filter context once
+    _check(Searcher(plain, **SEARCHERS[config]), batch=config != "default",
+           filter_context=config == "default")
 
 
 @pytest.mark.parametrize("index_kind", ["deleted", "two_segments"])
@@ -240,3 +263,20 @@ def test_wand_bounds_cache_keys_on_must_terms(plain):
         got = [(r["doc_id"], np.float32(r["score"]))
                for r in s.top_k(q, 10).collect()]
         assert want and got == want, q
+
+
+def test_count_honours_min_should_match(spark, tmp_path):
+    """Filter context keeps BooleanQuery's minimum-should-match: a
+    count equals the number of top_k hits."""
+    d = str(tmp_path / "msm_count")
+    build_index(spark, spark.createDataFrame(make_corpus(200, seed=5)), d,
+                **BUILD)
+    s = Searcher(Index(spark, d))
+    for q, want in (
+        (BoolQ(should=(TermQ("license"), TermQ("file"), TermQ("the")),
+               min_should_match=2), 118),
+        (BoolQ(must=(TermQ("license"),), should=(TermQ("file"),),
+               min_should_match=1), 51),
+    ):
+        assert s.top_k(q, 200).count() == want, q
+        assert s.count(q) == want, q
