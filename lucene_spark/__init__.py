@@ -4,11 +4,14 @@ A from-scratch re-expression of the reference engine's capabilities
 (Apache Lucene, jpountz/lucene @ /root/reference) on Spark DataFrames:
 
 - index build  = tokenize (Arrow UDF) -> invert (map-side combine) ->
-  salted repartition by (term-bucket, docid-range) -> FOR/PFor block
-  encode -> Parquet postings partitioned by term bucket
-- query serve  = term-stats broadcast -> bucket-pruned postings scan ->
-  vectorized block decode + float32 BM25 -> per-partition top-k ->
-  TakeOrderedAndProject global merge
+  grouped encode per (term-bucket, docid-range salt) -> FOR/PFor block
+  encode -> flat Parquet postings (``bucket`` is a column, not a
+  directory partition; lookups push it down as a filter)
+- query serve  = term-stats collect to the driver (memoized per term) ->
+  bucket-filtered postings scan -> vectorized block decode + float32
+  BM25 -> per-partition top-k -> TakeOrderedAndProject global merge
+- worker hook  = importing the package inside a Spark task makes the
+  per-task zip-directory invalidation stat-checked (``worker_zipcache``)
 
 Nothing is copied from the reference; reference files are cited in
 docstrings (file:line) for the *semantics* each module replicates.
@@ -16,4 +19,7 @@ docstrings (file:line) for the *semantics* each module replicates.
 
 __version__ = "0.1.0"
 
+from lucene_spark import worker_zipcache
 from lucene_spark.session import get_spark  # noqa: F401
+
+worker_zipcache.install()

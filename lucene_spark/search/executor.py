@@ -76,6 +76,15 @@ _DOC_PREDICATES = (P.FieldFilter, P.GeoBoxQ, P.GeoDistanceQ, P.ShapeQ)
 _MULTI_TERM = (P.PrefixQ, P.WildcardQ, P.RegexpQ, P.TermRangeQ, P.TermInSetQ)
 
 
+def empty_frame(spark, schema: T.StructType) -> DataFrame:
+    """A zero-row frame of ``schema`` planned in the JVM alone;
+    ``createDataFrame([])`` scans a PythonRDD, which runs Python tasks
+    only to return nothing."""
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
+
+
 def _constant_score_multiterm(q) -> bool:
     return (isinstance(q, _MULTI_TERM)
             and getattr(q, "rewrite", "constant_score") == "constant_score")
@@ -871,7 +880,7 @@ class Searcher:
         return agg
 
     def _empty_scored(self) -> DataFrame:
-        return self.index.spark.createDataFrame([], _SCORE_SCHEMA)
+        return empty_frame(self.index.spark, _SCORE_SCHEMA)
 
     @staticmethod
     def _cand(df: DataFrame, candidates) -> DataFrame:

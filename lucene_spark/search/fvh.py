@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lucene_spark.search import plans as P
+from lucene_spark.search.executor import empty_frame
 
 # BaseFragmentsBuilder.java:48-63 — the stock colored tag sets
 COLORED_PRE_TAGS = tuple(
@@ -645,7 +646,7 @@ def fvh_highlight(
     term_set = fq.term_set_for(fld)
     root = fq.root_for(fld)
     if not term_set or root is None:
-        return hits.sparkSession.createDataFrame([], _FVH_SCHEMA)
+        return empty_frame(hits.sparkSession, _FVH_SCHEMA)
     # TermInfo weight = log(numDocs/(df+1)) + 1 (FieldTermStack.java:89)
     num_docs = index.doc_count_for(field)
     stats = index.stats_for_terms(sorted(term_set), field)

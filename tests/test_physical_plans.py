@@ -15,6 +15,7 @@ visible in the executed plan (SURVEY.md §4 / the .explain discipline).
   UDF), counted by ``udf_evals``
 - filter context: a doc set is the scored plan's doc_id column, so it
   has the scored plan's scans and shuffles
+- empty results: a query that resolves to nothing plans no Python task
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ from lucene_spark.corpus import make_corpus
 from lucene_spark.index import Index, build_index
 from lucene_spark.pipeline import textstats
 from lucene_spark.search import BoolQ, PhraseQ, PrefixQ, Searcher, TermQ
+from lucene_spark.search.executor import _SCORE_SCHEMA
 
 
 @pytest.fixture(scope="module")
@@ -269,6 +271,16 @@ def test_term_bool_count_one_scan(searcher):
               min_should_match=2)
     plan = plan_of(searcher.doc_set(q).groupBy().count())
     assert plan.count("FileScan parquet") == 1, plan
+
+
+def test_empty_result_runs_no_python(searcher):
+    """A query that resolves to nothing is a JVM-only empty relation,
+    not a scan of an empty PythonRDD (which still runs Python tasks)."""
+    df = searcher.top_k(TermQ("zzabsentzz"), 10)
+    assert df.collect() == []
+    plan = plan_of(df)
+    assert not re.search(r"ExistingRDD|Python|InPandas", plan), plan
+    assert df.schema == _SCORE_SCHEMA
 
 
 def test_ann_probe_partition_pruned(spark, tmp_path):
