@@ -850,13 +850,13 @@ def _q_bool(builder, k: int):
     return fn
 
 
-def _q_bool_wand(builder, k: int):
-    """Boolean top-k with the block-max WAND route forced on
-    (wand_min_postings=0): verifies the pruned distributed plan returns
-    the same top-k as the oracle, not just the plain one-scan plan."""
+def _q_bool_top_k(builder, k: int):
+    """Boolean top-k through the default Searcher.top_k: checks the
+    top-k collector (TakeOrderedAndProject over the one-scan plan) of a
+    boolean OR end to end, not just the scored doc set."""
 
     def fn(spark, sf_dir):
-        s = Searcher(_get_index(spark, sf_dir), wand_min_postings=0)
+        s = Searcher(_get_index(spark, sf_dir))
         hits = s.top_k(builder(), k)
         return (
             hits.withColumn("score_r", F.round(F.col("score"), 4))
@@ -2622,10 +2622,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "term_topk": _q_term("vector", 10),
         "term_topk_hot": _q_term("the", 100),
         "bool_or_topk": _q_bool(lambda: BoolQ(should=(TermQ("merge"), TermQ("sort"))), 20),
-        # same query forced through the distributed block-max WAND route
-        # (wand_min_postings=0 overrides the cost gate): identical top-k
-        # contract, exercised end-to-end against the same oracle
-        "bool_or_wand_topk": _q_bool_wand(
+        # same query through the default top_k collector, end to end
+        # against the same oracle
+        "bool_or_wand_topk": _q_bool_top_k(
             lambda: BoolQ(should=(TermQ("merge"), TermQ("sort"))), 20
         ),
         "bool_and_topk": _q_bool(lambda: BoolQ(must=(TermQ("filter"), TermQ("window"))), 20),

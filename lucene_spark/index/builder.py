@@ -64,7 +64,7 @@ from pyspark.sql import types as T
 
 from lucene_spark.analysis import analyze_batch
 from lucene_spark.index import commits as _commits
-from lucene_spark.codec import competitive_impacts, encode_posting_blocks, encode_value_stream
+from lucene_spark.codec import encode_posting_blocks, encode_value_stream
 
 BLOCK_STRUCT = T.StructType(
     [
@@ -115,21 +115,6 @@ POSTINGS_SCHEMA = T.StructType(
         # aligned with the pos stream; b"" when built without payloads
         T.StructField("pay", T.BinaryType()),
         T.StructField("bucket", T.IntegerType()),
-        # row-level pareto impacts (CompetitiveImpactAccumulator over the
-        # whole (term, salt) run): lets WAND-style planners read clause
-        # score upper bounds with a column-pruned scan of
-        # (term, salt, row_impacts) — never touching the block bytes
-        T.StructField(
-            "row_impacts",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("freq", T.IntegerType()),
-                        T.StructField("norm", T.IntegerType()),
-                    ]
-                )
-            ),
-        ),
     ]
 )
 
@@ -660,21 +645,24 @@ def _encode_group(with_positions: bool, with_offsets: bool = False,
                     "off": off_bin,
                     "pay": pay_bin,
                     "bucket": int(g["bucket"].iat[0]),
-                    "row_impacts": [
-                        {"freq": int(a), "norm": int(b)}
-                        for a, b in competitive_impacts(freqs, norms)
-                    ],
                 }
             )
-        return pd.DataFrame(
-            out_rows,
-            columns=[
-                "field", "term", "salt", "df", "ttf", "blocks", "pos", "off",
-                "pay", "bucket", "row_impacts",
-            ],
-        )
+        return pd.DataFrame(out_rows, columns=POSTINGS_SCHEMA.fieldNames())
 
     return fn
+
+
+def _read_postings(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Segment postings unioned for a merge, projected to the columns of
+    POSTINGS_SCHEMA: a column an older build wrote and nothing reads is
+    not shipped to the merge UDF. A column missing from some segments
+    (a pre-upgrade segment) is null-filled."""
+    allp = spark.read.parquet(paths[0])
+    for p in paths[1:]:
+        allp = allp.unionByName(spark.read.parquet(p), allowMissingColumns=True)
+    return allp.select(
+        *[c for c in POSTINGS_SCHEMA.fieldNames() if c in allp.columns]
+    )
 
 
 def _parquet_rows(path: str) -> int:
@@ -1263,25 +1251,11 @@ def compact_index(
                     "off": off_bin,
                     "pay": pay_bin,
                     "bucket": int(g["bucket"].iat[0]),
-                    "row_impacts": [
-                        {"freq": int(a), "norm": int(b)}
-                        for a, b in competitive_impacts(f, nm)
-                    ],
                 }
             )
-        return pd.DataFrame(
-            out_rows,
-            columns=[
-                "field", "term", "salt", "df", "ttf", "blocks", "pos", "off",
-                "pay", "bucket", "row_impacts",
-            ],
-        )
+        return pd.DataFrame(out_rows, columns=POSTINGS_SCHEMA.fieldNames())
 
-    seg_postings = [spark.read.parquet(p) for p in as_list(paths["postings"])]
-    allp = seg_postings[0]
-    for sp in seg_postings[1:]:
-        allp = allp.unionByName(sp, allowMissingColumns=True)
-    allp = allp.withColumn(
+    allp = _read_postings(spark, as_list(paths["postings"])).withColumn(
         "first_doc", F.element_at(F.col("blocks"), 1)["first_docid"]
     )
     merged = allp.groupBy("bucket", "salt").applyInPandas(
@@ -1395,12 +1369,11 @@ def merge_adjacent_segments(
     merge by CONCATENATION — blocks are self-anchored (first_docid), so
     a term's block lists append in segment order with no decode, no
     re-delta. Only positions/offsets/payload streams re-encode (their
-    framing has a length header), and competitive impacts re-prune
-    (CompetitiveImpactAccumulator.addAll union semantics). Terms
-    present in a single source segment pass through byte-identical.
-    Deletes stay masked at read time (reclaim remains compact_index's
-    job, like Lucene where merges drop deletes only when the merged
-    segment includes them — ours defers to the full compact)."""
+    framing has a length header). Terms present in a single source
+    segment pass through byte-identical. Deletes stay masked at read
+    time (reclaim remains compact_index's job, like Lucene where merges
+    drop deletes only when the merged segment includes them — ours
+    defers to the full compact)."""
     with open(os.path.join(index_dir, "manifest.json")) as f:
         manifest = json.load(f)
     as_list = lambda v: [v] if isinstance(v, str) else list(v)  # noqa: E731
@@ -1439,16 +1412,9 @@ def merge_adjacent_segments(
                     "off": bytes(r["off"]) if r["off"] is not None else b"",
                     "pay": bytes(r["pay"]) if r["pay"] is not None else b"",
                     "bucket": int(r["bucket"]),
-                    "row_impacts": list(r["row_impacts"]),
                 })
                 continue
             blocks = [b for _, row in g.iterrows() for b in row["blocks"]]
-            imp_f = np.asarray(
-                [p["freq"] for _, row in g.iterrows()
-                 for p in row["row_impacts"]], dtype=np.int64)
-            imp_n = np.asarray(
-                [p["norm"] for _, row in g.iterrows()
-                 for p in row["row_impacts"]], dtype=np.int64)
 
             def _cat_stream(col):
                 vals = [
@@ -1469,25 +1435,11 @@ def merge_adjacent_segments(
                 "off": _cat_stream("off") if with_offsets else b"",
                 "pay": _cat_stream("pay") if with_payloads else b"",
                 "bucket": int(g["bucket"].iat[0]),
-                "row_impacts": [
-                    {"freq": int(a), "norm": int(b)}
-                    for a, b in competitive_impacts(imp_f, imp_n)
-                ],
             })
-        return pd.DataFrame(
-            out_rows,
-            columns=[
-                "field", "term", "salt", "df", "ttf", "blocks", "pos",
-                "off", "pay", "bucket", "row_impacts",
-            ],
-        )
+        return pd.DataFrame(out_rows, columns=POSTINGS_SCHEMA.fieldNames())
 
     sl = slice(start, start + count)
-    allp = spark.read.parquet(p_post[sl.start])
-    for p in p_post[sl.start + 1 : sl.stop]:
-        allp = allp.unionByName(
-            spark.read.parquet(p), allowMissingColumns=True
-        )
+    allp = _read_postings(spark, p_post[sl])
     merged = allp.groupBy("bucket", "salt").applyInPandas(
         merge_rows, schema=POSTINGS_SCHEMA
     )

@@ -23,7 +23,7 @@ Two scoring modes:
 
 from __future__ import annotations
 
-from collections import Counter, OrderedDict
+from collections import Counter
 
 import math
 
@@ -178,57 +178,25 @@ _TAGGED_SCHEMA = T.StructType(
 )
 
 
-def _tagged_decode(kinds: dict, weights: dict, score, n_must: int, pruned: bool):
-    """The one decode of a term-leaf BoolQ, shared by its plain and WAND
-    plans: postings rows -> (doc_id, kind, score) batches, every row
-    tagged with its term's clause kind. Terms in ``weights`` are scored
-    with ``score`` (Searcher._scorer); FILTER / MUST_NOT rows carry score
-    0 and are never pruned.
-
-    ``pruned`` (the WAND plan): rows also carry their salt's bounds
-    (m_ts, others, must_cnt) and __theta. A scoring block is skipped when
-    block_max + others < θ, a scoring row when its salt lacks a MUST term
-    (BlockMaxConjunction advance). A missing bound (NaN: no bounds row,
-    or inf - inf) is unknown and never prunes."""
+def _tagged_decode(kinds: dict, weights: dict, score):
+    """The one decode of a term-leaf BoolQ: postings rows -> (doc_id,
+    kind, score) batches, every row tagged with its term's clause kind.
+    Terms in ``weights`` are scored with ``score`` (Searcher._scorer);
+    FILTER / MUST_NOT rows carry score 0."""
 
     def fn(iterator):
         for pdf in iterator:
-            if not len(pdf):
-                continue
-            th = float(pdf["__theta"].iat[0]) if pruned else -np.inf
             docs, tags, scores = [], [], []
             for row in pdf.itertuples(index=False):
                 kind = kinds[row.term]
-                w = weights.get(row.term)
-                if w is None:  # FILTER / MUST_NOT: match only
-                    for blk in row.blocks:
-                        d = decode_block(blk)[0]
-                        docs.append(d)
-                        tags.append(np.full(len(d), kind, np.int32))
-                        scores.append(np.zeros(len(d)))
-                    continue
-                own = others = np.inf
-                if pruned:
-                    if (n_must and pd.notna(row.must_cnt)
-                            and int(row.must_cnt) < n_must):
-                        continue  # conjunction impossible in this shard
-                    if pd.notna(row.others):
-                        others = row.others
-                    if pd.notna(row.m_ts):
-                        own = row.m_ts
+                w = weights.get(row.term)  # None: FILTER / MUST_NOT
                 for blk in row.blocks:
-                    if pruned:
-                        bmax = (
-                            _impact_max(score, blk["impacts"], w)
-                            if len(blk["impacts"])
-                            else own
-                        )
-                        if bmax + others < th:
-                            continue
                     d, f, nm = decode_block(blk)
                     docs.append(d)
                     tags.append(np.full(len(d), kind, np.int32))
-                    scores.append(score(f, nm, w))
+                    scores.append(
+                        np.zeros(len(d)) if w is None else score(f, nm, w)
+                    )
             if docs:
                 yield pd.DataFrame(
                     {
@@ -254,17 +222,6 @@ def _decode_positions_row(pos_bin: bytes, freqs: np.ndarray) -> list:
 
 
 class Searcher:
-    # Below this many estimated postings (sum of clause dfs) the WAND
-    # plan's extra work — the bounds pass plus the θ subtree (per-term
-    # top-k samples, candidate verification) fused into the query's one
-    # action — costs more than the decode it would save, so the query
-    # takes the plain plan: the same one-scan decode and assembly
-    # (_term_bool_plan) without bounds or θ. Cost-based, like the
-    # reference's rewrite decisions; at 100 TB any hot clause clears
-    # this instantly.
-    WAND_MIN_POSTINGS = 5_000_000
-    WAND_META_CACHE_MAX = 32  # persisted bounds DataFrames kept (LRU)
-
     # Phrase phase-1: once the rarest slot's df is at most this, the
     # position shuffle is already bounded tightly enough that decoding
     # the REMAINING slots' doc blocks (one scan + semi-join apiece) costs
@@ -275,8 +232,7 @@ class Searcher:
     # must undercut the unpruned position shuffle by this factor
     PHRASE_CONJ_PRUNE_RATIO = 0.5
 
-    def __init__(self, index: Index, scoring: str = "lucene", prune: bool = True,
-                 wand_min_postings: int | None = None,
+    def __init__(self, index: Index, scoring: str = "lucene",
                  similarity: str | object | None = None,
                  query_cache=None, **sim_kwargs):
         assert scoring in ("lucene", "double")
@@ -297,15 +253,6 @@ class Searcher:
             self.sim = None
         self.index = index
         self.scoring = scoring
-        self.prune_enabled = prune  # block-max WAND for boolean top-k
-        self.wand_min_postings = (
-            self.WAND_MIN_POSTINGS if wand_min_postings is None else wand_min_postings
-        )
-        # per-reader MaxScoreCache analog: LRU of persisted (term, salt)
-        # bounds DataFrames, capped so a long-running query service with
-        # diverse hot terms can't accumulate persisted blocks without
-        # bound (evicted entries are unpersisted, like querycache.py)
-        self._wand_meta_cache: OrderedDict = OrderedDict()
         # LRUQueryCache analog (search/querycache.py): caches persisted
         # doc-set DataFrames for repeated filter-context queries
         self.query_cache = query_cache
@@ -707,7 +654,7 @@ class Searcher:
                 .select("doc_id", new_score.alias("score"))
             )
         if isinstance(q, P.BoolQ):
-            return self._bool_scored(q, k=k, candidates=candidates)
+            return self._bool_scored(q, candidates=candidates)
         if isinstance(q, P.DisMaxQ):
             return self._dismax_scored(q, candidates=candidates)
         if isinstance(q, P.CoveringQ):
@@ -884,16 +831,10 @@ class Searcher:
 
     @staticmethod
     def _cand(df: DataFrame, candidates) -> DataFrame:
-        """DocID allow-list filter (rescore second pass): a literal list
-        pushes down as an IN predicate; a DataFrame allow-list (the WAND
-        θ-verification, where the candidates are themselves a sub-plan)
-        applies as a broadcast semi-join so sample + verification run as
-        ONE Spark action instead of collect-then-isin."""
+        """DocID allow-list filter (rescore second pass): the literal list
+        pushes down as an IN predicate."""
         if candidates is None:
             return df
-        if isinstance(candidates, DataFrame):
-            ids = candidates.select("doc_id").distinct()
-            return df.join(F.broadcast(ids), "doc_id", "left_semi")
         return df.filter(F.col("doc_id").isin([int(d) for d in candidates]))
 
     def _boosted(self, df: DataFrame, boost: float) -> DataFrame:
@@ -1535,7 +1476,7 @@ class Searcher:
 
         return self._freq_scored(pos, ta_freq, w, fld)
 
-    def _bool_scored(self, q: P.BoolQ, k: int | None = None,
+    def _bool_scored(self, q: P.BoolQ,
                      candidates: list[int] | None = None) -> DataFrame:
         """BooleanQuery semantics (BooleanQuery.java:77-176,
         Boolean2ScorerSupplier.java:100-248): score = Σ scoring clauses;
@@ -1544,10 +1485,9 @@ class Searcher:
 
         Term-leaf queries (every MUST/SHOULD clause a TermQ of one field,
         no term in two clauses) take the one-scan plan: one postings scan
-        and one decode over all their terms, one groupBy — the decode and
-        assembly the block-max WAND plan runs with bounds and θ, here with
-        neither (see _term_bool_plan). Everything else takes the join
-        tree below: one scored sub-plan per clause."""
+        and one decode over all their terms, one groupBy (see
+        _term_bool_plan). Everything else takes the join tree below: one
+        scored sub-plan per clause."""
         st = self._term_bool_state(q)
         if st == "empty":
             return self._empty_scored()
@@ -2132,17 +2072,13 @@ class Searcher:
         HitQueue tie-break (search/HitQueue.java:78-84). Spark physical
         plan: per-partition top-k + driver merge (TakeOrderedAndProject),
         exactly the CollectorManager reduce contract
-        (IndexSearcher.java:660-712). The candidates come from
-        _topk_scored, the routine top_k_batch shares."""
-        q = P.rewrite(q)
-        if field_filters:
-            # no WAND: its θ ignores the filters, so it could overshoot
-            # the k-th best filtered total and prune true hits
-            scored = self.scored(q, k=k)
-            for ff in field_filters:
-                scored = scored.join(self.doc_set(ff), "doc_id", "left_semi")
-        else:
-            scored = self._topk_scored(q, k)
+        (IndexSearcher.java:660-712). The candidates are scored(q, k),
+        as in top_k_batch."""
+        # the filters drop docs after scoring, so block-max pruning
+        # against the unfiltered running top-k could skip true hits
+        scored = self.scored(q, k=None if field_filters else k)
+        for ff in field_filters:
+            scored = scored.join(self.doc_set(ff), "doc_id", "left_semi")
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def top_k_batch(self, queries: dict[str, object], k: int) -> DataFrame:
@@ -2161,17 +2097,16 @@ class Searcher:
         run independently, one reduce at the end
         (IndexSearcher.java:660-712).
 
-        Each query's candidates come from _topk_scored, the same routine
-        top_k uses, so a WAND-routed query carries its θ subtree inside
-        this one action and building the batch runs no Spark job beyond
-        the memoized term-stats lookups. The per-query limit is a
+        Each query's candidates are scored(q, k), as in top_k, so
+        building the batch runs no Spark job beyond the memoized
+        term-stats lookups. The per-query limit is a
         row_number window partitioned by query_id — one shuffle of at
         most ~(candidates) rows."""
         from pyspark.sql.window import Window
 
         u = None
         for qid, q in queries.items():
-            p = self._topk_scored(P.rewrite(q), k).select(
+            p = self.scored(q, k=k).select(
                 F.lit(qid).alias("query_id"), "doc_id", "score"
             )
             u = p if u is None else u.unionByName(p)
@@ -2241,94 +2176,12 @@ class Searcher:
         )
 
     # ------------------------------------------------------------------
-    # block-max WAND for boolean top-k
+    # term-leaf boolean plan
     # ------------------------------------------------------------------
 
-    def _topk_scored(self, q, k: int) -> DataFrame:
-        """The one top-k routine behind top_k and top_k_batch: a
-        rewritten query -> (doc_id, score) rows that contain its top k.
-        Boolean queries over plain terms take the one-action block-max
-        WAND plan when pruning is on; everything else is scored(q, k)."""
-        if self.prune_enabled and isinstance(q, P.BoolQ):
-            wand = self._bool_topk_wand(q, k)
-            if wand is not None:
-                return wand
-        return self.scored(q, k=k)
-
-    def _bool_topk_wand(self, q: P.BoolQ, k: int) -> DataFrame | None:
-        """Block-max WAND / block-max conjunction for top-k boolean
-        queries over plain term clauses (search/WANDScorer.java:38-140,
-        search/BlockMaxConjunctionScorer.java, MaxScoreCache.java).
-
-        Distributed shape, all inside ONE Spark action:
-        1. θ — a sound lower bound on the k-th best total score: the
-           union of per-clause top-k (single-term block-max pruned),
-           then exact totals for that candidate union (candidate-bounded
-           scored(), i.e. the plain one-scan plan; skipped for pure
-           disjunctions, where partial sums over the samples already
-           lower-bound totals), reduced to a one-row {__theta} DataFrame.
-        2. salt-level cross-clause bounds — one column-pruned read of
-           (term, salt, row_impacts): salt_max[t][s] = max possible score
-           of t in docID shard s (no block bytes touched).
-        3. pruned decode — a block of term t in salt s is skipped when
-           block_max(t) + Σ_{t'≠t} salt_max[t'][s] < θ (WAND upper
-           bound); for conjunctions a salt missing ANY must term is
-           skipped wholesale (BlockMaxConjunction advance). Every true
-           top-k doc's blocks survive (each covering block's bound ≥ its
-           total ≥ θ), so results equal the unpruned plan's. θ reaches
-           the decode through a broadcast cross join, so no θ value is
-           ever collected to the driver.
-
-        Returns None when the WAND gate fails (see _wand_state) and the
-        empty scored frame when the query provably has no hits."""
-        st = self._wand_state(q, k)
-        if st is None:
-            return None
-        if st == "empty":
-            return self._empty_scored()
-        sample = None
-        for t, w in st["weights"].items():
-            tk = (
-                self._scored_term_rows({t: w}, k, st["field"])
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-            )
-            sample = tk if sample is None else sample.unionByName(tk)
-        if q.must or st["msm"] > 1 or q.filter or q.must_not:
-            # exact totals for the sampled candidates
-            totals = self.scored(q, candidates=sample).select(
-                F.col("score").alias("__tot")
-            )
-        else:
-            # pure disjunction: per-doc partial sums over the samples
-            totals = sample.groupBy("doc_id").agg(
-                F.sum("score").alias("__tot")
-            )
-        # θ soundness: every verified total or partial sum is ≤ that
-        # doc's true total, so their k-th best is ≤ the true k-th best;
-        # the shave covers float reassociation against stored totals.
-        theta = (
-            totals.orderBy(F.desc("__tot"))
-            .limit(k)
-            .agg(
-                F.when(F.count(F.lit(1)) >= k, F.min("__tot"))
-                .otherwise(F.lit(float("-inf")))
-                .alias("__t0")
-            )
-            .select(
-                (
-                    F.col("__t0")
-                    - F.abs(F.col("__t0")) * F.lit(1e-9)
-                    - F.lit(1e-12)
-                ).alias("__theta")
-            )
-        )
-        return self._wand_pruned_plan(st, theta)
-
     def _term_bool_state(self, q: P.BoolQ):
-        """Shape check + stats lookup for a term-leaf BoolQ, shared by
-        the one-scan plan (_bool_scored) and the WAND gate (_wand_state).
-        Returns None (a MUST/SHOULD clause that is not a TermQ of the
+        """Shape check + stats lookup for a term-leaf BoolQ's one-scan
+        plan (_bool_scored). Returns None (a MUST/SHOULD clause that is not a TermQ of the
         query's one field, or a term in two clauses: the join tree),
         "empty" (provably no hits), or the state dict:
 
@@ -2376,108 +2229,17 @@ class Searcher:
             "field": field,
             "kinds": kinds,
             "weights": weights,
-            "df_sum": sum(stats[t][0] for t in weights),
             "msm": msm,
             "filter": joined[_FILTER],
             "must_not": joined[_MUST_NOT],
         }
 
-    def _wand_state(self, q: P.BoolQ, k: int):
-        """The WAND gate over _term_bool_state: its state dict when
-        block-max WAND pays for this query, "empty" when the query
-        provably has no hits, else None (scored(q, k) then runs the
-        plain one-scan plan). WAND needs row_impacts (block bounds), two
-        or more scoring terms (one term has no cross-clause bound to
-        prune with) and Σdf ≥ wand_min_postings."""
-        st = self._term_bool_state(q)
-        if not isinstance(st, dict):
-            return st
-        if (
-            "row_impacts" not in self.index.postings.columns
-            or len(st["weights"]) < 2
-            or st["df_sum"] < self.wand_min_postings
-        ):
-            return None
-        return st
-
-    def _wand_pruned_plan(self, st, theta: DataFrame) -> DataFrame:
-        """Passes 2+3 (see _bool_topk_wand): distributive salt-level
-        cross-clause bounds over the scoring terms, then the term-leaf
-        plan (_term_bool_plan) — the decode and assembly the plain plan
-        runs — with those bounds and ``theta``, the one-row {__theta}
-        DataFrame, fused into its scan."""
-        weights = st["weights"]
-        field = st["field"]
-        must = sorted(t for t, kd in st["kinds"].items() if kd == _MUST)
-        score = self._scorer(field)
-
-        @F.pandas_udf(T.DoubleType())
-        def row_max_udf(term: pd.Series, imps: pd.Series) -> pd.Series:
-            out = []
-            for t, arr in zip(term, imps):
-                if arr is None or len(arr) == 0:
-                    # pre-upgrade segment rows (reader unions with
-                    # allowMissingColumns): bound unknown -> +inf, never
-                    # 0.0, or pruning would silently drop their blocks
-                    out.append(np.inf)
-                else:
-                    out.append(_impact_max(score, arr, weights[t]))
-            return pd.Series(out)
-
-        # ---- pass 2: salt-level upper bounds, computed DISTRIBUTIVELY ----
-        # Per-row max score executor-side (column-pruned read, no block
-        # bytes), reduced to one scalar per (term, salt), then per-salt
-        # cross-clause aggregates. Nothing is collected to the driver:
-        # at 10^10 docs the (term, salt) metadata is millions of rows,
-        # which pass 3 consumes via a join (AQE broadcasts it when small).
-        # must_cnt depends on which terms are MUST, so the key names them.
-        cache_key = (field, frozenset(weights.items()), tuple(must))
-        bounds = self._wand_meta_cache.get(cache_key)
-        if bounds is not None:
-            self._wand_meta_cache.move_to_end(cache_key)
-        else:
-            light = self.index.postings_for_terms(list(weights), field).select(
-                "term", "salt", "row_impacts"
-            )
-            ts_max = (
-                light.withColumn("m_ts", row_max_udf("term", "row_impacts"))
-                .groupBy("term", "salt")
-                .agg(F.max("m_ts").alias("m_ts"))
-            )
-            salt_agg = ts_max.groupBy("salt").agg(
-                F.sum("m_ts").alias("salt_total"),
-                F.count(
-                    F.when(F.col("term").isin(must), F.lit(1))
-                ).alias("must_cnt"),
-            )
-            bounds = (
-                ts_max.join(salt_agg, "salt")
-                .select(
-                    "term",
-                    "salt",
-                    "m_ts",
-                    (F.col("salt_total") - F.col("m_ts")).alias("others"),
-                    "must_cnt",
-                )
-                .persist()
-            )
-            self._wand_meta_cache[cache_key] = bounds
-            while len(self._wand_meta_cache) > self.WAND_META_CACHE_MAX:
-                _, evicted = self._wand_meta_cache.popitem(last=False)
-                evicted.unpersist()
-        # ---- pass 3: pruned decode + assembly (bounds joined, not collected) ----
-        return self._term_bool_plan(st, bounds=bounds, theta=theta)
-
-    def _term_bool_plan(self, st, candidates=None, bounds: DataFrame | None = None,
-                        theta: DataFrame | None = None) -> DataFrame:
+    def _term_bool_plan(self, st, candidates=None) -> DataFrame:
         """The one-scan plan of a term-leaf BoolQ (state from
         _term_bool_state): one postings scan over every term in
         ``st["kinds"]``, one decode tagging each row with its clause kind
-        (_tagged_decode), one groupBy("doc_id") assembly. The plain plan
-        passes no ``bounds``/``theta`` and prunes nothing; the WAND plan
-        (_wand_pruned_plan) joins the salt bounds and cross-joins the
-        one-row θ into the scan. ``candidates`` filters the decoded rows
-        before the shuffle (rescore / θ verification, see _cand).
+        (_tagged_decode), one groupBy("doc_id") assembly. ``candidates``
+        filters the decoded rows before the shuffle (rescore, see _cand).
 
         A hit matches every MUST and FILTER term, no MUST_NOT term and at
         least ``msm`` SHOULD terms. Float rules are the join tree's:
@@ -2486,20 +2248,11 @@ class Searcher:
         (DisjunctionSumScorer.java:38-44); the total is cast when more
         than one MUST or a MUST+SHOULD mix adds up."""
         q, kinds, field = st["q"], st["kinds"], st["field"]
-        pruned = theta is not None
-        rows = self.index.postings_for_terms(list(kinds), field)
-        if pruned:
-            rows = (
-                rows.select("term", "salt", "blocks")
-                .join(bounds, ["term", "salt"], "left")
-                .crossJoin(F.broadcast(theta))
-            )
-        else:
-            rows = rows.select("term", "blocks")
-        n = Counter(kinds.values())
-        fn = _tagged_decode(
-            kinds, st["weights"], self._scorer(field), n[_MUST], pruned
+        rows = self.index.postings_for_terms(list(kinds), field).select(
+            "term", "blocks"
         )
+        n = Counter(kinds.values())
+        fn = _tagged_decode(kinds, st["weights"], self._scorer(field))
         decoded = self._cand(
             self._live(rows.mapInPandas(fn, schema=_TAGGED_SCHEMA)), candidates
         )

@@ -24,13 +24,9 @@ def built(spark, tmp_path_factory):
     return Index(spark, idx_dir)
 
 
-@pytest.mark.parametrize("wand_min_postings", [None, 0], ids=["default", "wand"])
-def test_batch_matches_individual(built, wand_min_postings):
-    """Every query's batched top-k equals the unpruned top_k. With
-    wand_min_postings=0 the boolean shapes take the WAND route, whose
-    θ subtree then runs inside the batch's one action."""
-    s = Searcher(built, wand_min_postings=wand_min_postings)
-    ref = Searcher(built, prune=False)
+def test_batch_matches_individual(built):
+    """Every query's batched top-k equals its own top_k."""
+    s = Searcher(built)
     suite = {
         "t1": TermQ("import"),
         "t2": TermQ("class"),
@@ -38,7 +34,7 @@ def test_batch_matches_individual(built, wand_min_postings):
         "b_and": BoolQ(must=(TermQ("def"), TermQ("class"))),
         "ph": PhraseQ(("async", "def")),
         "cs": BoolQ(must=(TermQ("chan"),), filter=(PrefixQ("def"),)),
-        # the WAND shapes of test_e2e_search::test_bool_topk_wand_identical
+        # term-leaf boolean shapes: one scan, every clause kind
         "w_or": BoolQ(should=(TermQ("the"), TermQ("import"), TermQ("return"))),
         "w_must2": BoolQ(must=(TermQ("import"), TermQ("return"))),
         "w_msm2": BoolQ(should=(TermQ("the"), TermQ("import"), TermQ("return")),
@@ -49,11 +45,6 @@ def test_batch_matches_individual(built, wand_min_postings):
                           filter=(TermQ("def"),)),
     }
     k = 10
-    if wand_min_postings == 0:
-        assert all(
-            isinstance(s._wand_state(q, k), dict)
-            for qid, q in suite.items() if qid.startswith("w_")
-        )
     batch = s.top_k_batch(suite, k).collect()
     got = {}
     for r in batch:
@@ -63,7 +54,7 @@ def test_batch_matches_individual(built, wand_min_postings):
     for qid, q in suite.items():
         want = [
             (i + 1, int(r["doc_id"]), np.float32(r["score"]))
-            for i, r in enumerate(ref.top_k(q, k).collect())
+            for i, r in enumerate(s.top_k(q, k).collect())
         ]
         assert want, qid
         assert sorted(got.get(qid, [])) == want, qid

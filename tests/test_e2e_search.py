@@ -81,6 +81,29 @@ def test_term_topk_pruning_identical(built):
     assert with_prune == no_prune
 
 
+def test_term_topk_field_filters_not_pruned(built):
+    """field_filters apply after scoring, so the top-k under a filter
+    equals the filtered exhaustive ranking: block-max pruning against
+    the unfiltered top-k would skip blocks holding filtered hits."""
+    from pyspark.sql import functions as F
+
+    from lucene_spark.search.plans import FieldFilter
+
+    index, _, _ = built
+    s = Searcher(index)
+    langs = [r["lang"] for r in index.docs.select("lang").distinct().collect()]
+    for lang in sorted(langs):
+        ff = FieldFilter("lang", "=", lang)
+        for term in ("the", "import", "return"):
+            q = TermQ(term)
+            got = spark_hits(s.top_k(q, 10, field_filters=(ff,)))
+            want = spark_hits(
+                s.scored(q).join(s.doc_set(ff), "doc_id", "left_semi")
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
+            )
+            assert got == want, (lang, term)
+
+
 def test_bool_or(built):
     index, oracle, _ = built
     s = Searcher(index)
@@ -101,36 +124,6 @@ def test_bool_and(built):
         oracle.and_scores([oracle.term_scores("import"), oracle.term_scores("return")]), 20
     )
     assert_hits_equal(got, want, 20)
-
-
-@pytest.mark.parametrize("qb", [
-    lambda: BoolQ(should=(TermQ("import"), TermQ("return"))),
-    lambda: BoolQ(should=(TermQ("the"), TermQ("license"), TermQ("import"))),
-    lambda: BoolQ(must=(TermQ("import"), TermQ("return"))),
-    lambda: BoolQ(must=(TermQ("license"),), should=(TermQ("import"),)),
-    lambda: BoolQ(should=(TermQ("the"), TermQ("import"), TermQ("return")),
-                  min_should_match=2),
-    # filter / must_not shapes route through the fused θ verification
-    # (exact candidate-bounded totals) — WANDScorer with required /
-    # prohibited clauses
-    lambda: BoolQ(must=(TermQ("import"), TermQ("return")),
-                  must_not=(TermQ("var_17"),)),
-    lambda: BoolQ(should=(TermQ("import"), TermQ("return")),
-                  filter=(TermQ("license"),)),
-])
-def test_bool_topk_wand_identical(built, qb):
-    """Block-max WAND must not change boolean top-k results — the
-    TestWANDScorer on/off invariant (search/WANDScorer.java)."""
-    index, oracle, _ = built
-    q = qb()
-    # wand_min_postings=0 forces the WAND route on this tiny corpus
-    # (production default only engages it when the decode is big enough
-    # to amortize the θ round-trips)
-    pruned = spark_hits(
-        Searcher(index, prune=True, wand_min_postings=0).top_k(q, 15)
-    )
-    plain = spark_hits(Searcher(index, prune=False).top_k(q, 15))
-    assert pruned == plain
 
 
 def test_fuzzy_scored_blended(built):

@@ -8,7 +8,7 @@ import pytest
 from lucene_spark.corpus import make_corpus
 from lucene_spark.index import Index, build_index
 from lucene_spark.oracle import PandasOracle
-from lucene_spark.search import BlendedTermQ, BoolQ, PhraseQ, Searcher, TermQ
+from lucene_spark.search import BlendedTermQ, PhraseQ, Searcher, TermQ
 
 N_DOCS = 250
 HEAD_CHARS = 120
@@ -133,10 +133,3 @@ def test_blended_cross_field(built2):
     want = PandasOracle.top_k(expected, 15)
     assert [d for d, _ in got] == [d for d, _ in want], (got, want)
 
-
-def test_wand_falls_back_for_field_clauses(built2):
-    index, _oc, _oh, _ = built2
-    q = BoolQ(should=(TermQ("license", field="head"), TermQ("import", field="head")))
-    a = hits(Searcher(index, prune=True, wand_min_postings=0).top_k(q, 10))
-    b = hits(Searcher(index, prune=False).top_k(q, 10))
-    assert a == b

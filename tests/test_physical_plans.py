@@ -77,7 +77,7 @@ def test_term_topk_reads_no_position_columns(searcher):
         for c in re.search(r"FileScan parquet \[([^\]]*)\]", plan).group(1).split(",")
     }
     assert "blocks" in cols, plan
-    assert not cols & {"pos", "off", "pay", "row_impacts"}, plan
+    assert not cols & {"pos", "off", "pay"}, plan
 
 
 @pytest.mark.parametrize("q", [
@@ -95,6 +95,7 @@ def test_term_bool_topk_one_scan(searcher, q):
     plan = plan_of(searcher.top_k(q, 10))
     assert plan.count("FileScan parquet") == 1, plan
     assert plan.count("MapInPandas") == 1, plan
+    assert "InMemoryRelation" not in plan, plan  # nothing persisted
 
 
 def test_bool_with_phrase_keeps_join_tree(searcher):
@@ -105,25 +106,22 @@ def test_bool_with_phrase_keeps_join_tree(searcher):
 
 
 @pytest.mark.parametrize("api", ["top_k", "top_k_batch"])
-def test_wand_plan_build_runs_no_job(searcher, api):
-    """A forced-WAND query's θ is a plan, not a collect: once the term
-    stats are memoized, building the top-k DataFrame runs no Spark job
-    through either entry point."""
-    from lucene_spark.search import plans as P
-
-    s = Searcher(searcher.index, wand_min_postings=0)
+def test_bool_plan_build_runs_no_job(searcher, api):
+    """A boolean top-k is a plan, not a collect: once the term stats are
+    memoized, building the top-k DataFrame runs no Spark job through
+    either entry point."""
+    s = searcher
     q = BoolQ(must=(TermQ("license"), TermQ("file")),
               must_not=(TermQ("java"),))
-    assert isinstance(s._wand_state(P.rewrite(q), 5), dict)  # WAND route
 
     def build():
         if api == "top_k":
             return s.top_k(q, 5)
         return s.top_k_batch({"q": q, "q2": BoolQ(should=q.must)}, 5)
 
-    build()  # warms the term-stats memo and the WAND bounds cache
+    build()  # warms the term-stats memo
     sc = searcher.index.spark.sparkContext
-    group = f"wand_plan_build_{api}"
+    group = f"bool_plan_build_{api}"
     sc.setJobGroup(group, group)
     try:
         build()

@@ -8,6 +8,7 @@ for costly multi-term iterators, LRU eviction).
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from lucene_spark.corpus import make_corpus
 from lucene_spark.index import Index, build_index
@@ -79,12 +80,13 @@ def test_function_score_multiply(built):
 
 def test_function_score_topk_matches_exhaustive(built):
     """top_k through a FunctionScoreQ must not be perturbed by inner
-    block-max pruning (k is not forwarded to the inner weight)."""
-    s_pruned = Searcher(built, prune=True)
-    s_exh = Searcher(built, prune=False)
+    block-max pruning (k is not forwarded to the inner weight): it
+    equals the exhaustive scored plan ordered by (score desc, docID asc)."""
+    s = Searcher(built)
     q = FunctionScoreQ(TermQ("the"), "length(path)")
-    a = [(r["doc_id"], np.float32(r["score"])) for r in s_pruned.top_k(q, 10).collect()]
-    b = [(r["doc_id"], np.float32(r["score"])) for r in s_exh.top_k(q, 10).collect()]
+    a = [(r["doc_id"], np.float32(r["score"])) for r in s.top_k(q, 10).collect()]
+    exh = s.scored(q).orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
+    b = [(r["doc_id"], np.float32(r["score"])) for r in exh.collect()]
     assert a == b
 
 

@@ -214,8 +214,6 @@ SEARCHERS = {
     "default": {},
     "double": {"scoring": "double"},
     "classic": {"similarity": "classic"},
-    # forced WAND: the same decode and assembly with bounds and θ
-    "wand": {"wand_min_postings": 0},
 }
 
 
@@ -249,20 +247,6 @@ def test_term_bool_takes_one_scan(plain):
     assert s._term_bool_state(
         BoolQ(must=(TermQ("import"), PhraseQ(("import", "os"))))
     ) is None
-
-
-def test_wand_bounds_cache_keys_on_must_terms(plain):
-    """The WAND bounds count MUST terms per salt, so a disjunction and a
-    conjunction over the same terms and weights must not share them."""
-    s = Searcher(plain, wand_min_postings=0)
-    ref = Searcher(plain, prune=False)
-    terms = (TermQ("import"), TermQ("return"))
-    for q in (BoolQ(should=terms), BoolQ(must=terms)):
-        want = [(r["doc_id"], np.float32(r["score"]))
-                for r in ref.top_k(q, 10).collect()]
-        got = [(r["doc_id"], np.float32(r["score"]))
-               for r in s.top_k(q, 10).collect()]
-        assert want and got == want, q
 
 
 def test_count_honours_min_should_match(spark, tmp_path):

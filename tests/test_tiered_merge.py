@@ -20,7 +20,7 @@ from lucene_spark.index import (
     merge_adjacent_segments,
 )
 from lucene_spark.index.builder import _tiered_allowed_count
-from lucene_spark.search import BoolQ, PhraseQ, Searcher, TermQ
+from lucene_spark.search import PhraseQ, Searcher, TermQ
 
 
 def _mk_docs(spark, start, n):
@@ -95,17 +95,6 @@ def test_bounded_segments_under_appends(spark, tmp_path_factory):
 
     report = check_index(Index(spark, idx_dir))
     assert report, report
-
-    # WAND route agrees with the exhaustive route on the merged index
-    q = BoolQ(should=(TermQ("merge"), TermQ("sort")))
-    plain = [(r.doc_id, round(r.score, 9))
-             for r in Searcher(Index(spark, idx_dir), scoring="double")
-             .top_k(q, 10).collect()]
-    wand = [(r.doc_id, round(r.score, 9))
-            for r in Searcher(Index(spark, idx_dir), scoring="double",
-                              wand_min_postings=0)
-            .top_k(q, 10).collect()]
-    assert plain == wand
 
 
 def test_merge_slice_validation(spark, tmp_path_factory):
