@@ -904,7 +904,7 @@ def _q_sim_zoo(term: str):
 def _q_wordbreak(term: str, combine_terms: tuple, k: int):
     """WordBreakSpellChecker gate: break suggestions for ``term``
     (max_changes=2, so the recursion is exercised) plus combine
-    suggestions for ``combine_terms`` — one distributed stats lookup
+    suggestions for ``combine_terms`` — one terms-dictionary lookup
     each, reference recursion driver-side (search/wordbreak.py)."""
 
     def fn(spark, sf_dir):

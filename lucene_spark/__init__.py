@@ -7,7 +7,8 @@ A from-scratch re-expression of the reference engine's capabilities
   grouped encode per (term-bucket, docid-range salt) -> FOR/PFor block
   encode -> flat Parquet postings (``bucket`` is a column, not a
   directory partition; lookups push it down as a filter)
-- query serve  = term-stats collect to the driver (memoized per term) ->
+- query serve  = driver-side terms-dictionary lookup (pyarrow over the
+  sorted term_stats parquet, no Spark job; memoized per term) ->
   bucket-filtered postings scan -> vectorized block decode + float32
   BM25 -> per-partition top-k -> TakeOrderedAndProject global merge
 - worker hook  = importing the package inside a Spark task makes the

@@ -32,10 +32,12 @@ stage2  docs table (doc_id, dl, norm, keyword cols) — dl captured as an
         holding the text), so this is a column-pruned projection: no
         second tokenize/regex pass over the text anywhere.
 
-stage3  term_stats (term, df, ttf, max block impact) — the terms
+stage3  term_stats (field, term, df, ttf, bucket) — the terms
         dictionary analog (blocktree Lucene90BlockTreeTermsWriter.java:198;
-        we need no FST: term lookup is a bucket-pruned Parquet filter,
-        and the stats table is small enough to broadcast).
+        we need no FST: the table is written sorted by (field, bucket,
+        term) in ~1 MB row groups, so the reader's driver-side lookup
+        reads only the row groups whose statistics span a query term —
+        see write_term_stats).
 
 manifest.json — SegmentInfos analog (index/SegmentInfos.java:113):
         global stats (N, sumTotalTermFreq), build params, per-stage AND
@@ -65,6 +67,7 @@ from pyspark.sql import types as T
 from lucene_spark.analysis import analyze_batch
 from lucene_spark.index import commits as _commits
 from lucene_spark.codec import encode_posting_blocks, encode_value_stream
+from lucene_spark.index.reader import read_parquet
 
 BLOCK_STRUCT = T.StructType(
     [
@@ -665,6 +668,25 @@ def _read_postings(spark: SparkSession, paths: list[str]) -> DataFrame:
     )
 
 
+def write_term_stats(postings: DataFrame, path: str) -> DataFrame:
+    """Write a segment's terms dictionary — one (field, term) row with
+    df, ttf summed over its salt rows and the term's bucket — and return
+    the aggregate. Rows are sorted by (field, bucket, term) within each
+    task and written in ~1 MB row groups, so each row group's min/max
+    statistics span a narrow key range and ``Index.stats_for_terms``
+    prunes a lookup to a few row groups at any dictionary size. The sort
+    is task-local: no shuffle and no job beyond the write."""
+    stats = postings.groupBy("field", "term").agg(
+        F.sum("df").alias("df"),
+        F.sum("ttf").alias("ttf"),
+        F.first("bucket").alias("bucket"),
+    )
+    stats.sortWithinPartitions("field", "bucket", "term").write.mode(
+        "overwrite"
+    ).option("parquet.block.size", 1 << 20).parquet(path)
+    return stats
+
+
 def _parquet_rows(path: str) -> int:
     """Row count of a just-written parquet directory from file footers —
     metadata only, NO Spark job. Each small count job costs a fixed
@@ -960,12 +982,7 @@ def build_index(
     if not (resume and _stage_done(index_dir, "stage3_stats")):
         t3 = time.time()
         postings = spark.read.parquet(postings_path)
-        stats = postings.groupBy("field", "term").agg(
-            F.sum("df").alias("df"),
-            F.sum("ttf").alias("ttf"),
-            F.first("bucket").alias("bucket"),
-        )
-        stats.write.mode("overwrite").parquet(stats_path)
+        stats = write_term_stats(postings, stats_path)
         docs = spark.read.parquet(docs_path)
 
         def _dl_name(f: str) -> str:
@@ -1282,12 +1299,7 @@ def compact_index(
 
     # ---- stats ----
     stats_path = os.path.join(index_dir, f"term_stats_compact{gen}")
-    mp = spark.read.parquet(postings_path)
-    mp.groupBy("field", "term").agg(
-        F.sum("df").alias("df"),
-        F.sum("ttf").alias("ttf"),
-        F.first("bucket").alias("bucket"),
-    ).write.mode("overwrite").parquet(stats_path)
+    write_term_stats(spark.read.parquet(postings_path), stats_path)
     text_col_m = manifest["text_col"]
     cfield_names = sorted(
         manifest.get("fields", {text_col_m: text_col_m}),
@@ -1455,11 +1467,7 @@ def merge_adjacent_segments(
         corpus_path
     )
     stats_path = os.path.join(index_dir, f"term_stats_{tag}")
-    spark.read.parquet(postings_path).groupBy("field", "term").agg(
-        F.sum("df").alias("df"),
-        F.sum("ttf").alias("ttf"),
-        F.first("bucket").alias("bucket"),
-    ).write.mode("overwrite").parquet(stats_path)
+    write_term_stats(spark.read.parquet(postings_path), stats_path)
 
     manifest["paths"]["postings"] = (
         p_post[: sl.start] + [postings_path] + p_post[sl.stop :]
@@ -1601,7 +1609,7 @@ def apply_dv_overlays(spark: SparkSession, docs: DataFrame, manifest: dict) -> D
     docs scan keeps its pushed filters."""
     for upd in manifest.get("paths", {}).get("dv_updates", []) or []:
         fld = upd["field"]
-        ov = spark.read.parquet(upd["path"]).select(
+        ov = read_parquet(spark, upd["path"]).select(
             "doc_id", F.col("value").alias("__dvu")
         )
         docs = (
@@ -1804,12 +1812,7 @@ def append_to_index(
         )
     docs.write.mode("overwrite").parquet(docs_path)
 
-    seg_postings = spark.read.parquet(postings_path)
-    seg_postings.groupBy("field", "term").agg(
-        F.sum("df").alias("df"),
-        F.sum("ttf").alias("ttf"),
-        F.first("bucket").alias("bucket"),
-    ).write.mode("overwrite").parquet(stats_path)
+    write_term_stats(spark.read.parquet(postings_path), stats_path)
 
     seg_aggs = [F.count(F.lit(1)).alias("n")]
     for f in field_names:

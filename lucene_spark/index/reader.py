@@ -4,6 +4,11 @@
 the committed manifest.json and expose lazy DataFrames over the Parquet
 tables it names. A reopened Index after an incremental append sees the
 new manifest version (NRT-reopen analog, search/SearcherManager.java).
+
+Opening costs no Spark job: table schemas come from the parquet footers
+(:func:`read_parquet`) and term statistics from a driver-side read of
+the terms dictionary (:meth:`Index.stats_for_terms`), so a query's only
+jobs are its final action's.
 """
 
 from __future__ import annotations
@@ -15,8 +20,49 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from lucene_spark import bm25
+
+# Spark stores the writing DataFrame's schema (StructType JSON) in the
+# key-value metadata of every parquet file it writes, empty files included
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def parquet_files(path: str) -> list[str]:
+    """The data files of one written table directory (or the file itself),
+    sorted; Spark's ``_SUCCESS`` and ``.crc`` side files are skipped."""
+    if os.path.isfile(path):
+        return [path]
+    return sorted(
+        os.path.join(path, n)
+        for n in os.listdir(path)
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    )
+
+
+def spark_schema(path: str) -> T.StructType:
+    """The schema Spark wrote into a table's footer — one footer read on
+    the driver, no Spark job."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_schema(parquet_files(path)[0]).metadata
+    return T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema pinned from the
+    footers: inference (SchemaMergeUtils.mergeSchemasInParallel) runs a
+    Spark job per read, even of one file. Segments written before a format
+    change carry fewer columns; the pinned schema is the by-name union of
+    the segments' schemas, so such a column reads as null."""
+    schema = spark_schema(paths[0])
+    for p in paths[1:]:
+        names = set(schema.fieldNames())
+        for f in spark_schema(p).fields:
+            if f.name not in names:
+                schema = schema.add(f)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 class Index:
@@ -93,6 +139,8 @@ class Index:
         # (field, term) -> (df, ttf), None for an absent term
         # (stats_for_terms)
         self._stats_memo: dict[tuple, tuple | None] = {}
+        # term_stats parquet fragments with their row-group statistics
+        self._stats_fragments: list[tuple] | None = None
 
     # --- per-field statistics (CollectionStatistics per field) ----------
 
@@ -135,7 +183,7 @@ class Index:
         """Union per-segment reads: each segment dir is its own
         partition-discovered parquet table (a multi-path read would
         reject the differing directory roots)."""
-        dfs = [self.spark.read.parquet(p) for p in paths]
+        dfs = [read_parquet(self.spark, p) for p in paths]
         out = dfs[0]
         for d in dfs[1:]:
             # allowMissingColumns: a segment appended after a format
@@ -157,7 +205,7 @@ class Index:
     @property
     def docs(self) -> DataFrame:
         def make() -> DataFrame:
-            base = self.spark.read.parquet(*self._docs_path)
+            base = read_parquet(self.spark, *self._docs_path)
             if self.manifest["paths"].get("dv_updates"):
                 from lucene_spark.index.builder import apply_dv_overlays
 
@@ -169,13 +217,13 @@ class Index:
     @property
     def term_stats(self) -> DataFrame:
         return self._memo(
-            "term_stats", lambda: self.spark.read.parquet(*self._stats_path)
+            "term_stats", lambda: read_parquet(self.spark, *self._stats_path)
         )
 
     @property
     def corpus(self) -> DataFrame:
         return self._memo(
-            "corpus", lambda: self.spark.read.parquet(*self._corpus_path)
+            "corpus", lambda: read_parquet(self.spark, *self._corpus_path)
         )
 
     @property
@@ -186,7 +234,7 @@ class Index:
         path = self.manifest["paths"].get("tvec")
         if not path:
             return None
-        return self._memo("tvec", lambda: self.spark.read.parquet(path))
+        return self._memo("tvec", lambda: read_parquet(self.spark, path))
 
     def term_vector(self, doc_id: int, field: str | None = None) -> DataFrame:
         """One document's term vector rows (IndexReader.getTermVector,
@@ -220,7 +268,7 @@ class Index:
 
         def make() -> DataFrame | None:
             hard = (
-                self.spark.read.parquet(*paths).select("doc_id")
+                read_parquet(self.spark, *paths).select("doc_id")
                 if paths
                 else None
             )
@@ -259,28 +307,38 @@ class Index:
         return self.postings.filter(cond)
 
     def stats_for_terms(self, terms: list[str], field: str | None = None) -> dict:
-        """{term: (df, ttf)} via the stats table (collects <= len(terms) rows).
+        """{term: (df, ttf)} from the terms dictionary, read on the driver.
 
         The global stats drive the Weight (TermQuery.java:61-64 collects
         index-global termStatistics once, before per-segment scoring).
-        Looked-up stats are memoized on the reader — the terms-dictionary
-        -in-RAM analog (Lucene keeps the .tip FST on heap); absent terms
-        memoize as None so repeated misses cost nothing."""
+        Like Lucene's terms dictionary (TermStates.build over the on-heap
+        .tip index), the lookup runs no Spark job: pyarrow reads the
+        ``term_stats`` parquet directly, pruned by its row-group
+        statistics on ``(field, bucket, term)`` — the order the builder
+        writes it in. Looked-up stats are memoized on the reader; absent
+        terms memoize as None so repeated misses cost nothing."""
         if not terms:
             return {}
         fld = self.resolve_field(field)
-        missing = [t for t in terms if (fld, t) not in self._stats_memo]
+        missing = [t for t in dict.fromkeys(terms) if (fld, t) not in self._stats_memo]
         if missing:
-            buckets = sorted({self.bucket_of(t, self.num_buckets) for t in missing})
-            cond = F.col("bucket").isin(buckets) & F.col("term").isin(missing)
+            import pyarrow.dataset as ds
+
+            cond = ds.field("term").isin(missing)
             if self.has_field_column:
-                cond = cond & (F.col("field") == fld)
-            rows = self.term_stats.filter(cond).select("term", "df", "ttf").collect()
-            # sum across segments (one stats row per segment per term)
+                cond = (ds.field("field") == fld) & cond
+            # Bound: rows read are limited to the row groups whose
+            # (field, bucket, term) range overlaps a query term; rows
+            # returned are at most len(missing) x the number of segments.
+            # Stats sum across segments (one row per segment per term).
             found: dict[str, tuple] = {}
-            for r in rows:
-                d0, t0 = found.get(r["term"], (0, 0))
-                found[r["term"]] = (d0 + int(r["df"]), t0 + int(r["ttf"]))
+            for frag, rgs in self._stats_row_groups(fld, missing):
+                part = frag.subset(row_group_ids=rgs).to_table(
+                    columns=["term", "df", "ttf"], filter=cond
+                )
+                for r in part.to_pylist():
+                    d0, t0 = found.get(r["term"], (0, 0))
+                    found[r["term"]] = (d0 + r["df"], t0 + r["ttf"])
             for t in missing:
                 self._stats_memo[(fld, t)] = found.get(t)
         return {
@@ -289,16 +347,41 @@ class Index:
             if self._stats_memo[(fld, t)] is not None
         }
 
-    def expand_terms(self, predicate, field: str | None = None) -> list[str]:
-        """MultiTermQuery rewrite: term-dictionary scan by Catalyst predicate
-        (MultiTermQueryConstantScoreWrapper.java). Returns matching terms."""
-        stats = self.term_stats
-        if self.has_field_column:
-            stats = stats.filter(F.col("field") == self.resolve_field(field))
-        return [
-            r["term"]
-            for r in stats.filter(predicate).select("term").distinct().collect()
-        ]
+    def _stats_row_groups(self, fld: str, terms: list[str]) -> list[tuple]:
+        """(fragment, row-group ids) of the ``term_stats`` files that may
+        hold one of ``terms`` in field ``fld``, by each row group's
+        min/max of ``field``, ``bucket`` and ``term``. The builder writes
+        the table sorted by those columns, so a row group spans a narrow
+        key range; an unsorted (older) table keeps every row group. The
+        footers are read once per Index, a point-in-time snapshot."""
+        if self._stats_fragments is None:
+            import pyarrow.dataset as ds
+
+            files = [f for p in self._stats_path for f in parquet_files(p)]
+            self._stats_fragments = [
+                (frag, [(rg.id, rg.statistics or {}) for rg in frag.row_groups])
+                for frag in ds.dataset(files, format="parquet").get_fragments()
+            ]
+        keys = [(self.bucket_of(t, self.num_buckets), t) for t in terms]
+
+        def within(st: dict | None, v) -> bool:
+            # a column without min/max statistics prunes nothing
+            return st is None or st["min"] <= v <= st["max"]
+
+        out = []
+        for frag, groups in self._stats_fragments:
+            rgs = [
+                rg
+                for rg, st in groups
+                if (not self.has_field_column or within(st.get("field"), fld))
+                and any(
+                    within(st.get("bucket"), b) and within(st.get("term"), t)
+                    for b, t in keys
+                )
+            ]
+            if rgs:
+                out.append((frag, rgs))
+        return out
 
     def high_freq_terms(self, n: int = 100, field: str | None = None,
                         order_by: str = "df") -> DataFrame:

@@ -2098,8 +2098,8 @@ class Searcher:
         (IndexSearcher.java:660-712).
 
         Each query's candidates are scored(q, k), as in top_k, so
-        building the batch runs no Spark job beyond the memoized
-        term-stats lookups. The per-query limit is a
+        building the batch runs no Spark job (term stats come from the
+        driver-side terms dictionary). The per-query limit is a
         row_number window partitioned by query_id — one shuffle of at
         most ~(candidates) rows."""
         from pyspark.sql.window import Window

@@ -9,10 +9,10 @@ Spark-first: the reference issues one ``IndexReader.docFreq`` per
 candidate substring from a driver-side recursion. Here every candidate
 substring the recursion COULD touch is enumerated up front (bounded:
 splits of a ≤max_combine_word_length term at ≤max_changes depth), their
-dfs fetched in ONE bucket-pruned stats lookup
-(``Index.stats_for_terms``), and the reference's exact recursion then
-runs driver-side against the in-memory df map — same results, one Spark
-job instead of O(candidates) index round-trips.
+dfs fetched in ONE terms-dictionary lookup (``Index.stats_for_terms``,
+a driver-side read pruned by row-group statistics), and the reference's
+exact recursion then runs driver-side against the in-memory df map —
+same results, one lookup instead of O(candidates) index round-trips.
 
 Tie-break note: the reference drains a ``PriorityQueue`` whose order for
 EQUAL keys is unspecified (heap order). This port refines ties

@@ -16,6 +16,9 @@ visible in the executed plan (SURVEY.md §4 / the .explain discipline).
 - filter context: a doc set is the scored plan's doc_id column, so it
   has the scored plan's scans and shuffles
 - empty results: a query that resolves to nothing plans no Python task
+- jobs: a fresh reader builds a top-k plan without a Spark job (term
+  stats and table schemas are read from parquet footers on the driver),
+  so a term query's first collect is its only job
 """
 
 from __future__ import annotations
@@ -27,9 +30,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from lucene_spark.corpus import make_corpus
-from lucene_spark.index import Index, build_index
+from lucene_spark.index import Index, append_to_index, build_index
 from lucene_spark.pipeline import textstats
-from lucene_spark.search import BoolQ, PhraseQ, PrefixQ, Searcher, TermQ
+from lucene_spark.search import BoolQ, PhraseQ, PrefixQ, Searcher, SynonymQ, TermQ
 from lucene_spark.search.executor import _SCORE_SCHEMA
 
 
@@ -128,6 +131,64 @@ def test_bool_plan_build_runs_no_job(searcher, api):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.fixture(scope="module")
+def job_audit_dirs(spark, searcher, tmp_path_factory):
+    """Index dirs by shape: the module's one-segment index, a two-segment
+    index (an append after the build) and a two-field index."""
+    corpus = make_corpus(200, seed=5)
+    two = str(tmp_path_factory.mktemp("plan_idx_2seg"))
+    build_index(spark, spark.createDataFrame(corpus), two, text_col="content",
+                order_cols=["repo", "path", "commit"], num_buckets=4,
+                salt_rows=64)
+    append_to_index(spark, spark.createDataFrame(make_corpus(60, seed=11)),
+                    two, order_cols=["repo", "path", "commit"])
+    mf = str(tmp_path_factory.mktemp("plan_idx_mf"))
+    corpus["head"] = corpus["content"].str.slice(0, 120)
+    build_index(spark, spark.createDataFrame(corpus), mf, text_col="content",
+                extra_fields={"head": "head"},
+                order_cols=["repo", "path", "commit"], num_buckets=4,
+                salt_rows=64)
+    return {"one_segment": searcher.index.index_dir, "two_segment": two,
+            "multifield": mf}
+
+
+def _jobs_in_group(sc, group: str, fn) -> int:
+    """Spark jobs that ``fn()`` submits, counted by the status tracker
+    once the listener bus has delivered every event."""
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("shape", ["one_segment", "two_segment", "multifield"])
+def test_fresh_reader_plan_build_runs_no_job(spark, job_audit_dirs, shape):
+    """On a fresh Index and Searcher, building a top-k runs no Spark job:
+    no schema inference for the tables it reads and no term-stats
+    lookup. The first collect of a term top-k is then its only job."""
+    sc = spark.sparkContext
+    fld = "head" if shape == "multifield" else None
+    queries = {
+        "term": TermQ("license", field=fld),
+        "bool": BoolQ(must=(TermQ("license", field=fld), TermQ("file", field=fld))),
+        "phrase": PhraseQ(("apache", "license"), field=fld),
+        "synonym": SynonymQ(("license", "file"), field=fld),
+    }
+    for name, q in queries.items():
+        s = Searcher(Index(spark, job_audit_dirs[shape]))
+        group = f"fresh_plan_{shape}_{name}"
+        assert _jobs_in_group(sc, group, lambda: s.top_k(q, 10)) == 0, name
+    s = Searcher(Index(spark, job_audit_dirs[shape]))
+    df = s.top_k(queries["term"], 10)
+    rows = []
+    assert _jobs_in_group(sc, f"fresh_collect_{shape}",
+                          lambda: rows.extend(df.collect())) == 1
+    assert rows
 
 
 def test_multiterm_expansion_broadcast(searcher):
