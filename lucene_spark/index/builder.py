@@ -284,7 +284,7 @@ def _check_doc_ids(spark: SparkSession, corpus_path: str) -> int:
             "not a unique key (duplicate rows fan out) or ids were dropped"
         )
 
-    chk = spark.read.parquet(corpus_path).agg(
+    chk = read_parquet(spark, corpus_path).agg(
         F.count(F.lit(1)).alias("rows"),
         F.countDistinct("doc_id").alias("ids"),
         F.min("doc_id").alias("lo"),
@@ -660,9 +660,9 @@ def _read_postings(spark: SparkSession, paths: list[str]) -> DataFrame:
     POSTINGS_SCHEMA: a column an older build wrote and nothing reads is
     not shipped to the merge UDF. A column missing from some segments
     (a pre-upgrade segment) is null-filled."""
-    allp = spark.read.parquet(paths[0])
+    allp = read_parquet(spark, paths[0])
     for p in paths[1:]:
-        allp = allp.unionByName(spark.read.parquet(p), allowMissingColumns=True)
+        allp = allp.unionByName(read_parquet(spark, p), allowMissingColumns=True)
     return allp.select(
         *[c for c in POSTINGS_SCHEMA.fieldNames() if c in allp.columns]
     )
@@ -747,46 +747,34 @@ def _stage_done(index_dir: str, stage: str) -> bool:
 def _invalidate_stage(index_dir: str, stage: str, path_key: str) -> None:
     """Drop a committed stage + its paths entry (used when an upstream
     stage re-runs, making the derived table stale)."""
-    mf = os.path.join(index_dir, "manifest.json")
-    if not os.path.exists(mf):
+    if not os.path.exists(os.path.join(index_dir, "manifest.json")):
         return
-    with open(mf) as f:
-        manifest = json.load(f)
+    manifest = _commits.read_manifest(index_dir)
     changed = manifest.get("stages", {}).pop(stage, None) is not None
     changed |= manifest.get("paths", {}).pop(path_key, None) is not None
     changed |= manifest.pop("with_term_vectors", None) is not None
     if changed:
-        tmp = mf + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2)
-        os.replace(tmp, mf)
+        _commits.write_manifest(index_dir, manifest)
 
 
 def _update_manifest(index_dir: str, stage: str, info: dict, extra: dict | None = None):
-    mf = os.path.join(index_dir, "manifest.json")
     manifest = {"stages": {}}
-    if os.path.exists(mf):
-        with open(mf) as f:
-            manifest = json.load(f)
+    if os.path.exists(os.path.join(index_dir, "manifest.json")):
+        manifest = _commits.read_manifest(index_dir)
     manifest.setdefault("stages", {})[stage] = info
     if extra:
         manifest.update(extra)
-    tmp = mf + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2)
-    os.replace(tmp, mf)  # atomic commit, segments_N-style
+    _commits.write_manifest(index_dir, manifest)  # atomic commit, segments_N-style
 
 
 def _swap_manifest_commit(index_dir: str, manifest: dict) -> dict:
     """Atomic manifest swap + a durable commit point: every public
     mutator ends here, so each visible index state is also an immutable
     ``commits/segments_<gen>.json`` that :func:`lucene_spark.index.commits.read_commit`
-    / ``Index(..., commit=gen)`` can reopen (IndexWriter.commit analog)."""
-    mf = os.path.join(index_dir, "manifest.json")
-    tmp = mf + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2)
-    os.replace(tmp, mf)
+    / ``Index(..., commit=gen)`` can reopen (IndexWriter.commit analog).
+    Table paths are stored relative to ``index_dir``; the returned
+    manifest keeps them resolved."""
+    _commits.write_manifest(index_dir, manifest)
     manifest["gen"] = _commits.commit_point(index_dir)
     return manifest
 
@@ -882,7 +870,7 @@ def build_index(
              "lineage": _file_lineage(corpus_path, ("doc_id",))},
         )
 
-    corpus_ids = spark.read.parquet(corpus_path)
+    corpus_ids = read_parquet(spark, corpus_path)
     n_docs = _parquet_rows(corpus_path)
 
     # ---- stage1: invert + encode postings ----
@@ -981,9 +969,9 @@ def build_index(
     stats_path = os.path.join(index_dir, "term_stats")
     if not (resume and _stage_done(index_dir, "stage3_stats")):
         t3 = time.time()
-        postings = spark.read.parquet(postings_path)
+        postings = read_parquet(spark, postings_path)
         stats = write_term_stats(postings, stats_path)
-        docs = spark.read.parquet(docs_path)
+        docs = read_parquet(spark, docs_path)
 
         def _dl_name(f: str) -> str:
             return "dl" if f == text_col else f"dl__{f}"
@@ -1063,8 +1051,7 @@ def build_index(
     # durable commit point for the completed build (no-op on a
     # resume that changed nothing -- IndexWriter.commit semantics)
     _commits.commit_point(index_dir)
-    with open(os.path.join(index_dir, "manifest.json")) as f:
-        return json.load(f)
+    return _commits.read_manifest(index_dir)
 
 
 def compact_index(
@@ -1090,8 +1077,7 @@ def compact_index(
     (still masked, still marked); all other soft-deleted docs are
     reclaimed like hard deletes. None reclaims every soft-deleted doc.
     """
-    with open(os.path.join(index_dir, "manifest.json")) as f:
-        manifest = json.load(f)
+    manifest = _commits.read_manifest(index_dir)
     as_list = lambda v: [v] if isinstance(v, str) else list(v)  # noqa: E731
     paths = manifest["paths"]
     n_segs = len(as_list(paths["postings"]))
@@ -1100,7 +1086,7 @@ def compact_index(
     soft_reclaim = None
     if sd_field:
         sd_docs = apply_dv_overlays(
-            spark, spark.read.parquet(*as_list(paths["docs"])), manifest
+            spark, read_parquet(spark, *as_list(paths["docs"])), manifest
         )
         cond = F.col(sd_field).isNotNull()
         if soft_retention:
@@ -1117,7 +1103,7 @@ def compact_index(
         gen = int(manifest.get("compaction_gen", 0)) + 1
         docs_path = os.path.join(index_dir, f"docs_compact{gen}")
         apply_dv_overlays(
-            spark, spark.read.parquet(*as_list(paths["docs"])), manifest
+            spark, read_parquet(spark, *as_list(paths["docs"])), manifest
         ).write.mode("overwrite").parquet(docs_path)
         manifest["paths"]["docs"] = docs_path
         manifest["paths"]["dv_updates"] = []
@@ -1131,7 +1117,7 @@ def compact_index(
     with_payloads = bool(manifest.get("with_payloads", False))
 
     deletes = (
-        spark.read.parquet(*del_paths).select("doc_id").distinct()
+        read_parquet(spark, *del_paths).select("doc_id").distinct()
         if del_paths
         else None
     )
@@ -1284,7 +1270,7 @@ def compact_index(
 
     # ---- docs / corpus: union minus deletes, dv updates folded in ----
     docs_path = os.path.join(index_dir, f"docs_compact{gen}")
-    docs = spark.read.parquet(*as_list(paths["docs"]))
+    docs = read_parquet(spark, *as_list(paths["docs"]))
     # committed docvalues-update generations bake into the rewrite
     # (Lucene merges gen-stamped .dvd updates into the merged segment)
     docs = apply_dv_overlays(spark, docs, manifest)
@@ -1292,14 +1278,14 @@ def compact_index(
         docs = docs.join(F.broadcast(deletes), "doc_id", "left_anti")
     docs.write.mode("overwrite").parquet(docs_path)
     corpus_path = os.path.join(index_dir, f"corpus_compact{gen}")
-    corpus = spark.read.parquet(*as_list(paths["corpus"]))
+    corpus = read_parquet(spark, *as_list(paths["corpus"]))
     if deletes is not None:
         corpus = corpus.join(F.broadcast(deletes), "doc_id", "left_anti")
     corpus.write.mode("overwrite").parquet(corpus_path)
 
     # ---- stats ----
     stats_path = os.path.join(index_dir, f"term_stats_compact{gen}")
-    write_term_stats(spark.read.parquet(postings_path), stats_path)
+    write_term_stats(read_parquet(spark, postings_path), stats_path)
     text_col_m = manifest["text_col"]
     cfield_names = sorted(
         manifest.get("fields", {text_col_m: text_col_m}),
@@ -1313,7 +1299,7 @@ def compact_index(
     for f in cfield_names:
         c_aggs.append(F.sum(_cdl(f)).alias(f"s__{f}"))
         c_aggs.append(F.count(F.when(F.col(_cdl(f)) > 0, 1)).alias(f"wf__{f}"))
-    gl = spark.read.parquet(docs_path).agg(*c_aggs).collect()[0]
+    gl = read_parquet(spark, docs_path).agg(*c_aggs).collect()[0]
 
     manifest["paths"] = {
         "postings": postings_path,
@@ -1386,8 +1372,7 @@ def merge_adjacent_segments(
     time (reclaim remains compact_index's job, like Lucene where merges
     drop deletes only when the merged segment includes them — ours
     defers to the full compact)."""
-    with open(os.path.join(index_dir, "manifest.json")) as f:
-        manifest = json.load(f)
+    manifest = _commits.read_manifest(index_dir)
     as_list = lambda v: [v] if isinstance(v, str) else list(v)  # noqa: E731
     paths = manifest["paths"]
     p_post = as_list(paths["postings"])
@@ -1459,15 +1444,15 @@ def merge_adjacent_segments(
     postings_path = os.path.join(index_dir, f"postings_{tag}")
     merged.write.mode("overwrite").parquet(postings_path)
     docs_path = os.path.join(index_dir, f"docs_{tag}")
-    spark.read.parquet(*p_docs[sl]).write.mode("overwrite").parquet(
+    read_parquet(spark, *p_docs[sl]).write.mode("overwrite").parquet(
         docs_path
     )
     corpus_path = os.path.join(index_dir, f"corpus_{tag}")
-    spark.read.parquet(*p_corp[sl]).write.mode("overwrite").parquet(
+    read_parquet(spark, *p_corp[sl]).write.mode("overwrite").parquet(
         corpus_path
     )
     stats_path = os.path.join(index_dir, f"term_stats_{tag}")
-    write_term_stats(spark.read.parquet(postings_path), stats_path)
+    write_term_stats(read_parquet(spark, postings_path), stats_path)
 
     manifest["paths"]["postings"] = (
         p_post[: sl.start] + [postings_path] + p_post[sl.stop :]
@@ -1514,8 +1499,7 @@ def maybe_merge(
     """
     merges = []
     while True:
-        with open(os.path.join(index_dir, "manifest.json")) as f:
-            manifest = json.load(f)
+        manifest = _commits.read_manifest(index_dir)
         p_docs = manifest["paths"]["docs"]
         p_docs = [p_docs] if isinstance(p_docs, str) else list(p_docs)
         sizes = [_parquet_rows(p) for p in p_docs]
@@ -1551,8 +1535,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids: DataFrame) -> dict
     snapshot isolation like segment appends. doc_ids: DataFrame with one
     long `doc_id` column (e.g. a Searcher.doc_set result: delete-by-query).
     """
-    with open(os.path.join(index_dir, "manifest.json")) as f:
-        manifest = json.load(f)
+    manifest = _commits.read_manifest(index_dir)
     existing = manifest["paths"].get("deletes") or []
     if isinstance(existing, str):
         existing = [existing]
@@ -1583,8 +1566,7 @@ def soft_delete_docs(
     matching its ``soft_retention`` predicate
     (SoftDeletesRetentionMergePolicy.java:62). Like the reference, a
     soft delete cannot be unset."""
-    with open(os.path.join(index_dir, "manifest.json")) as f:
-        manifest = json.load(f)
+    manifest = _commits.read_manifest(index_dir)
     sd = manifest.get("soft_deletes_field")
     if not sd:
         raise ValueError(
@@ -1642,12 +1624,11 @@ def update_doc_values(
     docvalues update files. Readers merge-on-read via
     :func:`apply_dv_overlays`; :func:`compact_index` folds all
     generations into the rewritten docs table and clears the list."""
-    with open(os.path.join(index_dir, "manifest.json")) as f:
-        manifest = json.load(f)
+    manifest = _commits.read_manifest(index_dir)
     docs_paths = manifest["paths"]["docs"]
     if isinstance(docs_paths, str):
         docs_paths = [docs_paths]
-    schema = spark.read.parquet(docs_paths[0]).schema
+    schema = read_parquet(spark, docs_paths[0]).schema
     by_name = {f_.name: f_ for f_ in schema.fields}
     text_col = manifest["text_col"]
     forbidden = {"doc_id"} | {
@@ -1707,8 +1688,7 @@ def append_to_index(
     (analyzer, buckets, salt width, kept columns) come from the manifest
     so segments stay mutually consistent. Per-segment term stats are
     summed at read time (the reader's cross-segment termStatistics)."""
-    with open(os.path.join(index_dir, "manifest.json")) as f:
-        manifest = json.load(f)
+    manifest = _commits.read_manifest(index_dir)
     text_col = manifest["text_col"]
     keep_cols = manifest["keep_cols"]
     num_buckets = manifest["num_buckets"]
@@ -1769,7 +1749,7 @@ def append_to_index(
         )
     corpus_path = os.path.join(index_dir, f"corpus_seg{seg}")
     snap.write.mode("overwrite").parquet(corpus_path)
-    corpus_ids = spark.read.parquet(corpus_path)
+    corpus_ids = read_parquet(spark, corpus_path)
 
     postings_path = os.path.join(index_dir, f"postings_seg{seg}")
     docs_path = os.path.join(index_dir, f"docs_seg{seg}")
@@ -1812,14 +1792,14 @@ def append_to_index(
         )
     docs.write.mode("overwrite").parquet(docs_path)
 
-    write_term_stats(spark.read.parquet(postings_path), stats_path)
+    write_term_stats(read_parquet(spark, postings_path), stats_path)
 
     seg_aggs = [F.count(F.lit(1)).alias("n")]
     for f in field_names:
         dn = _dl_name(f)
         seg_aggs.append(F.sum(dn).alias(f"sum_dl__{f}"))
         seg_aggs.append(F.count(F.when(F.col(dn) > 0, 1)).alias(f"doc_count__{f}"))
-    gl = spark.read.parquet(docs_path).agg(*seg_aggs).collect()[0]
+    gl = read_parquet(spark, docs_path).agg(*seg_aggs).collect()[0]
 
     # ---- commit: extend path lists + global stats, one atomic swap ----
     paths = manifest["paths"]

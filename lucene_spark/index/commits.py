@@ -69,6 +69,54 @@ def _read_json(path: str):
         return json.load(f)
 
 
+def _map_paths(manifest: dict, fn) -> dict:
+    """A copy of ``manifest`` with ``fn`` applied to every table path in
+    ``paths``: a str, a list of str, or a list of dicts with a ``path``
+    key (docvalues-update generations)."""
+
+    def walk(v):
+        if isinstance(v, str):
+            return fn(v)
+        if isinstance(v, list):
+            return [walk(x) for x in v]
+        if isinstance(v, dict):
+            return {k: walk(x) if k == "path" else x for k, x in v.items()}
+        return v
+
+    out = dict(manifest)
+    if "paths" in manifest:
+        out["paths"] = {k: walk(v) for k, v in manifest["paths"].items()}
+    return out
+
+
+def resolve_paths(manifest: dict, index_dir: str) -> dict:
+    """Table paths as the code uses them: manifests store them relative
+    to the index directory, so a copied or moved index opens its own
+    files. A path written absolute (older manifests) stays as it is."""
+    return _map_paths(manifest, lambda p: os.path.join(index_dir, p))
+
+
+def read_manifest(index_dir: str, path: str | None = None) -> dict:
+    """``manifest.json`` (or the commit file ``path``) with its table
+    paths resolved against ``index_dir``."""
+    return resolve_paths(
+        _read_json(path or os.path.join(index_dir, "manifest.json")), index_dir
+    )
+
+
+def write_manifest(index_dir: str, manifest: dict) -> None:
+    """Atomically write ``manifest`` to ``manifest.json``, each table
+    path under ``index_dir`` stored relative to it."""
+    root = os.path.abspath(index_dir)
+
+    def rel(p: str) -> str:
+        a = os.path.abspath(os.path.join(root, p))
+        return os.path.relpath(a, root) if a.startswith(root + os.sep) else p
+
+    _atomic_write(os.path.join(index_dir, "manifest.json"),
+                  _map_paths(manifest, rel))
+
+
 def _gens(index_dir: str) -> list[int]:
     d = _commits_dir(index_dir)
     if not os.path.isdir(d):
@@ -146,7 +194,7 @@ def read_commit(index_dir: str, gen: int) -> dict:
             f"no commit generation {gen} in {index_dir} "
             f"(surviving: {_gens(index_dir)})"
         )
-    return _read_json(path)
+    return read_manifest(index_dir, path)
 
 
 def rollback(index_dir: str) -> dict:
@@ -163,31 +211,15 @@ def rollback(index_dir: str) -> dict:
         )
     manifest = _read_json(_commit_file(index_dir, gens[-1]))
     _atomic_write(os.path.join(index_dir, "manifest.json"), manifest)
-    return manifest
+    return resolve_paths(manifest, index_dir)
 
 
 def _referenced_paths(manifest: dict, index_dir: str) -> set[str]:
-    """Every data path a manifest references, as absolute paths.
-
-    Walks ``paths`` recursively: values are a str, a list of str, or a
-    list of dicts with a ``path`` key (docvalues-update generations).
-    """
+    """Every data path a manifest (as stored) references, as absolute
+    paths."""
     out: set[str] = set()
-
-    def walk(v):
-        if isinstance(v, str):
-            out.add(os.path.abspath(v))
-        elif isinstance(v, list):
-            for x in v:
-                walk(x)
-        elif isinstance(v, dict):
-            if "path" in v:
-                walk(v["path"])
-            else:
-                for x in v.values():
-                    walk(x)
-
-    walk(manifest.get("paths", {}))
+    _map_paths(manifest,
+               lambda p: out.add(os.path.abspath(os.path.join(index_dir, p))))
     return out
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lucene_spark import bm25
+from lucene_spark.index.commits import read_commit, read_manifest
 
 # Spark stores the writing DataFrame's schema (StructType JSON) in the
 # key-value metadata of every parquet file it writes, empty files included
@@ -84,13 +85,11 @@ class Index:
         self.index_dir = index_dir
         self.include_soft_deleted = include_soft_deleted
         self.commit_gen = commit
+        # table paths resolved against index_dir (stored relative to it)
         if commit is not None:
-            from lucene_spark.index.commits import read_commit
-
             self.manifest = read_commit(index_dir, commit)
         else:
-            with open(os.path.join(index_dir, "manifest.json")) as f:
-                self.manifest = json.load(f)
+            self.manifest = read_manifest(index_dir)
         p = self.manifest["paths"]
         # each entry is one path (single segment) or a list of segment
         # paths appended over time (SegmentInfos analog: the snapshot is
@@ -101,6 +100,9 @@ class Index:
         self._stats_path = as_list(p["term_stats"])
         self._corpus_path = as_list(p["corpus"])
         self.N = self.manifest["N"]
+        # next docID to hand out: docIDs lie in [0, max_doc), so the
+        # postings span ceil(max_doc / salt_rows) salts
+        self.max_doc = int(self.manifest.get("max_doc", self.N))
         self.doc_count = self.manifest["doc_count_field"]
         self.sum_ttf = self.manifest["sum_total_term_freq"]
         self.num_buckets = self.manifest["num_buckets"]

@@ -25,7 +25,6 @@ only the k hit docs' rows.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from itertools import chain
@@ -35,6 +34,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from lucene_spark.index.commits import read_manifest
+from lucene_spark.index.reader import read_parquet
 
 TVEC_SCHEMA = T.StructType(
     [
@@ -138,14 +140,14 @@ def build_term_vectors(
     tvec_path = os.path.join(index_dir, "tvec")
     if resume and _stage_done(index_dir, "stage4_tvec"):
         return tvec_path
-    with open(os.path.join(index_dir, "manifest.json")) as f:
-        manifest = json.load(f)
+    manifest = read_manifest(index_dir)
     text_col = manifest["text_col"]
     fields = sorted(
         manifest.get("fields", {text_col: text_col}).items()
     )
     t0 = time.time()
-    corpus = spark.read.parquet(manifest["paths"]["corpus"])
+    corpus = manifest["paths"]["corpus"]
+    corpus = read_parquet(spark, *([corpus] if isinstance(corpus, str) else corpus))
     field_cols = sorted({c for _, c in fields})
     tvec = corpus.select("doc_id", *field_cols).mapInPandas(
         _tvec_map(fields, manifest.get("analyzer")), schema=TVEC_SCHEMA

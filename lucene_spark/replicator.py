@@ -41,6 +41,8 @@ import shutil
 import time
 import uuid
 
+from lucene_spark.index.commits import read_manifest, write_manifest
+
 
 def _as_list(v):
     return v if isinstance(v, list) else [v]
@@ -67,8 +69,7 @@ class Revision:
     def __init__(self, index_dir: str):
         self.index_dir = os.path.abspath(index_dir)
         mf = os.path.join(self.index_dir, "manifest.json")
-        with open(mf) as f:
-            self.manifest = json.load(f)
+        self.manifest = read_manifest(self.index_dir)  # paths resolved
         self.version = f"{os.stat(mf).st_mtime_ns}"
         # file set: every stage dir the manifest references, keyed by
         # replica-layout relpath (relative to the index root)
@@ -120,10 +121,7 @@ def replicate(src_index_dir: str, dst_index_dir: str) -> dict:
     text = text.replace(
         json.dumps(rev.index_dir)[1:-1], json.dumps(dst_root)[1:-1]
     )
-    tmp = os.path.join(dst_root, f"manifest.json.rep.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        f.write(text)
-    os.replace(tmp, os.path.join(dst_root, "manifest.json"))
+    write_manifest(dst_root, json.loads(text))
     # ReplicaFileDeleter analog: drop data files not in the new commit
     deleted = 0
     keep = set(rev.files)

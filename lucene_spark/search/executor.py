@@ -1,19 +1,21 @@
 """Physical query execution over the postings tables — the
 IndexSearcher / Weight / Scorer analog (search/IndexSearcher.java:660-712).
 
-Execution shape per SURVEY.md §3.2: driver-side plan build reads global
-term stats (a tiny collect — the createWeight statistics pass,
-TermQuery.java:61-64), then one bucket-pruned scan of the postings
-Parquet decodes and scores blocks inside an Arrow-batched mapInPandas
-(numpy float32 BM25, bm25.py), per-partition top-k happens inside
-Spark's TakeOrderedAndProject, and the driver merge applies the
-(score desc, docID asc) tie-break of search/HitQueue.java:78-84.
+Execution shape per SURVEY.md §3.2: the plan build reads global term
+stats on the driver (the createWeight statistics pass,
+TermQuery.java:61-64, no Spark job), then one bucket-pruned scan of the
+postings Parquet feeds numpy float32 BM25 (bm25.py) in Python workers,
+and Spark's TakeOrderedAndProject keeps the top k by (score desc, docID
+asc), the tie-break of search/HitQueue.java:78-84.
 
-Block-max pruning: for top-k term queries the decode UDF skips blocks
-whose competitive-impact max score cannot beat the running local top-k
-threshold — the ImpactsDISI.advanceShallow effect
-(search/ImpactsDISI.java:61-91) at block granularity. Correctness never
-depends on it (verified by tests with pruning on/off).
+- Single terms decode and score in one mapInPandas; top-k skips blocks
+  whose impact max cannot beat the running local top-k (ImpactsDISI
+  .advanceShallow, search/ImpactsDISI.java:61-91, at block granularity).
+- Term-leaf booleans and phrases run leaf-at-a-time: a salt is a docID
+  range like a Lucene leaf, one grouped call per salt decodes, matches,
+  scores and keeps the salt's top k, and TakeOrderedAndProject merges
+  the leaves (TopDocs.merge). See Searcher._leaf_scored.
+- Other families compose per-clause plans with joins and aggregates.
 
 Two scoring modes:
 - 'lucene': float32-exact reference arithmetic (BM25Similarity.java:246).
@@ -37,6 +39,7 @@ from lucene_spark import bm25
 from lucene_spark.codec import decode_block, decode_value_stream
 from lucene_spark.index.reader import Index
 from lucene_spark.search import plans as P
+from lucene_spark.search.sloppy import sloppy_phrase_freq
 from lucene_spark.smallfloat import LENGTH_TABLE
 
 _SCORE_SCHEMA = T.StructType(
@@ -166,71 +169,202 @@ def _impact_max(score, impacts, weight) -> float:
     return float(np.max(score(f, nm, weight)))
 
 
-# clause kind tagging each decoded row of a term-leaf BoolQ's one scan
-# (Searcher._term_bool_plan)
+# clause kinds of a term-leaf BoolQ's terms (Searcher._term_bool_state)
 _MUST, _SHOULD, _FILTER, _MUST_NOT = 0, 1, 2, 3
-_TAGGED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("kind", T.IntegerType()),
-        T.StructField("score", T.DoubleType()),
-    ]
-)
 
 
-def _tagged_decode(kinds: dict, weights: dict, score):
-    """The one decode of a term-leaf BoolQ: postings rows -> (doc_id,
-    kind, score) batches, every row tagged with its term's clause kind.
-    Terms in ``weights`` are scored with ``score`` (Searcher._scorer);
-    FILTER / MUST_NOT rows carry score 0."""
-
-    def fn(iterator):
-        for pdf in iterator:
-            docs, tags, scores = [], [], []
-            for row in pdf.itertuples(index=False):
-                kind = kinds[row.term]
-                w = weights.get(row.term)  # None: FILTER / MUST_NOT
-                for blk in row.blocks:
-                    d, f, nm = decode_block(blk)
-                    docs.append(d)
-                    tags.append(np.full(len(d), kind, np.int32))
-                    scores.append(
-                        np.zeros(len(d)) if w is None else score(f, nm, w)
-                    )
-            if docs:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(docs),
-                        "kind": np.concatenate(tags),
-                        "score": np.concatenate(scores),
-                    }
-                )
-
-    return fn
+def _local_top_k(docs: np.ndarray, scores: np.ndarray, k: int | None):
+    """One leaf's cut: its ``k`` best hits by (score desc, doc_id asc),
+    every hit when ``k`` is None. A leaf holds every match of its docID
+    range, so the top k of the leaves' top ks is the global top k, ties
+    at rank k included (TopDocs.merge)."""
+    if k is None or len(docs) <= k:
+        return docs, scores
+    keep = np.lexsort((docs, -scores))[:k]
+    return docs[keep], scores[keep]
 
 
-def _decode_positions_row(pos_bin: bytes, freqs: np.ndarray) -> list:
-    """pos stream -> list of per-doc position arrays (delta decode)."""
+def _bool_leaf(kinds: dict, weights: dict, score, msm: int, lucene: bool,
+               boost: float):
+    """Per-salt evaluator of a term-leaf BoolQ (Searcher._term_bool_plan):
+    every term's rows decode into dense arrays indexed by ``doc_id -
+    base`` (BooleanScorer's bucket window, one salt wide); returns the
+    salt's (doc_ids, final scores).
+
+    A hit matches every MUST and FILTER term, no MUST_NOT term and at
+    least ``msm`` SHOULD terms. Float rules are the join tree's: float32
+    clause scores summed in double in clause order; MUST sums stay
+    uncast; the SHOULD sum is cast to float before it is added to MUST
+    (DisjunctionSumScorer.java:38-44); the total is cast when more than
+    one MUST or a MUST+SHOULD mix adds up; the boost is a float32
+    multiply (Searcher._boosted). numpy's float32 rounding is Spark's."""
+    n = Counter(kinds.values())
+
+    def as_float(x):
+        return x.astype(np.float32).astype(np.float64) if lucene else x
+
+    def evaluate(pdf: pd.DataFrame, base: int, width: int):
+        cnt = {kd: np.zeros(width, np.int32) for kd in n}
+        sums = {_MUST: np.zeros(width), _SHOULD: np.zeros(width)}
+        rows = sorted(zip(pdf["term"], pdf["blocks"]), key=lambda r: kinds_order[r[0]])
+        for term, blocks in rows:
+            kd, w = kinds[term], weights.get(term)
+            for blk in blocks:
+                d, f, nm = decode_block(blk)
+                i = d - base  # a doc occurs once per term
+                cnt[kd][i] += 1
+                if w is not None:
+                    sums[kd][i] += score(f, nm, w)
+        keep = np.ones(width, bool)
+        if n[_MUST]:
+            keep &= cnt[_MUST] == n[_MUST]
+        if n[_SHOULD] and msm > 0:
+            keep &= cnt[_SHOULD] >= msm
+        if n[_FILTER]:
+            keep &= cnt[_FILTER] == n[_FILTER]
+        if n[_MUST_NOT]:
+            keep &= cnt[_MUST_NOT] == 0
+        idx = np.flatnonzero(keep)
+        m_sum, s_sum = sums[_MUST][idx], sums[_SHOULD][idx]
+        if n[_MUST] and n[_SHOULD]:
+            total = as_float(m_sum + as_float(s_sum))
+        elif n[_MUST]:
+            total = as_float(m_sum) if n[_MUST] > 1 else m_sum
+        else:
+            total = as_float(s_sum)
+        if boost != 1.0:
+            total = ((total.astype(np.float32) * np.float32(boost)).astype(np.float64)
+                     if lucene else total * boost)
+        return base + idx, total
+
+    kinds_order = {t: i for i, t in enumerate(kinds)}
+    return evaluate
+
+
+def _phrase_leaf(terms: list, slot_spec: list, offsets: list, slop: int,
+                 weight, score):
+    """Per-salt evaluator of a phrase (Searcher._phrase_scored): the docID
+    conjunction of the slots from the doc blocks (np.intersect1d, rarest
+    slot first), then positions decoded only in rows holding a survivor,
+    then the phrase freq per survivor and its score.
+
+    ``slot_spec``: per slot the indexes into ``terms`` of its
+    alternatives. Exact phrases (slop 0) count aligned starts
+    ``p - offset >= 0`` present in every slot, for all survivors at once
+    on (doc, start) keys (ExactPhraseMatcher.java:166); sloppy ones call
+    the reference matcher per survivor (sloppy.sloppy_phrase_freq) with
+    the slot keys repeat detection needs: the term index for one-term
+    slots, the frozenset of alternatives otherwise."""
+    idx_of = {t: i for i, t in enumerate(terms)}
+    single_term_slots = all(len(idxs) == 1 for idxs in slot_spec)
+
+    def evaluate(pdf: pd.DataFrame, base: int, width: int):
+        empty = np.zeros(0, np.int64), np.zeros(0)
+        rows = []  # (term idx, docs, freqs, pos stream)
+        norms = np.zeros(width, np.uint8)
+        for term, blocks, pos in zip(pdf["term"], pdf["blocks"], pdf["pos"]):
+            parts = [decode_block(blk) for blk in blocks]
+            if not parts:
+                continue
+            d = np.concatenate([p[0] for p in parts])
+            norms[d - base] = np.concatenate([p[2] for p in parts])
+            rows.append((idx_of[term], d, np.concatenate([p[1] for p in parts]), pos))
+        term_docs: dict = {}
+        for ti, d, _f, _p in rows:
+            term_docs.setdefault(ti, []).append(d)
+        slot_docs = []
+        for idxs in slot_spec:
+            ds = [d for i in idxs for d in term_docs.get(i, ())]
+            if not ds:
+                return empty
+            slot_docs.append(np.unique(np.concatenate(ds)))
+        slot_docs.sort(key=len)
+        surv = slot_docs[0]
+        for sd in slot_docs[1:]:
+            surv = np.intersect1d(surv, sd, assume_unique=True)
+        if not len(surv):
+            return empty
+        # survivors' positions, per term: (local doc, flat positions) pairs
+        local, flat = {}, {}
+        for ti, d, f, pos_bin in rows:
+            sel = np.flatnonzero(np.isin(d, surv, assume_unique=True))
+            if not len(sel):
+                continue
+            p_all, starts = _positions_flat(pos_bin, f)
+            lens = f[sel]
+            at = np.repeat(starts[sel] - (np.cumsum(lens) - lens), lens)
+            local.setdefault(ti, []).append(np.repeat(d[sel] - base, lens))
+            flat.setdefault(ti, []).append(p_all[at + np.arange(len(at))])
+        local = {ti: np.concatenate(v) for ti, v in local.items()}
+        flat = {ti: np.concatenate(v) for ti, v in flat.items()}
+        if slop == 0:
+            freq = _exact_phrase_freq(local, flat, slot_spec, offsets, width)
+        else:
+            # per term: positions sorted by doc (stable, so each doc's
+            # stay ascending) and each survivor's [lo, hi) slice
+            spans = {}
+            for ti, loc in local.items():
+                order = np.argsort(loc, kind="stable")
+                loc = loc[order]
+                spans[ti] = (flat[ti][order],
+                             np.searchsorted(loc, surv - base, "left"),
+                             np.searchsorted(loc, surv - base, "right"))
+            freq = np.zeros(width)
+            for j, doc in enumerate(surv - base):
+                arrs = {ti: p[lo[j]:hi[j]] for ti, (p, lo, hi) in spans.items()}
+                slot_in = []
+                for idxs in slot_spec:
+                    if single_term_slots:
+                        slot_in.append((idxs[0], arrs[idxs[0]]))
+                        continue
+                    parts = [arrs[i] for i in idxs if len(arrs.get(i, ()))]
+                    slot_in.append((frozenset(idxs), np.unique(np.concatenate(parts))))
+                freq[doc] = sloppy_phrase_freq(slot_in, slop)
+        idx = np.flatnonzero(freq > 0.0)
+        return base + idx, score(freq[idx], norms[idx], weight)
+
+    return evaluate
+
+
+def _exact_phrase_freq(local: dict, flat: dict, slot_spec: list,
+                       offsets: list, width: int) -> np.ndarray:
+    """Exact-phrase freq per local doc: the number of starts ``p - off
+    >= 0`` present in every slot (a slot's positions are the union of its
+    alternatives'), intersected for all docs at once on ``doc << 32 |
+    start`` keys."""
+    cand = None
+    for off, idxs in zip(offsets, slot_spec):
+        parts = []
+        for i in idxs:
+            if i in local:
+                start = flat[i] - off
+                ok = start >= 0
+                parts.append((local[i][ok] << 32) | start[ok])
+        keys = np.unique(np.concatenate(parts)) if parts else np.zeros(0, np.int64)
+        cand = keys if cand is None else np.intersect1d(cand, keys, assume_unique=True)
+    return np.bincount(cand >> 32, minlength=width).astype(np.float64)
+
+
+def _positions_flat(pos_bin: bytes, freqs: np.ndarray):
+    """pos stream -> (every position of the row's docs in doc order, the
+    index of each doc's first position): a doc's first position is
+    absolute, the rest are deltas."""
     d = decode_value_stream(bytes(pos_bin)).astype(np.int64)
+    starts = (np.cumsum(freqs) - freqs).astype(np.int64)
     if len(d) == 0:
-        return [np.zeros(0, np.int64) for _ in freqs]
+        return d, starts
     c = np.cumsum(d)
-    starts = np.concatenate([[0], np.cumsum(freqs)[:-1]]).astype(np.int64)
-    base = np.repeat(c[starts] - d[starts], freqs)
-    pos = c - base
-    return np.split(pos, np.cumsum(freqs)[:-1])
+    return c - np.repeat(c[starts] - d[starts], freqs), starts
 
 
 class Searcher:
-    # Phrase phase-1: once the rarest slot's df is at most this, the
+    # Position families on the _freq_scored tail (term automaton, payload
+    # score): once the rarest required term's df is at most this, the
     # position shuffle is already bounded tightly enough that decoding
-    # the REMAINING slots' doc blocks (one scan + semi-join apiece) costs
-    # more than the rows it would prune — phase 2's position matching is
-    # exact regardless. Mirrors ConjunctionDISI's lead-cost asymmetry.
+    # the REMAINING terms' doc blocks (one scan + semi-join apiece) costs
+    # more than the rows it would prune — the position matching is exact
+    # regardless. Mirrors ConjunctionDISI's lead-cost asymmetry.
     PHRASE_CONJ_MIN_DF = 65_536
-    # approximation-phase benefit bar: expected surviving position rows
-    # must undercut the unpruned position shuffle by this factor
-    PHRASE_CONJ_PRUNE_RATIO = 0.5
 
     def __init__(self, index: Index, scoring: str = "lucene",
                  similarity: str | object | None = None,
@@ -265,6 +399,42 @@ class Searcher:
         if self._deletes is None:
             return df
         return df.join(F.broadcast(self._deletes), "doc_id", "left_anti")
+
+    def _leaf_scored(self, rows: DataFrame, evaluate, k: int | None,
+                     candidates=None) -> DataFrame:
+        """Leaf-at-a-time execution over salt shards: a salt is a docID
+        range (``salt * salt_rows`` on), like a Lucene leaf. ``rows``
+        (postings rows with ``salt`` and ``term``) are clustered by salt
+        and one grouped-map call per salt runs ``evaluate(pdf, base,
+        width)`` -> (doc_ids, final scores), keeps the ``candidates``
+        (rescore allow-list) and cuts the salt's top ``k``; the caller's
+        TakeOrderedAndProject merges the salts (TopDocs.merge).
+
+        One Python boundary per query. On a one-salt index a single
+        partition already satisfies the grouping, so ``coalesce(1)``
+        plans no Exchange; otherwise ``groupBy("salt")`` hash-partitions
+        the compressed rows. Deletes are masked after the leaf, so with
+        deletes every match is emitted: a leaf never cuts before liveDocs
+        apply."""
+        cut = k if self._deletes is None else None
+        keep = (None if candidates is None
+                else np.unique(np.asarray(list(candidates), dtype=np.int64)))
+        width = self.index.salt_rows
+
+        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            docs, scores = evaluate(pdf, int(pdf["salt"].iat[0]) * width, width)
+            if keep is not None:
+                hit = np.isin(docs, keep)
+                docs, scores = docs[hit], scores[hit]
+            docs, scores = _local_top_k(docs, scores, cut)
+            return pd.DataFrame({"doc_id": docs.astype(np.int64),
+                                 "score": scores.astype(np.float64)})
+
+        if -(-self.index.max_doc // width) == 1:
+            rows = rows.coalesce(1)
+        return self._live(
+            rows.groupBy("salt").applyInPandas(fn, schema=_SCORE_SCHEMA)
+        )
 
     # ------------------------------------------------------------------
     # weights (createWeight analog: one-time global stats)
@@ -497,7 +667,8 @@ class Searcher:
                     d = np.concatenate(docs_all)
                     f = np.concatenate(freqs_all)
                     nm = np.concatenate(norms_all)
-                    plists = _decode_positions_row(row.pos, f)
+                    flat, starts = _positions_flat(row.pos, f)
+                    plists = np.split(flat, starts[1:]) if len(flat) else [flat] * len(f)
                     i = idx_of[row.term]
                     out["doc_id"].extend(d.tolist())
                     out["idx"].extend([i] * len(d))
@@ -546,12 +717,12 @@ class Searcher:
         if isinstance(q, P.BlendedTermQ):
             return self._cand(self._blended_scored(q), candidates)
         if isinstance(q, (P.PhraseQ, P.MultiPhraseQ)):
-            return self._phrase_scored(q, candidates=candidates)
+            return self._phrase_scored(q, k, candidates)
         if isinstance(q, P.PhraseWildcardQ):
             mp = self._phrase_wildcard_multiphrase(q)
             if mp is None:
                 return self._empty_scored()
-            return self._phrase_scored(mp, candidates=candidates)
+            return self._phrase_scored(mp, k, candidates)
         if isinstance(q, P.TermAutomatonQ):
             return self._term_automaton_scored(q, candidates=candidates)
         if isinstance(q, P.CommonTermsQ):
@@ -576,66 +747,30 @@ class Searcher:
                 )
             else:
                 raise ValueError(q.fn)
-            if self.scoring == "lucene":
-                expr = expr.cast("float").cast("double")
-            return self._cand(
-                self._live(
-                    self.index.docs.filter(feat.isNotNull()).select(
-                        "doc_id", expr.alias("score")
-                    )
-                ),
-                candidates,
-            )
+            return self._docs_scored(feat.isNotNull(), expr, candidates)
         if isinstance(q, P.DistanceFeatureQ):
-            # LongDistanceFeatureQuery.java:117: score = boost *
-            # pivot / (pivot + |value - origin|), double math, one
-            # final float rounding.
+            # LongDistanceFeatureQuery.java:117: score = boost * (pivot /
+            # (pivot + |value - origin|)) in double — the division rounds
+            # first, then the boost multiply — with one final float
+            # rounding.
             val = F.col(q.col).cast("double")
-            # Evaluation order matches the reference: boost * (pivot /
-            # (pivot + dist)) — the division rounds first, then the
-            # boost multiply (LongDistanceFeatureQuery.java:117).
             expr = F.lit(float(q.boost)) * (
                 F.lit(float(q.pivot))
-                / (
-                    F.lit(float(q.pivot))
-                    + F.abs(val - F.lit(float(q.origin)))
-                )
+                / (F.lit(float(q.pivot)) + F.abs(val - F.lit(float(q.origin))))
             )
-            if self.scoring == "lucene":
-                expr = expr.cast("float").cast("double")
-            return self._cand(
-                self._live(
-                    self.index.docs.filter(val.isNotNull()).select(
-                        "doc_id", expr.alias("score")
-                    )
-                ),
-                candidates,
-            )
+            return self._docs_scored(val.isNotNull(), expr, candidates)
         if isinstance(q, P.GeoDistanceFeatureQ):
             # LatLonPointDistanceFeatureQuery.java:130-131: haversine
-            # meters from the origin through the same pulse.
+            # meters from the origin through the same pulse; the division
+            # rounds before the boost multiply (line 271).
             from lucene_spark.geo import haversine_meters
 
             dist = haversine_meters(q.lat_col, q.lon_col, q.lat, q.lon)
-            # boost * (pivot / (pivot + d)) — division rounds before the
-            # boost multiply (LatLonPointDistanceFeatureQuery.java:271).
             expr = F.lit(float(q.boost)) * (
                 F.lit(float(q.pivot_m)) / (F.lit(float(q.pivot_m)) + dist)
             )
-            if self.scoring == "lucene":
-                expr = expr.cast("float").cast("double")
-            present = (
-                F.col(q.lat_col).isNotNull()
-                & F.col(q.lon_col).isNotNull()
-            )
-            return self._cand(
-                self._live(
-                    self.index.docs.filter(present).select(
-                        "doc_id", expr.alias("score")
-                    )
-                ),
-                candidates,
-            )
+            present = F.col(q.lat_col).isNotNull() & F.col(q.lon_col).isNotNull()
+            return self._docs_scored(present, expr, candidates)
         if isinstance(q, P.FunctionScoreQ):
             # FunctionScoreQuery.createWeight: inner supplies the match
             # set, score comes from the values source (replace) or
@@ -654,7 +789,7 @@ class Searcher:
                 .select("doc_id", new_score.alias("score"))
             )
         if isinstance(q, P.BoolQ):
-            return self._bool_scored(q, candidates=candidates)
+            return self._bool_scored(q, k, candidates)
         if isinstance(q, P.DisMaxQ):
             return self._dismax_scored(q, candidates=candidates)
         if isinstance(q, P.CoveringQ):
@@ -666,7 +801,11 @@ class Searcher:
                 self.doc_set(q.inner).withColumn("score", F.lit(float(q.boost))), candidates
             )
         if isinstance(q, P.BoostQ):
-            return self._boosted(self.scored(q.inner, k, candidates), q.boost)
+            # a float32 multiply can tie scores the inner ranking kept
+            # apart, and ties break on doc_id: an inner cut at k is sound
+            # only when the boost is 1
+            inner_k = k if q.boost == 1.0 else None
+            return self._boosted(self.scored(q.inner, inner_k, candidates), q.boost)
         if isinstance(q, P.MatchAllQ):
             return self._cand(
                 self._live(self.index.docs.select("doc_id")).withColumn(
@@ -825,6 +964,14 @@ class Searcher:
         elif limit is not None:
             agg = agg.limit(int(limit))
         return agg
+
+    def _docs_scored(self, present, expr, candidates) -> DataFrame:
+        """A docs-table score ``expr`` over the live docs where ``present``
+        holds, rounded to float once in 'lucene' mode."""
+        if self.scoring == "lucene":
+            expr = expr.cast("float").cast("double")
+        docs = self.index.docs.filter(present).select("doc_id", expr.alias("score"))
+        return self._cand(self._live(docs), candidates)
 
     def _empty_scored(self) -> DataFrame:
         return empty_frame(self.index.spark, _SCORE_SCHEMA)
@@ -1211,14 +1358,18 @@ class Searcher:
         ).filter(F.col("freq") > 0.0)
         return self._score_freq_df(matched, weight, field)
 
-    def _phrase_scored(self, q, candidates: list[int] | None = None) -> DataFrame:
-        """Phrase family (PhraseQuery.java:71, MultiPhraseQuery.java:53).
+    def _phrase_scored(self, q, k: int | None = None,
+                       candidates: list[int] | None = None) -> DataFrame:
+        """Phrase family (PhraseQuery.java:71, MultiPhraseQuery.java:53),
+        leaf-at-a-time (_leaf_scored, evaluator _phrase_leaf): one scan of
+        the phrase terms' rows, one grouped call per salt that intersects
+        the slots' docIDs from the doc blocks, decodes positions only for
+        the survivors (TwoPhaseIterator / ExactPhraseMatcher pattern),
+        scores them and keeps the salt's top ``k``.
 
         slots: one tuple of alternative terms per phrase position; a doc
         matches when some term of every slot occurs at consecutive
-        (slop=0) or near (slop>0) positions. Two-phase: docID conjunction
-        on slot presence first, positions decoded only for survivors
-        (TwoPhaseIterator / ExactPhraseMatcher pattern).
+        (slop=0) or near (slop>0) positions.
 
         slop=0: freq = #exact alignments (ExactPhraseMatcher.java:166).
         slop>0 (plain AND MultiPhrase): the REFERENCE SloppyPhraseMatcher
@@ -1228,6 +1379,8 @@ class Searcher:
         terms ("get get value") and the multi-term repeat machinery
         (alternative slots as union position streams, bipartite
         term-group detection, collide-driven group init)."""
+        if not self.index.manifest.get("with_positions", True):
+            raise ValueError("index built without positions; phrase queries unavailable")
         if isinstance(q, P.MultiPhraseQ):
             slots = [tuple(alt) for alt in q.positions]
             weight_terms = [t for alt in slots for t in alt]
@@ -1241,7 +1394,6 @@ class Searcher:
             assert explicit is None or q.slop == 0, \
                 "explicit phrase positions require slop=0"
             offsets = list(explicit) if explicit else list(range(len(slots)))
-        slop = q.slop
         fld = getattr(q, "field", None)
         uniq = list(dict.fromkeys(t for alt in slots for t in alt))
         stats = self.index.stats_for_terms(uniq, fld)
@@ -1256,108 +1408,14 @@ class Searcher:
         elif any(t not in stats for t in uniq):
             return self._empty_scored()
         w = self._combined_weight([stats[t][0] for t in weight_terms], q.boost, fld)
-        # ---- phase 1 (TwoPhaseIterator.approximation): docID conjunction
-        # from doc blocks ONLY — no position decode, no position shuffle.
-        # Slots are intersected rarest-first; the surviving docID set then
-        # semi-joins the position rows BEFORE their groupBy, so only
-        # survivors' position arrays ever cross a shuffle ("the quick"
-        # never ships every "the" doc's positions).
-        pos = self._position_rows(uniq, fld)
-        if candidates is not None:
-            pos = self._cand(pos, candidates)
-        total_df = sum(stats[t][0] for t in uniq)
-        # Cost gate for the approximation phase: the doc-block decode +
-        # semi-join is an extra stage, so run it only when it PRUNES.
-        # Expected survivors under slot independence =
-        # n_docs * prod(slot_df / n_docs); the semi-join pays when the
-        # surviving position rows (survivors x slots) undercut the
-        # unpruned shuffle (total_df rows) by PHRASE_CONJ_PRUNE_RATIO.
-        # "data line" over a corpus where both terms are hot prunes
-        # ~nothing (est ~ total) -> skip, saving the extra stage;
-        # "the <rare>" prunes 50x -> conjunct. Scale-invariant: the
-        # ratio, not the corpus size, decides.
-        n_docs = max(1, self.index.doc_count_for(fld))
-        est_surv = float(n_docs)
-        for alt in slots:
-            slot_df = min(n_docs, sum(stats[t][0] for t in alt))
-            est_surv *= slot_df / n_docs
-        if (
-            total_df > self.PHRASE_CONJ_MIN_DF
-            and est_surv * len(slots)
-            < self.PHRASE_CONJ_PRUNE_RATIO * total_df
-        ):
-            surv = self._slot_conjunction_docs(slots, stats, fld)
-            pos = pos.join(surv, "doc_id", "left_semi")
-        # else: either every slot is small (the position shuffle is
-        # already bounded) or the slots are all hot (the conjunction
-        # keeps ~every doc); the phase-2 matcher discards
-        # non-conjunction docs exactly either way (TwoPhaseIterator
-        # approximation skipped when it cannot pay for itself)
         idx_of = {t: i for i, t in enumerate(uniq)}
-        # slot -> list of (term_idx, offset) pairs
-        slot_spec = [
-            [idx_of[t] for t in alt] for alt in slots
-        ]
-
-        single_term_slots = all(len(idxs) == 1 for idxs in slot_spec)
-
-        @F.pandas_udf(T.DoubleType())
-        def phrase_freq(plists: pd.Series) -> pd.Series:
-            from lucene_spark.search.sloppy import sloppy_phrase_freq
-
-            out = np.zeros(len(plists), dtype=np.float64)
-            for r, entries in enumerate(plists):
-                arrs = {}
-                for e in entries:
-                    arrs[e["idx"]] = np.asarray(e["positions"], dtype=np.int64)
-                if slop > 0:
-                    # reference-exact sloppy matcher (repeat-safe).
-                    # Multi-term slots feed the union of their present
-                    # alternatives' positions (UnionPostingsEnum) under
-                    # the slot's FULL query term set, so repeat-group
-                    # detection sees query-level term identity
-                    # (SloppyPhraseMatcher.initFirstTime).
-                    slot_in = []
-                    ok = True
-                    for idxs in slot_spec:
-                        if single_term_slots:
-                            ti = idxs[0]
-                            if ti not in arrs:
-                                ok = False
-                                break
-                            slot_in.append((ti, arrs[ti]))
-                            continue
-                        parts = [arrs[i] for i in idxs if i in arrs]
-                        if not parts:
-                            ok = False
-                            break
-                        slot_in.append(
-                            (
-                                frozenset(idxs),
-                                np.unique(np.concatenate(parts)),
-                            )
-                        )
-                    if ok:
-                        out[r] = sloppy_phrase_freq(slot_in, slop)
-                    continue
-                # offset-adjusted union per slot
-                slot_pos = []
-                ok = True
-                for off, idxs in zip(offsets, slot_spec):
-                    parts = [arrs[i] - off for i in idxs if i in arrs]
-                    if not parts:
-                        ok = False
-                        break
-                    slot_pos.append(np.unique(np.concatenate(parts)))
-                if not ok:
-                    continue
-                cand = slot_pos[0]
-                for sp in slot_pos[1:]:
-                    cand = np.intersect1d(cand, sp, assume_unique=True)
-                out[r] = float(len(cand[cand >= 0]))
-            return pd.Series(out)
-
-        return self._freq_scored(pos, phrase_freq, w, fld)
+        slot_spec = [[idx_of[t] for t in alt] for alt in slots]
+        rows = self.index.postings_for_terms(uniq, fld).select(
+            "salt", "term", "blocks", "pos"
+        )
+        evaluate = _phrase_leaf(uniq, slot_spec, offsets, q.slop, w,
+                                self._scorer(fld))
+        return self._leaf_scored(rows, evaluate, k, candidates)
 
     def _slot_conjunction_docs(self, slots, stats, field: str | None = None) -> DataFrame:
         """Phase-1 approximation: docIDs containing some alternative of
@@ -1476,7 +1534,7 @@ class Searcher:
 
         return self._freq_scored(pos, ta_freq, w, fld)
 
-    def _bool_scored(self, q: P.BoolQ,
+    def _bool_scored(self, q: P.BoolQ, k: int | None = None,
                      candidates: list[int] | None = None) -> DataFrame:
         """BooleanQuery semantics (BooleanQuery.java:77-176,
         Boolean2ScorerSupplier.java:100-248): score = Σ scoring clauses;
@@ -1484,15 +1542,16 @@ class Searcher:
         MUST present), FILTER = non-scoring semi join, MUST_NOT = anti join.
 
         Term-leaf queries (every MUST/SHOULD clause a TermQ of one field,
-        no term in two clauses) take the one-scan plan: one postings scan
-        and one decode over all their terms, one groupBy (see
-        _term_bool_plan). Everything else takes the join tree below: one
-        scored sub-plan per clause."""
+        no term in two clauses) run leaf-at-a-time: one postings scan over
+        all their terms and one grouped call per salt that assembles,
+        scores and keeps the salt's top ``k`` (see _term_bool_plan).
+        Everything else takes the join tree below, one scored sub-plan
+        per clause, and ignores ``k``."""
         st = self._term_bool_state(q)
         if st == "empty":
             return self._empty_scored()
         if st is not None:
-            return self._term_bool_plan(st, candidates=candidates)
+            return self._term_bool_plan(st, k, candidates)
         # MUST: intersection of scored clauses
         must_df = None
         for c in q.must:
@@ -2180,18 +2239,18 @@ class Searcher:
     # ------------------------------------------------------------------
 
     def _term_bool_state(self, q: P.BoolQ):
-        """Shape check + stats lookup for a term-leaf BoolQ's one-scan
-        plan (_bool_scored). Returns None (a MUST/SHOULD clause that is not a TermQ of the
+        """Shape check + stats lookup for a term-leaf BoolQ's leaf plan
+        (_bool_scored). Returns None (a MUST/SHOULD clause that is not a TermQ of the
         query's one field, or a term in two clauses: the join tree),
         "empty" (provably no hits), or the state dict:
 
         - ``kinds``: term -> clause kind (_MUST/_SHOULD/_FILTER/_MUST_NOT)
-          for every term the one scan decodes: the scoring terms plus
+          for every term the leaf decodes: the scoring terms plus
           each FILTER / MUST_NOT TermQ of the same field and a new term;
         - ``weights``: term -> createWeight output, scoring terms only;
         - ``msm``: SHOULD matches a hit needs (0 = SHOULD optional);
-        - ``filter`` / ``must_not``: the clauses the one scan does not
-          carry, joined after the assembly."""
+        - ``filter`` / ``must_not``: the clauses the leaf does not
+          carry, joined after it."""
         scoring = q.must + q.should
         if not scoring or not all(isinstance(c, P.TermQ) for c in scoring):
             return None
@@ -2234,66 +2293,30 @@ class Searcher:
             "must_not": joined[_MUST_NOT],
         }
 
-    def _term_bool_plan(self, st, candidates=None) -> DataFrame:
-        """The one-scan plan of a term-leaf BoolQ (state from
+    def _term_bool_plan(self, st, k: int | None = None,
+                        candidates=None) -> DataFrame:
+        """The leaf plan of a term-leaf BoolQ (state from
         _term_bool_state): one postings scan over every term in
-        ``st["kinds"]``, one decode tagging each row with its clause kind
-        (_tagged_decode), one groupBy("doc_id") assembly. ``candidates``
-        filters the decoded rows before the shuffle (rescore, see _cand).
-
-        A hit matches every MUST and FILTER term, no MUST_NOT term and at
-        least ``msm`` SHOULD terms. Float rules are the join tree's:
-        float32 clause scores summed in double; MUST sums stay uncast;
-        the SHOULD sum is cast to float before it is added to MUST
-        (DisjunctionSumScorer.java:38-44); the total is cast when more
-        than one MUST or a MUST+SHOULD mix adds up."""
+        ``st["kinds"]`` and one grouped call per salt (_leaf_scored) whose
+        evaluator (_bool_leaf) applies the clause kinds, msm, float rules
+        and the query boost, so a salt's top ``k`` is cut on the final
+        score. FILTER / MUST_NOT clauses the scan does not carry join
+        after the leaf; they change the hit set, so then every match is
+        emitted."""
         q, kinds, field = st["q"], st["kinds"], st["field"]
         rows = self.index.postings_for_terms(list(kinds), field).select(
-            "term", "blocks"
+            "salt", "term", "blocks"
         )
-        n = Counter(kinds.values())
-        fn = _tagged_decode(kinds, st["weights"], self._scorer(field))
-        decoded = self._cand(
-            self._live(rows.mapInPandas(fn, schema=_TAGGED_SCHEMA)), candidates
-        )
-
-        kind = F.col("kind")
-        aggs, keep = [], []
-        if n[_MUST]:
-            aggs.append(F.sum(F.when(kind == _MUST, F.col("score"))).alias("m_sum"))
-            aggs.append(F.count(F.when(kind == _MUST, F.lit(1))).alias("m_cnt"))
-            keep.append(F.col("m_cnt") == n[_MUST])
-        if n[_SHOULD]:
-            aggs.append(F.sum(F.when(kind == _SHOULD, F.col("score"))).alias("s_sum"))
-            aggs.append(F.count(F.when(kind == _SHOULD, F.lit(1))).alias("s_cnt"))
-            if st["msm"] > 0:
-                keep.append(F.col("s_cnt") >= st["msm"])
-        if n[_FILTER]:
-            aggs.append(F.count(F.when(kind == _FILTER, F.lit(1))).alias("f_cnt"))
-            keep.append(F.col("f_cnt") == n[_FILTER])
-        if n[_MUST_NOT]:
-            aggs.append(F.count(F.when(kind == _MUST_NOT, F.lit(1))).alias("x_cnt"))
-            keep.append(F.col("x_cnt") == 0)
-        agg = decoded.groupBy("doc_id").agg(*aggs)
-        for cond in keep:
-            agg = agg.filter(cond)
-
-        def as_float(c):
-            return c.cast("float").cast("double") if self.scoring == "lucene" else c
-
-        if n[_MUST] and n[_SHOULD]:
-            s_part = as_float(F.coalesce(F.col("s_sum"), F.lit(0.0)))
-            total = as_float(F.col("m_sum") + s_part)
-        elif n[_MUST]:
-            total = as_float(F.col("m_sum")) if n[_MUST] > 1 else F.col("m_sum")
-        else:
-            total = as_float(F.col("s_sum"))
-        combined = agg.select("doc_id", total.alias("score"))
+        evaluate = _bool_leaf(kinds, st["weights"], self._scorer(field),
+                              st["msm"], self.scoring == "lucene", q.boost)
+        joined = st["filter"] or st["must_not"]
+        combined = self._leaf_scored(rows, evaluate, None if joined else k,
+                                     candidates)
         for c in st["filter"]:
             combined = combined.join(self.doc_set(c), "doc_id", "left_semi")
         for c in st["must_not"]:
             combined = combined.join(self.doc_set(c), "doc_id", "left_anti")
-        return self._boosted(combined, q.boost)
+        return combined
 
     def search_after(self, q, k: int, after_score: float, after_doc: int,
                      field_filters: tuple = ()) -> DataFrame:
@@ -2439,96 +2462,53 @@ class Searcher:
                 "description": f"max plus {q.tiebreak} times others of:",
                 "details": hits,
             }
-        if isinstance(q, P.DistanceFeatureQ):
-            # LongDistanceFeatureQuery.java:105-125 explain: weight /
-            # pivotDistance / origin / current value as details
+        if isinstance(q, (P.DistanceFeatureQ, P.GeoDistanceFeatureQ)):
+            # LongDistanceFeatureQuery.java:105-125 and
+            # LatLonPointDistanceFeatureQuery.java:119-140 explain: the
+            # inputs as details; a doc missing a value is a no-match
+            geo = isinstance(q, P.GeoDistanceFeatureQ)
+            cols = [q.lat_col, q.lon_col] if geo else [q.col]
             row = self.index.docs.filter(
                 F.col("doc_id") == doc_id
-            ).select(q.col).collect()
-            if not row or row[0][0] is None:
+            ).select(*cols).collect()
+            if not row or any(v is None for v in row[0]):
                 return {
                     "value": 0.0,
                     "description": (
-                        f"Document {doc_id} doesn't have a value "
-                        f"for field {q.col}"
+                        f"Document {doc_id} doesn't have a value for "
+                        f"field{'s' if geo else ''} {','.join(cols)}"
                     ),
                     "details": [], "matched": False,
                 }
-            value = float(row[0][0])
-            dist = abs(value - float(q.origin))
-            val = float(q.boost) * (
-                float(q.pivot) / (float(q.pivot) + dist)
-            )
-            if self.scoring == "lucene":
-                val = float(np.float32(val))
-            return {
-                "value": val,
-                "description": (
-                    "Distance score, computed as weight * pivotDistance"
-                    " / (pivotDistance + abs(value - origin)) from:"
-                ),
-                "details": [
-                    {"value": float(q.boost), "description": "weight",
-                     "details": []},
-                    {"value": float(q.pivot),
-                     "description": "pivotDistance", "details": []},
-                    {"value": float(q.origin), "description": "origin",
-                     "details": []},
-                    {"value": value, "description": "current value",
-                     "details": []},
-                ],
-            }
-        if isinstance(q, P.GeoDistanceFeatureQ):
-            # LatLonPointDistanceFeatureQuery.java:119-140 explain:
-            # weight / pivotDistance / originLat / originLon / current
-            # lat / current lon / computed distance as details; docs
-            # with either coordinate missing explain as no-match.
-            from lucene_spark.geo import haversine_meters_py
+            if geo:
+                from lucene_spark.geo import haversine_meters_py
 
-            row = self.index.docs.filter(
-                F.col("doc_id") == doc_id
-            ).select(q.lat_col, q.lon_col).collect()
-            if (
-                not row
-                or row[0][0] is None
-                or row[0][1] is None
-            ):
-                return {
-                    "value": 0.0,
-                    "description": (
-                        f"Document {doc_id} doesn't have a value "
-                        f"for fields {q.lat_col},{q.lon_col}"
-                    ),
-                    "details": [], "matched": False,
-                }
-            cur_lat, cur_lon = float(row[0][0]), float(row[0][1])
-            dist = haversine_meters_py(cur_lat, cur_lon, q.lat, q.lon)
-            val = float(q.boost) * (
-                float(q.pivot_m) / (float(q.pivot_m) + dist)
-            )
+                cur_lat, cur_lon = float(row[0][0]), float(row[0][1])
+                dist = haversine_meters_py(cur_lat, cur_lon, q.lat, q.lon)
+                pivot = float(q.pivot_m)
+                inputs = [(float(q.lat), "originLat"), (float(q.lon), "originLon"),
+                          (cur_lat, "current lat"), (cur_lon, "current lon"),
+                          (float(dist), "distance")]
+                how = "(pivotDistance + distance)"
+            else:
+                value = float(row[0][0])
+                dist = abs(value - float(q.origin))
+                pivot = float(q.pivot)
+                inputs = [(float(q.origin), "origin"), (value, "current value")]
+                how = "(pivotDistance + abs(value - origin))"
+            val = float(q.boost) * (pivot / (pivot + dist))
             if self.scoring == "lucene":
                 val = float(np.float32(val))
             return {
                 "value": val,
                 "description": (
                     "Distance score, computed as weight * pivotDistance"
-                    " / (pivotDistance + distance) from:"
+                    f" / {how} from:"
                 ),
                 "details": [
-                    {"value": float(q.boost), "description": "weight",
-                     "details": []},
-                    {"value": float(q.pivot_m),
-                     "description": "pivotDistance", "details": []},
-                    {"value": float(q.lat), "description": "originLat",
-                     "details": []},
-                    {"value": float(q.lon), "description": "originLon",
-                     "details": []},
-                    {"value": cur_lat, "description": "current lat",
-                     "details": []},
-                    {"value": cur_lon, "description": "current lon",
-                     "details": []},
-                    {"value": float(dist), "description": "distance",
-                     "details": []},
+                    {"value": v, "description": d, "details": []}
+                    for v, d in [(float(q.boost), "weight"),
+                                 (pivot, "pivotDistance"), *inputs]
                 ],
             }
         # generic fallback: score the query, pick this doc

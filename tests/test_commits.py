@@ -180,3 +180,58 @@ def test_purge_never_drops_live_paths(spark, built):
     rep = purge_commits(built, keep_last=1)
     assert rep["gc_removed_dirs"] == []
     assert Index(spark, built).deletes.count() == 1
+
+
+def _hits(spark, idx_dir, q):
+    return [(r["doc_id"], r["score"])
+            for r in Searcher(Index(spark, idx_dir)).top_k(q, 10).collect()]
+
+
+def test_copied_index_reads_its_own_files(spark, built, tmp_path):
+    """Manifests store table paths relative to the index directory: a
+    copy answers queries after the original is deleted, and an append to
+    the copy writes into the copy."""
+    import json
+    import shutil
+
+    dele = spark.createDataFrame([(3,)], "doc_id long")
+    delete_docs(spark, built, dele)  # a deletes table and a second commit
+    q = TermQ("import")
+    want = _hits(spark, built, q)
+    with open(os.path.join(built, "manifest.json")) as f:
+        stored = json.load(f)["paths"]
+    assert not os.path.isabs(stored["postings"]), stored
+    assert not os.path.isabs(stored["deletes"][0]), stored
+    copy = str(tmp_path / "copy")
+    shutil.copytree(built, copy)
+    shutil.rmtree(built)
+    assert want and _hits(spark, copy, q) == want
+    assert Index(spark, copy, commit=1).deletes is None
+    from lucene_spark.index import append_to_index
+
+    extra = make_corpus(8, seed=31).iloc[:8]
+    extra["repo"] = "zz/copy"
+    extra["stars"] = 1
+    append_to_index(spark, spark.createDataFrame(extra), copy,
+                    order_cols=["repo", "path", "commit"])
+    idx = Index(spark, copy)
+    assert idx.N == Index(spark, copy, commit=2).N + 8
+    assert all(p.startswith(copy) for p in idx.manifest["paths"]["postings"])
+    assert not os.path.exists(built)
+
+
+def test_absolute_manifest_paths_still_open(spark, built):
+    """A manifest written with absolute table paths (before paths were
+    stored relative) opens and queries the same."""
+    import json
+
+    q = TermQ("import")
+    want = _hits(spark, built, q)
+    mf = os.path.join(built, "manifest.json")
+    with open(mf) as f:
+        m = json.load(f)
+    m["paths"] = Index(spark, built).manifest["paths"]  # resolved, absolute
+    assert os.path.isabs(m["paths"]["postings"])
+    with open(mf, "w") as f:
+        json.dump(m, f)
+    assert _hits(spark, built, q) == want

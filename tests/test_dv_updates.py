@@ -136,7 +136,8 @@ def test_checkindex_validates_generations(spark, built):
     import os as _os
 
     with open(_os.path.join(built, "manifest.json")) as f:
-        gen_path = _json.load(f)["paths"]["dv_updates"][0]["path"]
+        gen_path = _os.path.join(
+            built, _json.load(f)["paths"]["dv_updates"][0]["path"])
     spark.createDataFrame(
         [(10_000_000, 1)], "doc_id long, value long"
     ).write.mode("append").parquet(gen_path)

@@ -4,8 +4,10 @@ visible in the executed plan (SURVEY.md §4 / the .explain discipline).
 - term lookup: PushedFilters on bucket and term (postings are written
   flat; parquet row-group stats and dictionary filtering prune), and the
   scan reads only the columns the decode needs
-- term-leaf boolean top-k: one postings scan and one decode for all
-  clauses; other clause kinds keep the per-clause join tree
+- leaf plans (term-leaf booleans, phrases): one postings scan and one
+  grouped-map call per salt; on a one-salt index no Exchange and one
+  job, otherwise one hash exchange on salt; other clause kinds keep the
+  per-clause join tree
 - top-k: TakeOrderedAndProject (per-partition heap + merge, never a
   global sort)
 - multi-term expansion: broadcast semi join of the matching dictionary
@@ -34,6 +36,10 @@ from lucene_spark.index import Index, append_to_index, build_index
 from lucene_spark.pipeline import textstats
 from lucene_spark.search import BoolQ, PhraseQ, PrefixQ, Searcher, SynonymQ, TermQ
 from lucene_spark.search.executor import _SCORE_SCHEMA
+
+# jobs of a 60-doc append onto a 200-doc index; 19 while the builder
+# inferred the schema of every table it read back
+APPEND_JOBS = 16
 
 
 @pytest.fixture(scope="module")
@@ -83,29 +89,71 @@ def test_term_topk_reads_no_position_columns(searcher):
     assert not cols & {"pos", "off", "pay"}, plan
 
 
-@pytest.mark.parametrize("q", [
-    BoolQ(should=(TermQ("license"), TermQ("file"))),
-    BoolQ(must=(TermQ("license"), TermQ("file"))),
-    BoolQ(must=(TermQ("license"),), must_not=(TermQ("the"),)),
-    BoolQ(should=(TermQ("license"), TermQ("file"), TermQ("the")),
-          min_should_match=2),
-], ids=["or", "and", "must_not", "msm"])
-def test_term_bool_topk_one_scan(searcher, q):
-    """A term-leaf boolean top-k is one postings scan and one decode,
-    whatever its clause kinds."""
+LEAF_SHAPES = {
+    "or": BoolQ(should=(TermQ("license"), TermQ("file"))),
+    "and": BoolQ(must=(TermQ("license"), TermQ("file"))),
+    "must_not": BoolQ(must=(TermQ("license"),), must_not=(TermQ("the"),)),
+    "msm": BoolQ(should=(TermQ("license"), TermQ("file"), TermQ("the")),
+                 min_should_match=2),
+    "phrase": PhraseQ(("apache", "license")),
+}
+
+
+def salt_exchanges(plan: str) -> int:
+    return len(re.findall(r"Exchange hashpartitioning\(salt#", plan))
+
+
+@pytest.mark.parametrize("name", ["or", "and", "must_not", "msm"])
+def test_term_bool_topk_one_scan(searcher, name):
+    """A term-leaf boolean top-k is one postings scan and one grouped
+    call per salt, whatever its clause kinds; on a many-salt index the
+    compressed rows cross one hash exchange on salt."""
+    q = LEAF_SHAPES[name]
     st = searcher._term_bool_state(q)
     assert len(st["kinds"]) == len(q.must + q.should + q.must_not)  # all present
-    plan = plan_of(searcher.top_k(q, 10))
+    df = searcher.top_k(q, 10)
+    df.collect()
+    plan = plan_of(df).split("== Initial Plan ==")[0]
     assert plan.count("FileScan parquet") == 1, plan
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "MapInPandas" not in plan, plan
+    assert salt_exchanges(plan) == 1 and plan.count("Exchange") == 1, plan
     assert "InMemoryRelation" not in plan, plan  # nothing persisted
+
+
+@pytest.fixture(scope="module")
+def one_salt(spark, tmp_path_factory):
+    """The module's corpus in one salt (default salt_rows)."""
+    d = str(tmp_path_factory.mktemp("plan_idx_one_salt"))
+    build_index(spark, spark.createDataFrame(make_corpus(200, seed=5)), d,
+                text_col="content", order_cols=["repo", "path", "commit"],
+                num_buckets=4)
+    return Searcher(Index(spark, d))
+
+
+@pytest.mark.parametrize("name", list(LEAF_SHAPES))
+def test_leaf_plan_one_salt_no_exchange(spark, one_salt, name):
+    """On a one-salt index a leaf top-k plans no Exchange: one scan, one
+    grouped call, and its collect is one Spark job."""
+    assert -(-one_salt.index.max_doc // one_salt.index.salt_rows) == 1
+    df = one_salt.top_k(LEAF_SHAPES[name], 10)
+    rows = []
+    assert _jobs_in_group(spark.sparkContext, f"leaf_one_salt_{name}",
+                          lambda: rows.extend(df.collect())) == 1
+    assert rows
+    plan = plan_of(df).split("== Initial Plan ==")[0]
+    assert "Exchange" not in plan, plan
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
 
 
 def test_bool_with_phrase_keeps_join_tree(searcher):
     q = BoolQ(must=(TermQ("license"), PhraseQ(("apache", "license"))))
     assert searcher._term_bool_state(q) is None
     plan = plan_of(searcher.top_k(q, 10))
-    assert plan.count("MapInPandas") == 2 and "Join" in plan, plan
+    # the term clause's decode and the phrase's leaf call, joined
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("FlatMapGroupsInPandas") == 1 and "Join" in plan, plan
 
 
 @pytest.mark.parametrize("api", ["top_k", "top_k_batch"])
@@ -189,6 +237,19 @@ def test_fresh_reader_plan_build_runs_no_job(spark, job_audit_dirs, shape):
     assert _jobs_in_group(sc, f"fresh_collect_{shape}",
                           lambda: rows.extend(df.collect())) == 1
     assert rows
+
+
+def test_append_jobs(spark, tmp_path):
+    """A 60-doc append_to_index reads the tables it has just written with
+    their footer schemas: no schema-inference job per read."""
+    d = str(tmp_path / "append_jobs")
+    build_index(spark, spark.createDataFrame(make_corpus(200, seed=5)), d,
+                text_col="content", order_cols=["repo", "path", "commit"],
+                num_buckets=4, salt_rows=64)
+    batch = spark.createDataFrame(make_corpus(60, seed=11))
+    n = _jobs_in_group(spark.sparkContext, "append_jobs", lambda: append_to_index(
+        spark, batch, d, order_cols=["repo", "path", "commit"]))
+    assert n <= APPEND_JOBS, n
 
 
 def test_multiterm_expansion_broadcast(searcher):
@@ -284,38 +345,19 @@ def test_minhash_verify_no_shingle_self_join(spark, docs_df):
 
 
 def test_phrase_two_phase_plan(searcher):
-    from lucene_spark.search import PhraseQ
-
-    # small-df route: every slot is tiny, so the phase-1 conjunction is
-    # cost-gated OFF — NO semi-join, the position shuffle alone
-    plan_small = plan_of(searcher.scored(PhraseQ(("license", "file"))))
-    assert plan_small.find("collect_list") >= 0, plan_small
-    assert "LeftSemi" not in plan_small, plan_small
-
-    # big-df route (threshold forced to 0): the positions aggregate must
-    # sit ABOVE a doc_id semi join (only conjunction survivors' position
-    # arrays reach the shuffle)
-    old = searcher.PHRASE_CONJ_MIN_DF
-    searcher.PHRASE_CONJ_MIN_DF = 0
-    try:
-        plan = plan_of(searcher.scored(PhraseQ(("license", "file"))))
-    finally:
-        searcher.PHRASE_CONJ_MIN_DF = old
-    agg_at = plan.find("collect_list")
-    assert agg_at >= 0, plan
-    below = plan[agg_at:]
-    assert "LeftSemi" in below, plan
-
-    # the phrase freq UDF and the score UDF each run once per doc, for
-    # the phrase alone and as a MUST clause beside a term; the final
-    # adaptive plan of an executed query counts the same
-    once = Counter(phrase_freq=1, score_udf=1)
+    """A phrase is one leaf call per salt: the docID conjunction and the
+    position matching run inside it, so no position list crosses a
+    shuffle (no collect_list) and no per-doc UDF runs (no
+    ArrowEvalPython), alone or as a MUST clause beside a term."""
     for q in (PhraseQ(("apache", "license")),
               BoolQ(must=(TermQ("license"), PhraseQ(("apache", "license"))))):
         df = searcher.top_k(q, 10)
-        assert udf_evals(df) == once, plan_of(df)
         df.collect()
-        assert udf_evals(df) == once, plan_of(df)
+        plan = plan_of(df).split("== Initial Plan ==")[0]
+        assert "collect_list" not in plan, plan
+        assert udf_evals(df) == Counter(), plan
+        assert plan.count("FlatMapGroupsInPandas") == 1, plan
+        assert salt_exchanges(plan) == 1, plan
 
 
 def test_term_doc_set_shuffle_free(searcher):

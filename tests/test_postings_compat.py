@@ -54,7 +54,7 @@ QUERIES = {
 def _postings_files(idx_dir: str) -> list[str]:
     with open(os.path.join(idx_dir, "manifest.json")) as f:
         p = json.load(f)["paths"]["postings"]
-    seg = p if isinstance(p, str) else p[0]
+    seg = os.path.join(idx_dir, p if isinstance(p, str) else p[0])
     return sorted(glob.glob(os.path.join(seg, "*.parquet")))
 
 

@@ -1,6 +1,6 @@
 """Differential test for term-leaf boolean queries (every MUST/SHOULD
-clause a TermQ). They run as one postings scan, one tagged decode and one
-groupBy; this test checks that plan against a reference composed in
+clause a TermQ). They run as one postings scan and one grouped call per
+salt (the leaf plan); this test checks that plan against a reference composed in
 pandas from per-clause ``scored(TermQ)`` collects (a different code path:
 the single-term decode) with BooleanQuery's float rules:
 

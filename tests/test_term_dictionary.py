@@ -161,7 +161,7 @@ def _rewrite_stats(idx_dir: str, order, row_group_size: int) -> str:
     group size, keeping its footer metadata (the Spark schema)."""
     with open(os.path.join(idx_dir, "manifest.json")) as f:
         p = json.load(f)["paths"]["term_stats"]
-    seg = p if isinstance(p, str) else p[0]
+    seg = os.path.join(idx_dir, p if isinstance(p, str) else p[0])
     path = sorted(glob.glob(os.path.join(seg, "*.parquet")))[0]
     table = pq.read_table(path)
     meta = table.schema.metadata
