@@ -40,6 +40,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 
 COMMITS_DIR = "commits"
 SNAPSHOTS_FILE = "snapshots.json"
@@ -58,7 +59,9 @@ def _commit_file(index_dir: str, gen: int) -> str:
 
 
 def _atomic_write(path: str, obj) -> None:
-    tmp = path + ".tmp"
+    # a unique temp name, so concurrent writers of one file (a local
+    # commit racing a replicate) never write into each other's temp file
+    tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
     with open(tmp, "w") as f:
         json.dump(obj, f, indent=2)
     os.replace(tmp, path)
@@ -106,11 +109,13 @@ def read_manifest(index_dir: str, path: str | None = None) -> dict:
 
 def write_manifest(index_dir: str, manifest: dict) -> None:
     """Atomically write ``manifest`` to ``manifest.json``, each table
-    path under ``index_dir`` stored relative to it."""
+    path under ``index_dir`` stored relative to it. ``manifest`` holds
+    paths as the code uses them: absolute, or relative to the working
+    directory (a relative ``index_dir``)."""
     root = os.path.abspath(index_dir)
 
     def rel(p: str) -> str:
-        a = os.path.abspath(os.path.join(root, p))
+        a = os.path.abspath(p)
         return os.path.relpath(a, root) if a.startswith(root + os.sep) else p
 
     _atomic_write(os.path.join(index_dir, "manifest.json"),
@@ -300,7 +305,8 @@ def purge_commits(index_dir: str, keep_last: int = 1,
     if gc_data:
         referenced: set[str] = set()
         for g in sorted(retained):
-            referenced |= _referenced_paths(read_commit(index_dir, g), index_dir)
+            referenced |= _referenced_paths(
+                _read_json(_commit_file(index_dir, g)), index_dir)
         live = os.path.join(index_dir, "manifest.json")
         if os.path.exists(live):
             referenced |= _referenced_paths(_read_json(live), index_dir)

@@ -749,11 +749,13 @@ class Searcher:
                 raise ValueError(q.fn)
             return self._docs_scored(feat.isNotNull(), expr, candidates)
         if isinstance(q, P.DistanceFeatureQ):
-            # LongDistanceFeatureQuery.java:117: score = boost * (pivot /
-            # (pivot + |value - origin|)) in double — the division rounds
-            # first, then the boost multiply — with one final float
-            # rounding.
+            # LongDistanceFeatureQuery.java:117: score = boost *
+            # pivot / (pivot + |value - origin|), double math, one
+            # final float rounding.
             val = F.col(q.col).cast("double")
+            # Evaluation order matches the reference: boost * (pivot /
+            # (pivot + dist)) — the division rounds first, then the
+            # boost multiply (LongDistanceFeatureQuery.java:117).
             expr = F.lit(float(q.boost)) * (
                 F.lit(float(q.pivot))
                 / (F.lit(float(q.pivot)) + F.abs(val - F.lit(float(q.origin))))
@@ -761,11 +763,12 @@ class Searcher:
             return self._docs_scored(val.isNotNull(), expr, candidates)
         if isinstance(q, P.GeoDistanceFeatureQ):
             # LatLonPointDistanceFeatureQuery.java:130-131: haversine
-            # meters from the origin through the same pulse; the division
-            # rounds before the boost multiply (line 271).
+            # meters from the origin through the same pulse.
             from lucene_spark.geo import haversine_meters
 
             dist = haversine_meters(q.lat_col, q.lon_col, q.lat, q.lon)
+            # boost * (pivot / (pivot + d)) — division rounds before the
+            # boost multiply (LatLonPointDistanceFeatureQuery.java:271).
             expr = F.lit(float(q.boost)) * (
                 F.lit(float(q.pivot_m)) / (F.lit(float(q.pivot_m)) + dist)
             )
@@ -2462,53 +2465,96 @@ class Searcher:
                 "description": f"max plus {q.tiebreak} times others of:",
                 "details": hits,
             }
-        if isinstance(q, (P.DistanceFeatureQ, P.GeoDistanceFeatureQ)):
-            # LongDistanceFeatureQuery.java:105-125 and
-            # LatLonPointDistanceFeatureQuery.java:119-140 explain: the
-            # inputs as details; a doc missing a value is a no-match
-            geo = isinstance(q, P.GeoDistanceFeatureQ)
-            cols = [q.lat_col, q.lon_col] if geo else [q.col]
+        if isinstance(q, P.DistanceFeatureQ):
+            # LongDistanceFeatureQuery.java:105-125 explain: weight /
+            # pivotDistance / origin / current value as details
             row = self.index.docs.filter(
                 F.col("doc_id") == doc_id
-            ).select(*cols).collect()
-            if not row or any(v is None for v in row[0]):
+            ).select(q.col).collect()
+            if not row or row[0][0] is None:
                 return {
                     "value": 0.0,
                     "description": (
-                        f"Document {doc_id} doesn't have a value for "
-                        f"field{'s' if geo else ''} {','.join(cols)}"
+                        f"Document {doc_id} doesn't have a value "
+                        f"for field {q.col}"
                     ),
                     "details": [], "matched": False,
                 }
-            if geo:
-                from lucene_spark.geo import haversine_meters_py
-
-                cur_lat, cur_lon = float(row[0][0]), float(row[0][1])
-                dist = haversine_meters_py(cur_lat, cur_lon, q.lat, q.lon)
-                pivot = float(q.pivot_m)
-                inputs = [(float(q.lat), "originLat"), (float(q.lon), "originLon"),
-                          (cur_lat, "current lat"), (cur_lon, "current lon"),
-                          (float(dist), "distance")]
-                how = "(pivotDistance + distance)"
-            else:
-                value = float(row[0][0])
-                dist = abs(value - float(q.origin))
-                pivot = float(q.pivot)
-                inputs = [(float(q.origin), "origin"), (value, "current value")]
-                how = "(pivotDistance + abs(value - origin))"
-            val = float(q.boost) * (pivot / (pivot + dist))
+            value = float(row[0][0])
+            dist = abs(value - float(q.origin))
+            val = float(q.boost) * (
+                float(q.pivot) / (float(q.pivot) + dist)
+            )
             if self.scoring == "lucene":
                 val = float(np.float32(val))
             return {
                 "value": val,
                 "description": (
                     "Distance score, computed as weight * pivotDistance"
-                    f" / {how} from:"
+                    " / (pivotDistance + abs(value - origin)) from:"
                 ),
                 "details": [
-                    {"value": v, "description": d, "details": []}
-                    for v, d in [(float(q.boost), "weight"),
-                                 (pivot, "pivotDistance"), *inputs]
+                    {"value": float(q.boost), "description": "weight",
+                     "details": []},
+                    {"value": float(q.pivot),
+                     "description": "pivotDistance", "details": []},
+                    {"value": float(q.origin), "description": "origin",
+                     "details": []},
+                    {"value": value, "description": "current value",
+                     "details": []},
+                ],
+            }
+        if isinstance(q, P.GeoDistanceFeatureQ):
+            # LatLonPointDistanceFeatureQuery.java:119-140 explain:
+            # weight / pivotDistance / originLat / originLon / current
+            # lat / current lon / computed distance as details; docs
+            # with either coordinate missing explain as no-match.
+            from lucene_spark.geo import haversine_meters_py
+
+            row = self.index.docs.filter(
+                F.col("doc_id") == doc_id
+            ).select(q.lat_col, q.lon_col).collect()
+            if (
+                not row
+                or row[0][0] is None
+                or row[0][1] is None
+            ):
+                return {
+                    "value": 0.0,
+                    "description": (
+                        f"Document {doc_id} doesn't have a value "
+                        f"for fields {q.lat_col},{q.lon_col}"
+                    ),
+                    "details": [], "matched": False,
+                }
+            cur_lat, cur_lon = float(row[0][0]), float(row[0][1])
+            dist = haversine_meters_py(cur_lat, cur_lon, q.lat, q.lon)
+            val = float(q.boost) * (
+                float(q.pivot_m) / (float(q.pivot_m) + dist)
+            )
+            if self.scoring == "lucene":
+                val = float(np.float32(val))
+            return {
+                "value": val,
+                "description": (
+                    "Distance score, computed as weight * pivotDistance"
+                    " / (pivotDistance + distance) from:"
+                ),
+                "details": [
+                    {"value": float(q.boost), "description": "weight",
+                     "details": []},
+                    {"value": float(q.pivot_m),
+                     "description": "pivotDistance", "details": []},
+                    {"value": float(q.lat), "description": "originLat",
+                     "details": []},
+                    {"value": float(q.lon), "description": "originLon",
+                     "details": []},
+                    {"value": cur_lat, "description": "current lat",
+                     "details": []},
+                    {"value": cur_lon, "description": "current lon",
+                     "details": []},
+                    {"value": float(dist), "description": "distance",
+                     "details": []},
                 ],
             }
         # generic fallback: score the query, pick this doc

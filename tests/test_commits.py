@@ -235,3 +235,49 @@ def test_absolute_manifest_paths_still_open(spark, built):
     with open(mf, "w") as f:
         json.dump(m, f)
     assert _hits(spark, built, q) == want
+
+
+def test_relative_index_dir(spark, tmp_path, monkeypatch):
+    """A relative ``index_dir`` (resolved against the working directory,
+    which the driver and the local JVM share) builds, reopens, appends,
+    compacts and purges without nesting paths or collecting the tables
+    of a retained commit."""
+    import json
+
+    from lucene_spark.index import append_to_index
+
+    # the JVM resolves relative paths against the directory it started in
+    monkeypatch.chdir(spark._jvm.java.lang.System.getProperty("user.dir"))
+    idx_dir = os.path.relpath(str(tmp_path / "idx"))
+    assert not os.path.isabs(idx_dir)
+    pdf = make_corpus(40, seed=5)
+    build_index(spark, spark.createDataFrame(pdf), idx_dir,
+                text_col="content", order_cols=["repo", "path", "commit"],
+                num_buckets=2)
+    with open(os.path.join(idx_dir, "manifest.json")) as f:
+        assert json.load(f)["paths"]["postings"] == "postings"
+    q = TermQ("import")
+    want = _hits(spark, idx_dir, q)
+    assert want
+    n = Index(spark, idx_dir).N
+    extra = make_corpus(8, seed=31).iloc[:8]
+    extra["repo"] = "zz/rel"
+    append_to_index(spark, spark.createDataFrame(extra), idx_dir,
+                    order_cols=["repo", "path", "commit"])
+    idx = Index(spark, idx_dir)
+    assert idx.N == n + 8
+    for p in idx.manifest["paths"]["postings"]:
+        assert os.path.isdir(p) and not os.path.isabs(p), p
+    pinned = SnapshotDeletionPolicy(idx_dir).snapshot(1)
+    compact_index(spark, idx_dir)
+    rep = purge_commits(idx_dir, keep_last=1, gc_data=True)
+    assert pinned in rep["retained"]
+    # the pinned build-time tables are not live any more, yet survive
+    assert _hits_at(spark, idx_dir, pinned, q) == want
+    assert len(_hits(spark, idx_dir, q)) == 10
+
+
+def _hits_at(spark, idx_dir, gen, q):
+    idx = Index(spark, idx_dir, commit=gen)
+    return [(r["doc_id"], r["score"])
+            for r in Searcher(idx).top_k(q, 10).collect()]
