@@ -41,11 +41,7 @@ import shutil
 import time
 import uuid
 
-from lucene_spark.index.commits import read_manifest, write_manifest
-
-
-def _as_list(v):
-    return v if isinstance(v, list) else [v]
+from lucene_spark.index.commits import _map_paths, read_manifest, write_manifest
 
 
 def _walk_files(root: str) -> dict[str, int]:
@@ -74,19 +70,19 @@ class Revision:
         # file set: every stage dir the manifest references, keyed by
         # replica-layout relpath (relative to the index root)
         self.files: dict[str, tuple[str, int]] = {}
-        for key, paths in self.manifest.get("paths", {}).items():
-            for p in _as_list(paths):
-                p = os.path.abspath(p)
-                if os.path.commonpath([p, self.index_dir]) != self.index_dir:
-                    raise ValueError(
-                        f"manifest path {p!r} escapes the index root "
-                        f"{self.index_dir!r} — not replicable as a unit"
-                    )
-                base = os.path.relpath(p, self.index_dir)
-                for rel, size in _walk_files(p).items():
-                    self.files[os.path.join(base, rel)] = (
-                        os.path.join(p, rel), size,
-                    )
+        tables: list[str] = []  # every table path, dv-update generations too
+        _map_paths(self.manifest, tables.append)
+        for p in map(os.path.abspath, tables):
+            if os.path.commonpath([p, self.index_dir]) != self.index_dir:
+                raise ValueError(
+                    f"manifest path {p!r} escapes the index root "
+                    f"{self.index_dir!r} — not replicable as a unit"
+                )
+            base = os.path.relpath(p, self.index_dir)
+            for rel, size in _walk_files(p).items():
+                self.files[os.path.join(base, rel)] = (
+                    os.path.join(p, rel), size,
+                )
 
 
 def replicate(src_index_dir: str, dst_index_dir: str) -> dict:

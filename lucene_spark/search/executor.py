@@ -11,10 +11,12 @@ asc), the tie-break of search/HitQueue.java:78-84.
 - Single terms decode and score in one mapInPandas; top-k skips blocks
   whose impact max cannot beat the running local top-k (ImpactsDISI
   .advanceShallow, search/ImpactsDISI.java:61-91, at block granularity).
-- Term-leaf booleans and phrases run leaf-at-a-time: a salt is a docID
-  range like a Lucene leaf, one grouped call per salt decodes, matches,
-  scores and keeps the salt's top k, and TakeOrderedAndProject merges
-  the leaves (TopDocs.merge). See Searcher._leaf_scored.
+- Term-leaf booleans, synonyms and every position family (phrases,
+  term automata, intervals and spans, payload queries) run
+  leaf-at-a-time: a salt is a docID range like a Lucene leaf, one
+  grouped call per salt decodes, matches, scores and keeps the salt's
+  top k, and TakeOrderedAndProject merges the leaves (TopDocs.merge).
+  See Searcher._leaf_scored.
 - Other families compose per-clause plans with joins and aggregates.
 
 Two scoring modes:
@@ -57,20 +59,6 @@ _FREQ_SCHEMA = T.StructType(
         T.StructField("norm", T.IntegerType()),
     ]
 )
-_POS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("idx", T.IntegerType()),
-        T.StructField("positions", T.ArrayType(T.IntegerType())),
-        T.StructField("norm", T.IntegerType()),
-    ]
-)
-
-_POS_PAY_SCHEMA = T.StructType(
-    _POS_SCHEMA.fields
-    + [T.StructField("payloads", T.ArrayType(T.FloatType()))]
-)
-
 # Leaves whose doc set is their own plan (Searcher._doc_set_uncached):
 # predicates over the docs table, and the multi-term queries whose
 # constant-score rewrite (TermInSetQ's only one) scored() builds on the
@@ -241,108 +229,182 @@ def _bool_leaf(kinds: dict, weights: dict, score, msm: int, lucene: bool,
     return evaluate
 
 
-def _phrase_leaf(terms: list, slot_spec: list, offsets: list, slop: int,
-                 weight, score):
-    """Per-salt evaluator of a phrase (Searcher._phrase_scored): the docID
-    conjunction of the slots from the doc blocks (np.intersect1d, rarest
-    slot first), then positions decoded only in rows holding a survivor,
-    then the phrase freq per survivor and its score.
+def _survivor_positions(pdf: pd.DataFrame, keys: list, fields: list,
+                        slot_spec: list, base: int, width: int,
+                        payloads: bool = False):
+    """The per-salt decode every position family shares (TwoPhaseIterator
+    pattern): each row's doc blocks decode, the slots' docIDs intersect
+    (np.intersect1d, rarest slot first; no slots: every doc of every
+    key), then positions, and with ``payloads`` the f32 payloads aligned
+    to them, decode only in rows holding a survivor.
 
-    ``slot_spec``: per slot the indexes into ``terms`` of its
-    alternatives. Exact phrases (slop 0) count aligned starts
-    ``p - offset >= 0`` present in every slot, for all survivors at once
-    on (doc, start) keys (ExactPhraseMatcher.java:166); sloppy ones call
-    the reference matcher per survivor (sloppy.sloppy_phrase_freq) with
-    the slot keys repeat detection needs: the term index for one-term
-    slots, the frozenset of alternatives otherwise."""
-    idx_of = {t: i for i, t in enumerate(terms)}
-    single_term_slots = all(len(idxs) == 1 for idxs in slot_spec)
+    Rows come from Searcher._positions_scored: a row's key is ``(fields[fi],
+    term)``, matched against ``keys`` (bare terms, or (field, term)
+    FieldMaskingSpanQ leaves); ``slot_spec`` lists per slot the indexes
+    into ``keys`` of its alternatives. Returns None when no doc survives,
+    else ``(surv, norms, local, vals)``: the survivors' local docIDs
+    ascending, each local doc's norm (the default field's where fields
+    differ), and per key index the local doc of every survivor position
+    with ``vals`` = [positions] or [positions, payloads] aligned to it."""
+    idx_of = {(_key_field(k), _key_term(k)): i for i, k in enumerate(keys)}
+    norms = np.zeros(width, np.uint8)
+    rows = []  # (key idx, local docs, freqs, row)
+    for r in sorted(pdf.itertuples(index=False), key=lambda r: fields[r.fi] is None):
+        parts = [decode_block(blk) for blk in r.blocks]
+        if not parts:
+            continue
+        d = np.concatenate([p[0] for p in parts]) - base
+        norms[d] = np.concatenate([p[2] for p in parts])
+        rows.append((idx_of[(fields[r.fi], r.term)], d,
+                     np.concatenate([p[1] for p in parts]), r))
+    docs: dict = {}
+    for ki, d, _f, _r in rows:
+        docs.setdefault(ki, []).append(d)
+    slot_docs = []
+    for idxs in dict.fromkeys(tuple(s) for s in (slot_spec or [list(docs)])):
+        ds = [d for i in idxs for d in docs.get(i, ())]
+        if not ds:
+            return None
+        slot_docs.append(np.unique(np.concatenate(ds)))
+    slot_docs.sort(key=len)
+    surv = slot_docs[0]
+    for sd in slot_docs[1:]:
+        surv = np.intersect1d(surv, sd, assume_unique=True)
+    if not len(surv):
+        return None
+    local: dict = {}
+    vals = [{} for _ in range(2 if payloads else 1)]
+    for ki, d, f, r in rows:
+        sel = np.flatnonzero(np.isin(d, surv, assume_unique=True))
+        if not len(sel):
+            continue
+        p_all, starts = _positions_flat(r.pos, f)
+        lens = f[sel]
+        at = np.repeat(starts[sel] - (np.cumsum(lens) - lens), lens)
+        at += np.arange(len(at))
+        local.setdefault(ki, []).append(np.repeat(d[sel], lens))
+        vals[0].setdefault(ki, []).append(p_all[at])
+        if payloads:
+            pay = decode_value_stream(bytes(r.pay)).astype(np.uint32).view(np.float32)
+            vals[1].setdefault(ki, []).append(pay[at].astype(np.float64))
+
+    def cat(m):
+        return {ki: np.concatenate(v) for ki, v in sorted(m.items())}
+
+    return surv, norms, cat(local), [cat(v) for v in vals]
+
+
+def _per_doc(doc_value):
+    """The ``freqs`` of a per-doc position family (_position_leaf):
+    ``doc_value(positions[, payloads])`` for each survivor, over
+    ``{key idx: array}`` maps cut to that doc (keys absent from it left
+    out)."""
+
+    def freqs(surv, local, vals):
+        cut = {}
+        for ki, loc in local.items():
+            order = np.argsort(loc, kind="stable")  # a doc's positions stay ascending
+            loc = loc[order]
+            cut[ki] = ([v[ki][order] for v in vals],
+                       np.searchsorted(loc, surv, "left"),
+                       np.searchsorted(loc, surv, "right"))
+        out = np.zeros(len(surv))
+        for j in range(len(surv)):
+            maps = [{} for _ in vals]
+            for ki, (arrs, lo, hi) in cut.items():
+                if lo[j] < hi[j]:
+                    for m, a in zip(maps, arrs):
+                        m[ki] = a[lo[j]:hi[j]]
+            out[j] = doc_value(*maps)
+        return out
+
+    return freqs
+
+
+def _phrase_freqs(slot_spec: list, offsets: list, slop: int):
+    """The ``freqs`` of a phrase (_position_leaf). Exact phrases (slop 0)
+    count the starts ``p - offset >= 0`` present in every slot (a slot's
+    positions are the union of its alternatives'), for all survivors at
+    once on ``doc << 32 | start`` keys (ExactPhraseMatcher.java:166);
+    sloppy ones call the reference matcher per survivor
+    (sloppy.sloppy_phrase_freq) with the slot keys repeat detection
+    needs: the key index for one-term slots, the frozenset of
+    alternatives otherwise."""
+    if slop:
+        single = all(len(idxs) == 1 for idxs in slot_spec)
+
+        def freq(pos):
+            return sloppy_phrase_freq(
+                [(idxs[0], pos[idxs[0]]) if single else
+                 (frozenset(idxs), np.unique(np.concatenate([pos[i] for i in idxs if i in pos])))
+                 for idxs in slot_spec], slop)
+
+        return _per_doc(freq)
+
+    def exact(surv, local, vals):
+        cand = None
+        for off, idxs in zip(offsets, slot_spec):
+            parts = []
+            for i in idxs:
+                if i in local:
+                    start = vals[0][i] - off
+                    ok = start >= 0
+                    parts.append((local[i][ok] << 32) | start[ok])
+            keys = np.unique(np.concatenate(parts)) if parts else np.zeros(0, np.int64)
+            cand = keys if cand is None else np.intersect1d(cand, keys, assume_unique=True)
+        return np.bincount(cand >> 32, minlength=surv[-1] + 1)[surv].astype(np.float64)
+
+    return exact
+
+
+def _position_leaf(keys: list, fields: list, slot_spec: list, freqs, finish,
+                   payloads: bool = False):
+    """Per-salt evaluator of every position family (Searcher
+    ._positions_scored): the survivors and their positions
+    (_survivor_positions), ``freqs(surv, local, vals)`` -> one value per
+    survivor (_phrase_freqs, _per_doc), then ``finish(values, norms)``
+    -> (hit mask, final scores)."""
 
     def evaluate(pdf: pd.DataFrame, base: int, width: int):
-        empty = np.zeros(0, np.int64), np.zeros(0)
-        rows = []  # (term idx, docs, freqs, pos stream)
-        norms = np.zeros(width, np.uint8)
-        for term, blocks, pos in zip(pdf["term"], pdf["blocks"], pdf["pos"]):
-            parts = [decode_block(blk) for blk in blocks]
-            if not parts:
-                continue
-            d = np.concatenate([p[0] for p in parts])
-            norms[d - base] = np.concatenate([p[2] for p in parts])
-            rows.append((idx_of[term], d, np.concatenate([p[1] for p in parts]), pos))
-        term_docs: dict = {}
-        for ti, d, _f, _p in rows:
-            term_docs.setdefault(ti, []).append(d)
-        slot_docs = []
-        for idxs in slot_spec:
-            ds = [d for i in idxs for d in term_docs.get(i, ())]
-            if not ds:
-                return empty
-            slot_docs.append(np.unique(np.concatenate(ds)))
-        slot_docs.sort(key=len)
-        surv = slot_docs[0]
-        for sd in slot_docs[1:]:
-            surv = np.intersect1d(surv, sd, assume_unique=True)
-        if not len(surv):
-            return empty
-        # survivors' positions, per term: (local doc, flat positions) pairs
-        local, flat = {}, {}
-        for ti, d, f, pos_bin in rows:
-            sel = np.flatnonzero(np.isin(d, surv, assume_unique=True))
-            if not len(sel):
-                continue
-            p_all, starts = _positions_flat(pos_bin, f)
-            lens = f[sel]
-            at = np.repeat(starts[sel] - (np.cumsum(lens) - lens), lens)
-            local.setdefault(ti, []).append(np.repeat(d[sel] - base, lens))
-            flat.setdefault(ti, []).append(p_all[at + np.arange(len(at))])
-        local = {ti: np.concatenate(v) for ti, v in local.items()}
-        flat = {ti: np.concatenate(v) for ti, v in flat.items()}
-        if slop == 0:
-            freq = _exact_phrase_freq(local, flat, slot_spec, offsets, width)
-        else:
-            # per term: positions sorted by doc (stable, so each doc's
-            # stay ascending) and each survivor's [lo, hi) slice
-            spans = {}
-            for ti, loc in local.items():
-                order = np.argsort(loc, kind="stable")
-                loc = loc[order]
-                spans[ti] = (flat[ti][order],
-                             np.searchsorted(loc, surv - base, "left"),
-                             np.searchsorted(loc, surv - base, "right"))
-            freq = np.zeros(width)
-            for j, doc in enumerate(surv - base):
-                arrs = {ti: p[lo[j]:hi[j]] for ti, (p, lo, hi) in spans.items()}
-                slot_in = []
-                for idxs in slot_spec:
-                    if single_term_slots:
-                        slot_in.append((idxs[0], arrs[idxs[0]]))
-                        continue
-                    parts = [arrs[i] for i in idxs if len(arrs.get(i, ()))]
-                    slot_in.append((frozenset(idxs), np.unique(np.concatenate(parts))))
-                freq[doc] = sloppy_phrase_freq(slot_in, slop)
-        idx = np.flatnonzero(freq > 0.0)
-        return base + idx, score(freq[idx], norms[idx], weight)
+        got = _survivor_positions(pdf, keys, fields, slot_spec, base, width,
+                                  payloads)
+        if got is None:
+            return np.zeros(0, np.int64), np.zeros(0)
+        surv, norms, local, vals = got
+        hit, scores = finish(freqs(surv, local, vals), norms[surv])
+        return base + surv[hit], scores
 
     return evaluate
 
 
-def _exact_phrase_freq(local: dict, flat: dict, slot_spec: list,
-                       offsets: list, width: int) -> np.ndarray:
-    """Exact-phrase freq per local doc: the number of starts ``p - off
-    >= 0`` present in every slot (a slot's positions are the union of its
-    alternatives'), intersected for all docs at once on ``doc << 32 |
-    start`` keys."""
-    cand = None
-    for off, idxs in zip(offsets, slot_spec):
-        parts = []
-        for i in idxs:
-            if i in local:
-                start = flat[i] - off
-                ok = start >= 0
-                parts.append((local[i][ok] << 32) | start[ok])
-        keys = np.unique(np.concatenate(parts)) if parts else np.zeros(0, np.int64)
-        cand = keys if cand is None else np.intersect1d(cand, keys, assume_unique=True)
-    return np.bincount(cand >> 32, minlength=width).astype(np.float64)
+def _freq_finish(score, weight):
+    """``finish`` of the freq-valued position families: the docs whose
+    freq is positive, scored once."""
+
+    def finish(freq: np.ndarray, norms: np.ndarray):
+        hit = freq > 0.0
+        return hit, score(freq[hit], norms[hit], weight)
+
+    return finish
+
+
+def _synonym_leaf(weight, score):
+    """Per-salt evaluator of a SynonymQ (Searcher._synonym_scored): every
+    term's freqs summed per doc into one dense array, scored once as one
+    pseudo-term."""
+
+    def evaluate(pdf: pd.DataFrame, base: int, width: int):
+        freq = np.zeros(width)
+        norms = np.zeros(width, np.uint8)
+        for blocks in pdf["blocks"]:
+            for blk in blocks:
+                d, f, nm = decode_block(blk)
+                freq[d - base] += f  # a doc occurs once per row
+                norms[d - base] = nm
+        idx = np.flatnonzero(freq > 0.0)
+        return base + idx, score(freq[idx], norms[idx], weight)
+
+    return evaluate
 
 
 def _positions_flat(pos_bin: bytes, freqs: np.ndarray):
@@ -358,14 +420,6 @@ def _positions_flat(pos_bin: bytes, freqs: np.ndarray):
 
 
 class Searcher:
-    # Position families on the _freq_scored tail (term automaton, payload
-    # score): once the rarest required term's df is at most this, the
-    # position shuffle is already bounded tightly enough that decoding
-    # the REMAINING terms' doc blocks (one scan + semi-join apiece) costs
-    # more than the rows it would prune — the position matching is exact
-    # regardless. Mirrors ConjunctionDISI's lead-cost asymmetry.
-    PHRASE_CONJ_MIN_DF = 65_536
-
     def __init__(self, index: Index, scoring: str = "lucene",
                  similarity: str | object | None = None,
                  query_cache=None, **sim_kwargs):
@@ -404,9 +458,9 @@ class Searcher:
                      candidates=None) -> DataFrame:
         """Leaf-at-a-time execution over salt shards: a salt is a docID
         range (``salt * salt_rows`` on), like a Lucene leaf. ``rows``
-        (postings rows with ``salt`` and ``term``) are clustered by salt
-        and one grouped-map call per salt runs ``evaluate(pdf, base,
-        width)`` -> (doc_ids, final scores), keeps the ``candidates``
+        (postings rows with ``salt``) are clustered by salt and one
+        grouped-map call per salt runs ``evaluate(pdf, base, width)``
+        -> (doc_ids, final scores), keeps the ``candidates``
         (rescore allow-list) and cuts the salt's top ``k``; the caller's
         TakeOrderedAndProject merges the salts (TopDocs.merge).
 
@@ -504,15 +558,18 @@ class Searcher:
                           field: str | None = None) -> DataFrame:
         """postings rows for terms -> (doc_id, score) with block-max pruning.
 
-        Pruning (single-term top-k only, k given): skip blocks whose
-        impact-derived max score can't enter the local running top-k
-        (ImpactsDISI.java:61-91 / MaxScoreCache.java:70-108 effect)."""
+        Pruning (single-term top-k only, k given, no deletes): skip
+        blocks whose impact-derived max score can't enter the local
+        running top-k (ImpactsDISI.java:61-91 / MaxScoreCache.java:70-108
+        effect)."""
         # mapInPandas blocks column pruning: select what fn reads
         rows = self.index.postings_for_terms(list(terms_weights), field).select(
             "term", "blocks"
         )
         score = self._scorer(field)
-        prune = k is not None and len(terms_weights) == 1
+        # deletes are masked after the decode: a running top-k over
+        # deleted docs could skip blocks that hold live hits
+        prune = k is not None and len(terms_weights) == 1 and self._deletes is None
 
         def fn(iterator):
             # running local top-k as a flat numpy array: threshold =
@@ -587,26 +644,6 @@ class Searcher:
                 out[(fld, t) if fld else t] = v
         return out
 
-    def _position_rows_keyed(self, keys: list, with_payloads: bool = False) -> DataFrame:
-        """_position_rows over mixed-field leaf keys: one fetch per
-        distinct field, the per-fetch term idx remapped to the key's
-        position in ``keys``. Single-field queries (every query without
-        FieldMaskingSpanQ) collapse to one fetch with an identity remap —
-        zero overhead on the common path."""
-        out = None
-        for fld, ts in _by_field(keys).items():
-            p = self._position_rows(ts, fld, with_payloads)
-            gidx = [keys.index((fld, t) if fld else t) for t in ts]
-            if gidx != list(range(len(keys))):
-                p = p.withColumn(
-                    "idx",
-                    F.element_at(
-                        F.array(*[F.lit(g) for g in gidx]), F.col("idx") + 1
-                    ),
-                )
-            out = p if out is None else out.unionByName(p)
-        return out
-
     def _freq_rows(self, terms: list[str], field: str | None = None) -> DataFrame:
         """(doc_id, term, freq, norm) rows — synonym/blended scoring input."""
         rows = self.index.postings_for_terms(terms, field).select("term", "blocks")
@@ -632,63 +669,32 @@ class Searcher:
 
         return self._live(rows.mapInPandas(fn, schema=_FREQ_SCHEMA))
 
-    def _position_rows(self, terms: list[str], field: str | None = None,
-                       with_payloads: bool = False) -> DataFrame:
-        """(doc_id, idx, positions, norm[, payloads]) for phrase/span
-        matching; idx = index of the term in ``terms``. Two-phase:
-        positions only decoded here, for phrase terms (TwoPhaseIterator /
-        ExactPhraseMatcher pattern). ``with_payloads`` adds the f32
-        payload list aligned with positions (requires a payload build)."""
+    def _positions_scored(self, keys: list, slot_spec: list, freqs, finish,
+                          k, candidates, field: str | None = None,
+                          payloads: bool = False) -> DataFrame:
+        """A position family's leaf plan (evaluator _position_leaf): the
+        leaf keys' postings rows with positions (and payloads), one scan
+        per field (bare keys read ``field``, (field, term) keys their
+        own), unioned and tagged ``fi``, the index of the row's field in
+        the evaluator's field list; then one grouped call per salt
+        (_leaf_scored)."""
         if not self.index.manifest.get("with_positions", True):
             raise ValueError("index built without positions; phrase queries unavailable")
-        if with_payloads and not self.index.manifest.get("with_payloads"):
+        if payloads and not self.index.manifest.get("with_payloads"):
             raise ValueError(
                 "index built without payloads; rebuild with "
                 'analyzer={"payloads": ...} for PayloadScoreQuery'
             )
-        rows = self.index.postings_for_terms(terms, field).select(
-            "term", "blocks", "pos", *(["pay"] if with_payloads else [])
-        )
-        idx_of = {t: i for i, t in enumerate(terms)}
-        schema = _POS_PAY_SCHEMA if with_payloads else _POS_SCHEMA
-
-        def fn(iterator):
-            for pdf in iterator:
-                out = {"doc_id": [], "idx": [], "positions": [], "norm": []}
-                if with_payloads:
-                    out["payloads"] = []
-                for row in pdf.itertuples(index=False):
-                    freqs_all, docs_all, norms_all = [], [], []
-                    for blk in row.blocks:
-                        d, f, nm = decode_block(blk)
-                        docs_all.append(d), freqs_all.append(f), norms_all.append(nm)
-                    if not docs_all:
-                        continue
-                    d = np.concatenate(docs_all)
-                    f = np.concatenate(freqs_all)
-                    nm = np.concatenate(norms_all)
-                    flat, starts = _positions_flat(row.pos, f)
-                    plists = np.split(flat, starts[1:]) if len(flat) else [flat] * len(f)
-                    i = idx_of[row.term]
-                    out["doc_id"].extend(d.tolist())
-                    out["idx"].extend([i] * len(d))
-                    out["positions"].extend([p.astype(np.int32).tolist() for p in plists])
-                    out["norm"].extend(nm.astype(np.int64).tolist())
-                    if with_payloads:
-                        pay = (
-                            decode_value_stream(bytes(row.pay))
-                            .astype(np.uint32)
-                            .view(np.float32)
-                        )
-                        out["payloads"].extend(
-                            [c.tolist() for c in np.split(
-                                pay, np.cumsum(f)[:-1]
-                            )]
-                        )
-                if out["doc_id"]:
-                    yield pd.DataFrame(out)
-
-        return self._live(rows.mapInPandas(fn, schema=schema))
+        groups = _by_field(keys)
+        rows = None
+        for i, (fld, ts) in enumerate(groups.items()):
+            r = self.index.postings_for_terms(ts, field if fld is None else fld).select(
+                "salt", "term", "blocks", "pos", *(["pay"] if payloads else []),
+                F.lit(i).alias("fi"),
+            )
+            rows = r if rows is None else rows.unionByName(r)
+        evaluate = _position_leaf(keys, list(groups), slot_spec, freqs, finish, payloads)
+        return self._leaf_scored(rows, evaluate, k, candidates)
 
     # ------------------------------------------------------------------
     # scored plans
@@ -709,11 +715,11 @@ class Searcher:
                 return self._empty_scored()
             w = self._weight(stats[q.term][0], q.boost, q.field,
                              ttf=stats[q.term][1])
-            return self._cand(
-                self._scored_term_rows({q.term: w}, k, q.field), candidates
-            )
+            # the allow-list drops docs after the decode: prune only without it
+            return self._cand(self._scored_term_rows(
+                {q.term: w}, None if candidates else k, q.field), candidates)
         if isinstance(q, P.SynonymQ):
-            return self._cand(self._synonym_scored(q), candidates)
+            return self._synonym_scored(q, k, candidates)
         if isinstance(q, P.BlendedTermQ):
             return self._cand(self._blended_scored(q), candidates)
         if isinstance(q, (P.PhraseQ, P.MultiPhraseQ)):
@@ -724,15 +730,15 @@ class Searcher:
                 return self._empty_scored()
             return self._phrase_scored(mp, k, candidates)
         if isinstance(q, P.TermAutomatonQ):
-            return self._term_automaton_scored(q, candidates=candidates)
+            return self._term_automaton_scored(q, k, candidates)
         if isinstance(q, P.CommonTermsQ):
             return self.scored(self._rewrite_common_terms(q), k, candidates)
         if isinstance(q, P.IntervalQ):
-            return self._interval_scored(q, candidates=candidates)
+            return self._interval_scored(q, k, candidates)
         if isinstance(q, P.PayloadScoreQ):
-            return self._payload_scored(q, candidates=candidates)
+            return self._payload_scored(q, k, candidates)
         if isinstance(q, P.SpanPayloadCheckQ):
-            return self._payload_check_scored(q, candidates=candidates)
+            return self._payload_check_scored(q, k, candidates)
         if isinstance(q, P.FeatureQ):
             feat = F.col(q.col).cast("double")
             if q.fn == "saturation":
@@ -1005,22 +1011,24 @@ class Searcher:
             return s.cast("float").cast("double")
         return s
 
-    def _synonym_scored(self, q: P.SynonymQ) -> DataFrame:
+    def _synonym_scored(self, q: P.SynonymQ, k: int | None = None,
+                        candidates: list[int] | None = None) -> DataFrame:
         """SynonymQuery.java:198-214: one pseudo-term, df = max(term dfs),
-        per-doc freq = sum of term freqs, scored once."""
+        per-doc freq = sum of term freqs, scored once. Leaf-at-a-time
+        (_leaf_scored, evaluator _synonym_leaf): one scan of the terms'
+        doc blocks, one grouped call per salt that sums each doc's freqs,
+        scores them and keeps the salt's top ``k``."""
         terms = list(dict.fromkeys(q.terms))
         fld = q.field
         stats = self.index.stats_for_terms(terms, fld)
         if not stats:
             return self._empty_scored()
-        df_max = max(s[0] for s in stats.values())
-        w = self._weight(df_max, q.boost, fld,
+        w = self._weight(max(s[0] for s in stats.values()), q.boost, fld,
                          ttf=max(s[1] for s in stats.values()))
-        freqs = self._freq_rows([t for t in terms if t in stats], fld)
-        agg = freqs.groupBy("doc_id").agg(
-            F.sum("freq").alias("freq"), F.first("norm").alias("norm")
-        )
-        return self._score_freq_df(agg, w, fld)
+        rows = self.index.postings_for_terms(
+            [t for t in terms if t in stats], fld).select("salt", "blocks")
+        return self._leaf_scored(rows, _synonym_leaf(w, self._scorer(fld)), k,
+                                 candidates)
 
     def _blended_scored(self, q: P.BlendedTermQ) -> DataFrame:
         """BlendedTermQuery.java:334 — every Term(field, text) pair is
@@ -1339,36 +1347,15 @@ class Searcher:
 
         return df.select("doc_id", score_udf("freq", "norm").alias("score"))
 
-    def _freq_scored(self, pos: DataFrame, freq_udf, weight: float,
-                     field: str | None = None) -> DataFrame:
-        """The tail of the position-matching families: position rows
-        grouped per doc into ``plists`` (a list of (idx, positions[,
-        payloads]) structs) and a per-doc freq UDF over them -> (doc_id,
-        score) of the docs with freq > 0. The freq UDF is marked
-        nondeterministic so Catalyst neither pushes the freq filter below
-        it nor inlines it into both the Filter and the scoring Project:
-        each UDF is evaluated once per doc."""
-        plist = F.struct(*(c for c in ("idx", "positions", "payloads")
-                           if c in pos.columns))
-        grouped = pos.groupBy("doc_id").agg(
-            F.collect_list(plist).alias("plists"),
-            F.first("norm").alias("norm"),
-        )
-        matched = grouped.select(
-            "doc_id",
-            freq_udf.asNondeterministic()("plists").alias("freq"),
-            "norm",
-        ).filter(F.col("freq") > 0.0)
-        return self._score_freq_df(matched, weight, field)
-
     def _phrase_scored(self, q, k: int | None = None,
                        candidates: list[int] | None = None) -> DataFrame:
         """Phrase family (PhraseQuery.java:71, MultiPhraseQuery.java:53),
-        leaf-at-a-time (_leaf_scored, evaluator _phrase_leaf): one scan of
-        the phrase terms' rows, one grouped call per salt that intersects
-        the slots' docIDs from the doc blocks, decodes positions only for
-        the survivors (TwoPhaseIterator / ExactPhraseMatcher pattern),
-        scores them and keeps the salt's top ``k``.
+        on the leaf plan every position family shares (_positions_scored,
+        freqs _phrase_freqs): one scan of the phrase terms' rows, one
+        grouped call per salt that intersects the slots' docIDs from the
+        doc blocks, decodes positions only for the survivors
+        (TwoPhaseIterator / ExactPhraseMatcher pattern), scores them and
+        keeps the salt's top ``k``.
 
         slots: one tuple of alternative terms per phrase position; a doc
         matches when some term of every slot occurs at consecutive
@@ -1382,8 +1369,6 @@ class Searcher:
         terms ("get get value") and the multi-term repeat machinery
         (alternative slots as union position streams, bipartite
         term-group detection, collide-driven group init)."""
-        if not self.index.manifest.get("with_positions", True):
-            raise ValueError("index built without positions; phrase queries unavailable")
         if isinstance(q, P.MultiPhraseQ):
             slots = [tuple(alt) for alt in q.positions]
             weight_terms = [t for alt in slots for t in alt]
@@ -1413,40 +1398,9 @@ class Searcher:
         w = self._combined_weight([stats[t][0] for t in weight_terms], q.boost, fld)
         idx_of = {t: i for i, t in enumerate(uniq)}
         slot_spec = [[idx_of[t] for t in alt] for alt in slots]
-        rows = self.index.postings_for_terms(uniq, fld).select(
-            "salt", "term", "blocks", "pos"
-        )
-        evaluate = _phrase_leaf(uniq, slot_spec, offsets, q.slop, w,
-                                self._scorer(fld))
-        return self._leaf_scored(rows, evaluate, k, candidates)
-
-    def _slot_conjunction_docs(self, slots, stats, field: str | None = None) -> DataFrame:
-        """Phase-1 approximation: docIDs containing some alternative of
-        EVERY slot, from doc blocks only (positions never decoded).
-        Rarest slot first so the running intersection shrinks fastest;
-        duplicate slots (repeated phrase terms) scan once."""
-        seen: dict[tuple, None] = {}
-        for alt in slots:
-            # slot entries may be bare terms or (field, term) leaf keys
-            key = tuple(sorted((t for t in alt if t in stats), key=repr))
-            seen.setdefault(key, None)
-        ordered = sorted(seen, key=lambda key: sum(stats[t][0] for t in key))
-        if len(ordered) > 1:
-            rarest_df = sum(stats[t][0] for t in ordered[0])
-            if rarest_df <= self.PHRASE_CONJ_MIN_DF:
-                ordered = ordered[:1]
-        surv = None
-        for key in ordered:
-            # duplicate docIDs are harmless on the probe/build side of a
-            # left-semi join — no distinct() (it would add an exchange).
-            # A slot's alternatives may span fields (masked spans inside
-            # an or): per-field doc rows union into one slot doc set.
-            sd = None
-            for fld, ts in _by_field(key).items():
-                d = self._doc_rows(ts, field if fld is None else fld)
-                sd = d if sd is None else sd.unionByName(d)
-            surv = sd if surv is None else surv.join(sd, "doc_id", "left_semi")
-        return surv
+        return self._positions_scored(
+            uniq, slot_spec, _phrase_freqs(slot_spec, offsets, q.slop),
+            _freq_finish(self._scorer(fld), w), k, candidates, fld)
 
     def _phrase_wildcard_multiphrase(self, q) -> P.MultiPhraseQ | None:
         """PhraseWildcardQuery -> MultiPhraseQ by dictionary expansion
@@ -1483,17 +1437,17 @@ class Searcher:
             slots.append(tuple(terms))
         return P.MultiPhraseQ(tuple(slots), q.slop, q.boost, q.field)
 
-    def _term_automaton_scored(self, q: P.TermAutomatonQ,
+    def _term_automaton_scored(self, q: P.TermAutomatonQ, k: int | None = None,
                                candidates: list[int] | None = None) -> DataFrame:
         """TermAutomatonQuery (sandbox/search/TermAutomatonQuery.java:70,
-        TermAutomatonScorer.java:231): determinize the term automaton,
-        fetch ONE position pass for its alphabet, phase-1 docID
-        conjunction on the DFA's *required* terms (every 0->accept path
-        crosses them — the TwoPhaseIterator approximation), then the
-        reference-exact countMatches per surviving doc in an
-        Arrow-batched UDF. Weight = combined idf over alphabet terms
-        present in the index (TermAutomatonWeight, lines 364-399);
-        score = similarity(freq, norm)."""
+        TermAutomatonScorer.java:231), leaf-at-a-time like phrases
+        (_positions_scored): determinize the term automaton, scan its
+        alphabet's rows once, intersect the docIDs of the DFA's *required*
+        terms (every 0->accept path crosses them — the TwoPhaseIterator
+        approximation), then the reference-exact countMatches per
+        survivor. Weight = combined idf over alphabet terms present in
+        the index (TermAutomatonWeight, lines 364-399); score =
+        similarity(freq, norm)."""
         from lucene_spark.search import termautomaton as TA
 
         dfa = TA.determinize(q.n_states, q.transitions, q.accepts)
@@ -1510,32 +1464,15 @@ class Searcher:
         if not present:
             return self._empty_scored()
         w = self._combined_weight([stats[t][0] for t in present], q.boost, fld)
-        pos = self._position_rows(present, fld)
-        if candidates is not None:
-            pos = self._cand(pos, candidates)
-        req_present = [t for t in required if t in stats]
-        total_df = sum(stats[t][0] for t in present)
-        if req_present and total_df > self.PHRASE_CONJ_MIN_DF:
-            surv = self._slot_conjunction_docs(
-                [(t,) for t in req_present], stats, fld
-            )
-            pos = pos.join(surv, "doc_id", "left_semi")
-        # position-row idx (index into `present`) -> DFA symbol id
-        sym_of_idx = [dfa.terms.index(t) for t in present]
+        sym = [dfa.terms.index(t) for t in present]  # key idx -> DFA symbol
 
-        @F.pandas_udf(T.DoubleType())
-        def ta_freq(plists: pd.Series) -> pd.Series:
-            out = np.zeros(len(plists), dtype=np.float64)
-            for r, entries in enumerate(plists):
-                events = []
-                for e in entries:
-                    sym = sym_of_idx[e["idx"]]
-                    events.extend((int(p), sym) for p in e["positions"])
-                events.sort()
-                out[r] = float(TA.count_matches(events, dfa))
-            return pd.Series(out)
+        def freq(pos):
+            events = sorted((int(p), sym[i]) for i, ps in pos.items() for p in ps)
+            return float(TA.count_matches(events, dfa))
 
-        return self._freq_scored(pos, ta_freq, w, fld)
+        return self._positions_scored(
+            present, [[present.index(t)] for t in required], _per_doc(freq),
+            _freq_finish(self._scorer(fld), w), k, candidates, fld)
 
     def _bool_scored(self, q: P.BoolQ, k: int | None = None,
                      candidates: list[int] | None = None) -> DataFrame:
@@ -1685,132 +1622,86 @@ class Searcher:
             .select("doc_id", "score")
         )
 
-    def _interval_scored(self, q: P.IntervalQ, candidates: list[int] | None = None) -> DataFrame:
-        """IntervalQuery (intervals/IntervalQuery.java:59): two-phase like
-        phrases — docID conjunction on the leaf terms BEFORE the position
-        shuffle (semi-join of position rows against the doc-block
-        intersection), then the minimal-interval algebra per doc
-        (intervals.py). freq = sum 1/(1+gaps), weight = summed leaf idf."""
+    def _span_keys(self, source):
+        """The setup of the interval-sourced families: the source's leaf
+        keys present in the index, its required slots (intervals
+        .required_terms: optional or-alternatives and negative
+        subtrahends left out) as indexes into them, and the dfs of the
+        present leaves, repeats included (the weight's). None when a
+        required slot has no present key; an absent optional key just
+        has no positions."""
         from lucene_spark.search import intervals as IV
 
-        terms = IV.leaf_keys(q.source)
-        uniq = list(dict.fromkeys(terms))
-        stats = self._stats_for_keys(uniq)
-        # phase-1 conjunction uses REQUIRED slots only: negative
-        # combinators' subtrahends and or-alternatives are optional
-        # (intervals.required_terms); a slot with no present term kills
-        # the query, an absent optional term just has no positions
-        req_slots = []
-        for slot in IV.required_terms(q.source):
-            present = tuple(t for t in dict.fromkeys(slot) if t in stats)
-            if not present:
-                return self._empty_scored()
-            req_slots.append(present)
-        present_terms = [t for t in terms if t in stats]
-        uniq = [t for t in uniq if t in stats]
-        w = self._combined_weight([stats[t][0] for t in present_terms], q.boost)
-        # leaves run over the default field unless scoped by a
-        # FieldMaskingSpanQ ((field, term) keys; per-field fetch + union)
-        surv = self._slot_conjunction_docs(req_slots, stats)
-        pos = self._position_rows_keyed(uniq)
-        if candidates is not None:
-            pos = self._cand(pos, candidates)
-        pos = pos.join(surv, "doc_id", "left_semi")
+        leaves = IV.leaf_keys(source)
+        stats = self._stats_for_keys(list(dict.fromkeys(leaves)))
+        keys = [t for t in dict.fromkeys(leaves) if t in stats]
+        slots = [[keys.index(t) for t in dict.fromkeys(slot) if t in stats]
+                 for slot in IV.required_terms(source)]
+        if not all(slots):
+            return None
+        return keys, slots, [stats[t][0] for t in leaves if t in stats]
+
+    def _interval_scored(self, q: P.IntervalQ, k: int | None = None,
+                         candidates: list[int] | None = None) -> DataFrame:
+        """IntervalQuery (intervals/IntervalQuery.java:59), leaf-at-a-time
+        like phrases (_positions_scored): the docID conjunction of the
+        source's required slots, positions decoded only for survivors,
+        then the minimal-interval algebra per doc (intervals.py). freq =
+        sum 1/(1+gaps), weight = summed leaf idf. Leaves read the default
+        field unless a FieldMaskingSpanQ scopes them ((field, term) keys,
+        one scan per field)."""
+        from lucene_spark.search import intervals as IV
+
+        setup = self._span_keys(q.source)
+        if setup is None:
+            return self._empty_scored()
+        keys, slots, dfs = setup
         source = q.source
-        uniq_l = list(uniq)
 
-        @F.pandas_udf(T.DoubleType())
-        def interval_freq(plists: pd.Series) -> pd.Series:
-            out = np.zeros(len(plists), dtype=np.float64)
-            for r, entries in enumerate(plists):
-                pos_by_term = {}
-                for e in entries:
-                    pos_by_term[uniq_l[e["idx"]]] = np.asarray(
-                        e["positions"], dtype=np.int64
-                    )
-                out[r] = IV.freq_of(source, pos_by_term)
-            return pd.Series(out)
+        def freq(pos):
+            return IV.freq_of(source, {keys[i]: p for i, p in pos.items()})
 
-        return self._freq_scored(pos, interval_freq, w)
+        return self._positions_scored(
+            keys, slots, _per_doc(freq),
+            _freq_finish(self._scorer(), self._combined_weight(dfs, q.boost)),
+            k, candidates)
 
-    def _payload_scored(self, q: P.PayloadScoreQ,
+    def _payload_scored(self, q: P.PayloadScoreQ, k: int | None = None,
                         candidates: list[int] | None = None) -> DataFrame:
         """PayloadScoreQuery (queries/payloads/PayloadScoreQuery.java,
         PayloadFunction min/max/avg/sum): evaluate the span's minimal
         intervals per doc, collect the payloads of every leaf-term
         position inside a matched interval, aggregate with the
         PayloadFunction; score = func(payloads) * boost
-        (includeSpanScore=False semantics). Same two-phase shape as
-        intervals; payloads ride the position rows."""
+        (includeSpanScore=False semantics). The interval leaf plan
+        (_interval_scored) with payloads decoded beside the positions."""
         from lucene_spark.search import intervals as IV
 
+        func = {"min": np.min, "max": np.max, "avg": np.mean, "sum": np.sum}[q.func]
         source = P.span_source(q.span)
-        terms = IV.leaf_keys(source)
-        uniq = list(dict.fromkeys(terms))
-        stats = self._stats_for_keys(uniq)
-        req_slots = []
-        for slot in IV.required_terms(source):
-            present = tuple(t for t in dict.fromkeys(slot) if t in stats)
-            if not present:
-                return self._empty_scored()
-            req_slots.append(present)
-        uniq = [t for t in uniq if t in stats]
-        pos = self._position_rows_keyed(uniq, with_payloads=True)
-        if candidates is not None:
-            pos = self._cand(pos, candidates)
-        total_df = sum(stats[t][0] for t in uniq)
-        if total_df > self.PHRASE_CONJ_MIN_DF:
-            surv = self._slot_conjunction_docs(req_slots, stats)
-            pos = pos.join(surv, "doc_id", "left_semi")
-        grouped = pos.groupBy("doc_id").agg(
-            F.collect_list(
-                F.struct("idx", "positions", "payloads")
-            ).alias("plists")
-        )
-        uniq_l = list(uniq)
-        func = q.func
+        setup = self._span_keys(source)
+        if setup is None:
+            return self._empty_scored()
+        keys, slots, _dfs = setup
         boost = float(q.boost)
 
-        @F.pandas_udf(T.DoubleType())
-        def payload_score(plists: pd.Series) -> pd.Series:
-            out = np.full(len(plists), np.nan, dtype=np.float64)
-            for r, entries in enumerate(plists):
-                pos_by_term, pay_by_term = {}, {}
-                for e in entries:
-                    t = uniq_l[e["idx"]]
-                    pos_by_term[t] = np.asarray(e["positions"], dtype=np.int64)
-                    pay_by_term[t] = np.asarray(e["payloads"], dtype=np.float64)
-                ivs = IV.evaluate(source, pos_by_term)
-                if not ivs:
-                    continue
-                vals = []
-                for s0, s1 in ivs:
-                    for t, ps in pos_by_term.items():
-                        m = (ps >= s0) & (ps <= s1)
-                        if m.any():
-                            vals.append(pay_by_term[t][m])
-                allv = np.concatenate(vals)
-                out[r] = {
-                    "min": np.min, "max": np.max,
-                    "avg": np.mean, "sum": np.sum,
-                }[func](allv)
-            return pd.Series(out)
+        def value(pos, pay):
+            ivs = IV.evaluate(source, {keys[i]: p for i, p in pos.items()})
+            if not ivs:
+                return np.nan
+            return func(np.concatenate([pay[i][(ps >= s0) & (ps <= s1)]
+                                        for s0, s1 in ivs for i, ps in pos.items()]))
 
-        scored = (
-            # nondeterministic: the isNotNull filter stays above the UDF,
-            # which is then evaluated once per doc (see _freq_scored)
-            grouped.withColumn(
-                "pscore", payload_score.asNondeterministic()("plists")
-            )
-            .filter(F.col("pscore").isNotNull())
-            .select(
-                "doc_id", (F.col("pscore") * F.lit(boost)).alias("score")
-            )
-        )
-        return scored
+        def finish(v, _norms):
+            hit = ~np.isnan(v)
+            return hit, v[hit] * boost
+
+        return self._positions_scored(keys, slots, _per_doc(value), finish, k,
+                                      candidates, payloads=True)
 
     def _payload_check_scored(
-        self, q: P.SpanPayloadCheckQ, candidates: list[int] | None = None
+        self, q: P.SpanPayloadCheckQ, k: int | None = None,
+        candidates: list[int] | None = None,
     ) -> DataFrame:
         """SpanPayloadCheckQuery (queries/payloads/
         SpanPayloadCheckQuery.java:44,206-237): a span is accepted iff
@@ -1819,74 +1710,41 @@ class Searcher:
         ``q.payloads`` under ``q.op``; docs score like the span over
         accepted intervals only (sloppyFreq = sum 1/(1+gaps)).
         Comparisons run in float32 (this engine's payload type)."""
+        import operator
+
         from lucene_spark.search import intervals as IV
 
+        cmp = {"eq": operator.eq, "gt": operator.gt, "gte": operator.ge,
+               "lt": operator.lt, "lte": operator.le}.get(q.op)
+        if cmp is None:
+            raise ValueError(f"unknown payload match op {q.op!r}")
         source = P.span_source(q.span)
-        terms = IV.leaf_keys(source)
-        uniq = list(dict.fromkeys(terms))
-        stats = self._stats_for_keys(uniq)
-        req_slots = []
-        for slot in IV.required_terms(source):
-            present = tuple(t for t in dict.fromkeys(slot) if t in stats)
-            if not present:
-                return self._empty_scored()
-            req_slots.append(present)
-        present_terms = [t for t in terms if t in stats]
-        uniq = [t for t in uniq if t in stats]
-        w = self._combined_weight(
-            [stats[t][0] for t in present_terms], q.boost
-        )
-        surv = self._slot_conjunction_docs(req_slots, stats)
-        pos = self._position_rows_keyed(uniq, with_payloads=True)
-        if candidates is not None:
-            pos = self._cand(pos, candidates)
-        pos = pos.join(surv, "doc_id", "left_semi")
-        uniq_l = list(uniq)
+        setup = self._span_keys(source)
+        if setup is None:
+            return self._empty_scored()
+        keys, slots, dfs = setup
         refs = list(q.payloads)
-        op = q.op
-        if op not in ("eq", "gt", "gte", "lt", "lte"):
-            raise ValueError(f"unknown payload match op {op!r}")
+        gap_k = IV._gap_k(source)
 
-        @F.pandas_udf(T.DoubleType())
-        def check_freq(plists: pd.Series) -> pd.Series:
-            import operator
+        def freq(pos, pay):
+            out = 0.0
+            for s0, s1 in IV.evaluate(source, {keys[i]: p for i, p in pos.items()}):
+                seq = []
+                for i, ps in pos.items():
+                    m = (ps >= s0) & (ps <= s1)
+                    seq.extend(zip(ps[m], pay[i][m]))
+                seq.sort()
+                if len(seq) == len(refs) and all(
+                    ref is not None and cmp(np.float32(v), np.float32(ref))
+                    for (_, v), ref in zip(seq, refs)
+                ):
+                    out += 1.0 / (1.0 + max(0, (s1 - s0) - (gap_k - 1)))
+            return out
 
-            cmp = {
-                "eq": operator.eq, "gt": operator.gt, "gte": operator.ge,
-                "lt": operator.lt, "lte": operator.le,
-            }[op]
-            out = np.zeros(len(plists), dtype=np.float64)
-            for r, entries in enumerate(plists):
-                pos_by_term, pay_by_term = {}, {}
-                for e in entries:
-                    t = uniq_l[e["idx"]]
-                    pos_by_term[t] = np.asarray(e["positions"], dtype=np.int64)
-                    pay_by_term[t] = np.asarray(e["payloads"], dtype=np.float64)
-                ivs = IV.evaluate(source, pos_by_term)
-                if not ivs:
-                    continue
-                k = IV._gap_k(source)
-                freq = 0.0
-                for s0, s1 in ivs:
-                    seq = []
-                    for t, ps in pos_by_term.items():
-                        m = (ps >= s0) & (ps <= s1)
-                        if m.any():
-                            seq.extend(zip(ps[m], pay_by_term[t][m]))
-                    seq.sort()
-                    if len(seq) != len(refs):
-                        continue
-                    ok = all(
-                        ref is not None
-                        and cmp(np.float32(v), np.float32(ref))
-                        for (_, v), ref in zip(seq, refs)
-                    )
-                    if ok:
-                        freq += 1.0 / (1.0 + max(0, (s1 - s0) - (k - 1)))
-                out[r] = freq
-            return pd.Series(out)
-
-        return self._freq_scored(pos, check_freq, w)
+        return self._positions_scored(
+            keys, slots, _per_doc(freq),
+            _freq_finish(self._scorer(), self._combined_weight(dfs, q.boost)),
+            k, candidates, payloads=True)
 
     def _rewrite_common_terms(self, q: P.CommonTermsQ):
         """CommonTermsQuery plan rewrite (CommonTermsQuery.java:136-190):

@@ -11,11 +11,11 @@ TERM-consuming step that lands in an accept state increments freq, and
 matches may start (state 0) at every term occurrence
 (TermAutomatonScorer.countMatches, lines 231-349).
 
-Spark-side shape (executor._term_automaton_scored): one position fetch
-for the automaton's alphabet, the phase-1 docID conjunction on terms
-the DFA *requires* (every 0->accept path crosses them), then this
-module's reference-exact matcher inside an Arrow-batched UDF per
-surviving doc.
+Spark-side shape (executor._term_automaton_scored): one scan of the
+automaton's alphabet and one grouped call per salt that intersects the
+docIDs of the terms the DFA *requires* (every 0->accept path crosses
+them), decodes positions only for the survivors and runs this module's
+reference-exact matcher per surviving doc.
 
 Fidelity notes mirrored deliberately from the reference scorer:
 

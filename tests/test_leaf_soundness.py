@@ -1,9 +1,11 @@
 """Soundness of the leaf plan's local cut (ROADMAP direction 5).
 
-Term-leaf booleans and phrases run one grouped call per salt that keeps
-only the salt's top k (Searcher._leaf_scored). That cut is sound only if
-it is taken on the final score (boost and float casts applied), after
-deletes and candidate filters, with ties at rank k broken on doc_id.
+Term-leaf booleans, phrases, synonyms, term automata and interval
+(span) queries run one grouped call per salt that keeps only the salt's
+top k (Searcher._leaf_scored); a single term skips the blocks that
+cannot beat its running top k. A cut is sound only if it is taken on
+the final score (boost and float casts applied), after deletes and
+candidate filters, with ties at rank k broken on doc_id.
 This module checks ``top_k(q, k)`` against two references that share no
 code with the cut:
 
@@ -12,9 +14,10 @@ code with the cut:
 - the uncut plan: ``scored(q, None)`` collected and sorted.
 
 It covers one-salt, 64-row-salt and two-segment indexes, hard deletes
-(one salt) and soft deletes (64-row salts), ``candidates`` (rescore), ``field_filters``, ``top_k_batch``,
-boosts, a repeated-term phrase, and a block of identical documents whose
-scores tie across rank k in every salt.
+(one salt) and soft deletes (64-row salts), ``candidates`` (rescore),
+``field_filters``, ``top_k_batch``, boosts, a repeated-term phrase, and
+a block of identical documents whose scores tie across rank k in every
+salt.
 """
 
 from __future__ import annotations
@@ -31,7 +34,8 @@ from lucene_spark.index import (Index, append_to_index, build_index,
                                 delete_docs, soft_delete_docs)
 from lucene_spark.oracle import PandasOracle
 from lucene_spark.search import (BoolQ, BoostQ, FieldFilter, MultiPhraseQ,
-                                 PhraseQ, Searcher, TermQ)
+                                 PhraseQ, Searcher, SpanNearQ, SpanTermQ,
+                                 SynonymQ, TermAutomatonQ, TermQ)
 
 K = 5
 ORDER = ["repo", "path", "commit"]
@@ -59,6 +63,8 @@ def _corpus():
 
 
 QUERIES = {
+    "term_hot": TermQ("the"),
+    "term_tie": TermQ("tie_term"),
     "or": BoolQ(should=(TermQ("import"), TermQ("var_17"))),
     "and": BoolQ(must=(TermQ("import"), TermQ("return"))),
     "must_not": BoolQ(must=(TermQ("import"),), must_not=(TermQ("self"),)),
@@ -75,12 +81,21 @@ QUERIES = {
     "multi": MultiPhraseQ((("the", "this"), ("license", "file"))),
     "tie_phrase": PhraseQ(("tie_term", "alpha_tie")),
 }
-# compared with the uncut plan only: a BoostQuery over a leaf query
-UNCUT_ONLY = {"boost_query": BoostQ(QUERIES["or"], 0.3)}
+# compared with the uncut plan only: a BoostQuery over a leaf query, and
+# the leaf families the oracle does not score
+UNCUT_ONLY = {
+    "boost_query": BoostQ(QUERIES["or"], 0.3),
+    "synonym": SynonymQ(("license", "file")),
+    "automaton": TermAutomatonQ(4, ((0, 1, "apache"), (1, 2, "license"),
+                                    (2, 3, "version")), (3,)),
+    "interval": SpanNearQ((SpanTermQ("apache"), SpanTermQ("license")), slop=2),
+}
 
 
 def _oracle_scores(o: PandasOracle, name: str) -> dict:
     q = QUERIES[name]
+    if isinstance(q, TermQ):
+        return o.term_scores(q.term, q.boost)
     if isinstance(q, BoolQ):
         must = [o.term_scores(c.term, c.boost) for c in q.must]
         should = [o.term_scores(c.term, c.boost) for c in q.should]

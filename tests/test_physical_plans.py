@@ -4,10 +4,10 @@ visible in the executed plan (SURVEY.md §4 / the .explain discipline).
 - term lookup: PushedFilters on bucket and term (postings are written
   flat; parquet row-group stats and dictionary filtering prune), and the
   scan reads only the columns the decode needs
-- leaf plans (term-leaf booleans, phrases): one postings scan and one
-  grouped-map call per salt; on a one-salt index no Exchange and one
-  job, otherwise one hash exchange on salt; other clause kinds keep the
-  per-clause join tree
+- leaf plans (term-leaf booleans, phrases, synonyms, term automata,
+  intervals): one postings scan and one grouped-map call per salt; on a
+  one-salt index no Exchange and one job, otherwise one hash exchange
+  on salt; other clause kinds keep the per-clause join tree
 - top-k: TakeOrderedAndProject (per-partition heap + merge, never a
   global sort)
 - multi-term expansion: broadcast semi join of the matching dictionary
@@ -34,7 +34,9 @@ from pyspark.sql import functions as F
 from lucene_spark.corpus import make_corpus
 from lucene_spark.index import Index, append_to_index, build_index
 from lucene_spark.pipeline import textstats
-from lucene_spark.search import BoolQ, PhraseQ, PrefixQ, Searcher, SynonymQ, TermQ
+from lucene_spark.search import (BoolQ, PhraseQ, PrefixQ, Searcher, SynonymQ,
+                                 TermAutomatonQ, TermQ)
+from lucene_spark.search import plans as P
 from lucene_spark.search.executor import _SCORE_SCHEMA
 
 # jobs of a 60-doc append onto a 200-doc index; 19 while the builder
@@ -96,6 +98,7 @@ LEAF_SHAPES = {
     "msm": BoolQ(should=(TermQ("license"), TermQ("file"), TermQ("the")),
                  min_should_match=2),
     "phrase": PhraseQ(("apache", "license")),
+    "synonym": SynonymQ(("license", "file")),
 }
 
 
@@ -345,12 +348,19 @@ def test_minhash_verify_no_shingle_self_join(spark, docs_df):
 
 
 def test_phrase_two_phase_plan(searcher):
-    """A phrase is one leaf call per salt: the docID conjunction and the
-    position matching run inside it, so no position list crosses a
-    shuffle (no collect_list) and no per-doc UDF runs (no
-    ArrowEvalPython), alone or as a MUST clause beside a term."""
+    """A phrase, a synonym, a term automaton and an interval query are
+    each one leaf call per salt: the docID conjunction and the position
+    matching (or the freq sum) run inside it, so no position list
+    crosses a shuffle (no collect_list) and no per-doc UDF runs (no
+    ArrowEvalPython). A phrase keeps that shape as a MUST clause beside
+    a term."""
     for q in (PhraseQ(("apache", "license")),
-              BoolQ(must=(TermQ("license"), PhraseQ(("apache", "license"))))):
+              BoolQ(must=(TermQ("license"), PhraseQ(("apache", "license")))),
+              SynonymQ(("license", "file")),
+              TermAutomatonQ(3, ((0, 1, "apache"), (1, 2, "license")), (2,)),
+              P.IntervalQ(P.IntervalOrdered((P.IntervalTerm("apache"),
+                                             P.IntervalTerm("license")),
+                                            max_gaps=2))):
         df = searcher.top_k(q, 10)
         df.collect()
         plan = plan_of(df).split("== Initial Plan ==")[0]

@@ -6,10 +6,11 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pytest
 
 from lucene_spark.corpus import make_corpus
-from lucene_spark.index import Index, build_index
+from lucene_spark.index import Index, build_index, update_doc_values
 from lucene_spark.index.builder import delete_docs
 from lucene_spark.replicator import LocalReplicator, Revision, replicate
 from lucene_spark.search import Searcher, TermQ
@@ -83,6 +84,26 @@ def test_replicate_tracks_deletes(spark, src_idx, tmp_path):
     assert inc["copied"] >= 1  # live-docs data, not a full re-copy
     after = _hits(spark, dst)
     assert {d for d, _ in after} == {d for d, _ in before} - set(victims)
+
+
+def test_replicate_dv_updates(spark, tmp_path):
+    """A docvalues-update generation is a {"field", "path"} manifest
+    entry: the replica copies its table and reads the updated field."""
+    pdf = make_corpus(45, seed=7)
+    pdf["stars"] = np.arange(len(pdf), dtype=np.int64)
+    src = str(tmp_path / "dv_src")
+    build_index(spark, spark.createDataFrame(pdf), src, text_col="content",
+                keep_cols=["stars"], num_buckets=4)
+    update_doc_values(spark, src, spark.createDataFrame(
+        [(2, 999)], "doc_id long, value long"), "stars")
+    dst = str(tmp_path / "dv_replica")
+    assert replicate(src, dst)["copied"] > 0
+    idx = Index(spark, dst)
+    dv = idx.manifest["paths"]["dv_updates"]
+    assert len(dv) == 1 and dv[0]["path"].startswith(os.path.abspath(dst))
+    stars = {int(r["doc_id"]): int(r["stars"])
+             for r in idx.docs.select("doc_id", "stars").collect()}
+    assert stars[2] == 999 and len(stars) == len(pdf)
 
 
 def test_local_replicator_protocol(src_idx):
