@@ -60,7 +60,7 @@ import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -175,9 +175,11 @@ def term_bucket_py(terms: pd.Series, num_buckets: int) -> np.ndarray:
     )
 
 
-def _assign_doc_ids(df: DataFrame, order_cols: list[str], parts: int) -> DataFrame:
-    """Deterministic global rank with ONE text shuffle, no join, no
-    single-partition window.
+def _assign_doc_ids(
+    df: DataFrame, order_cols: list[str], parts: int, base: int = 0
+) -> tuple[DataFrame, DataFrame]:
+    """Deterministic global rank from ``base`` with ONE text shuffle, no
+    join, no single-partition window.
 
     The full rows range-repartition by the key columns (the range
     sampling pass projects ONLY the keys — column-pruned at the source —
@@ -185,14 +187,17 @@ def _assign_doc_ids(df: DataFrame, order_cols: list[str], parts: int) -> DataFra
     total order. monotonically_increasing_id() then yields the
     per-partition row index (documented layout: partition id in the
     upper bits, consecutive record number in the lower 33); one tiny
-    count job per partition gives global offsets, broadcast-joined back
-    by partition id. doc_id = offset[pid] + local index == the global
-    key rank, so the OUTPUT partitions already ARE contiguous docID
-    ranges — the corpus write needs no second repartition and no
-    sampling pass over the joined text (the previous join-based shape
-    paid both). Any violation of the layout assumption fails loudly in
-    _check_doc_ids (rows == distinct ids == [0, N) is asserted per
-    build).
+    count job per partition gives global offsets, looked up by
+    partition id in a literal array (a Catalyst constant: no Python
+    rows, no broadcast job). doc_id = offset[pid] + local index == base
+    + the global key rank, so the OUTPUT partitions already ARE
+    contiguous docID ranges — the corpus write needs no second
+    repartition and no sampling pass over the text. Any violation of
+    the layout assumption fails loudly in _check_doc_ids (rows ==
+    distinct ids == [base, base + N) is asserted per write).
+
+    Returns the ranked frame and the persisted sorted rows it reads;
+    the caller unpersists those once the ranked frame is written.
 
     `order_cols` must be a unique key (the reference ingest order is a
     total order; repo/path/commit is unique by construction)."""
@@ -206,40 +211,37 @@ def _assign_doc_ids(df: DataFrame, order_cols: list[str], parts: int) -> DataFra
     # offsets from one layout applied to another. MEMORY_AND_DISK also
     # means the sorted rows materialize once and the corpus write reads
     # them back instead of re-shuffling. (At petabyte scale the same pin
-    # is a localCheckpoint / staged write; the invariant check below
-    # fails loudly if a layout mismatch ever slips through.)
+    # is a localCheckpoint / staged write; the invariant check after the
+    # write fails loudly if a layout mismatch ever slips through.)
     sdf = sdf.persist()
-    pid = F.shiftright(F.col("__mid"), 33).cast("long")
+    pid = F.shiftright(F.col("__mid"), 33)
     row = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
-    counts = sdf.groupBy(pid.alias("__pid")).count().collect()
-    by_pid = {int(r["__pid"]): int(r["count"]) for r in counts}
-    offsets, acc = [], 0
-    for p in sorted(by_pid):
-        offsets.append((p, acc))
-        acc += by_pid[p]
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        offsets or [(0, 0)], "__pid long, __off long"
-    )
-    return (
-        sdf.withColumn("__pid", pid)
-        .join(F.broadcast(off_df), "__pid", "left")
-        .withColumn(
-            "doc_id", (F.coalesce(F.col("__off"), F.lit(0)) + row).cast("long")
-        )
-        .drop("__pid", "__off", "__mid")
-    )
+    try:
+        counts = dict(sdf.groupBy(pid.alias("__pid")).count().collect())
+    except BaseException:
+        sdf.unpersist()
+        raise
+    offsets, acc = [], base
+    for p in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts.get(p, 0)
+    off = F.array(*[F.lit(o).cast("long") for o in offsets])
+    ranked = sdf.withColumn(
+        "doc_id", F.element_at(off, (pid + 1).cast("int")) + row
+    ).drop("__mid")
+    return ranked, sdf
 
 
-def _check_doc_ids(spark: SparkSession, corpus_path: str) -> int:
+def _check_doc_ids(spark: SparkSession, corpus_path: str, base: int = 0) -> int:
     """Invariant check after docID assignment: every row got exactly one
-    doc_id, ids dense in [0, N). Proven from parquet FOOTER statistics
-    alone — zero Spark jobs, no countDistinct shuffle (the check it
-    replaces was a full-scan + exchange; at 10^12 rows footers are
-    O(files)). The proof: each written file covers doc_id span
-    [min, max] with rows == max-min+1 (so if the spans are pairwise
-    disjoint and their union is exactly [0, N), every id occurs exactly
-    once). Disjointness + coverage are checked by sorting spans. Falls
+    doc_id, ids dense in [base, base + N) (a build's corpus starts at 0,
+    an appended segment's at the index's max_doc). Returns N. Proven
+    from parquet FOOTER statistics alone — zero Spark jobs, no
+    countDistinct shuffle (the check it replaces was a full-scan +
+    exchange; at 10^12 rows footers are O(files)). The proof: each
+    written file covers doc_id span [min, max] with rows == max-min+1
+    (so if the spans are pairwise disjoint and their union is exactly
+    [base, base + N), every id occurs exactly once). Disjointness + coverage are checked by sorting spans. Falls
     back to a Spark aggregate when any footer lacks doc_id stats."""
     import pyarrow.parquet as pq
 
@@ -270,18 +272,19 @@ def _check_doc_ids(spark: SparkSession, corpus_path: str) -> int:
     if ok:
         bad = None
         spans.sort()
-        expect = 0
+        expect = base
         for lo, hi, rows in spans:
             if lo != expect or hi - lo + 1 != rows:
                 bad = (lo, hi, rows, expect)
                 break
             expect = hi + 1
-        if bad is None and (not spans or expect == total):
+        if bad is None and (not spans or expect == base + total):
             return total
         raise ValueError(
             f"docID assignment violated: file span {bad} does not continue "
-            f"a dense [0, N) sequence (total rows={total}) — order_cols is "
-            "not a unique key (duplicate rows fan out) or ids were dropped"
+            f"a dense [{base}, {base} + N) sequence (total rows={total}) — "
+            "order_cols is not a unique key (duplicate rows fan out) or ids "
+            "were dropped"
         )
 
     chk = read_parquet(spark, corpus_path).agg(
@@ -293,8 +296,8 @@ def _check_doc_ids(spark: SparkSession, corpus_path: str) -> int:
     rows, ids = int(chk["rows"]), int(chk["ids"])
     if rows and (
         ids != rows
-        or int(chk["lo"]) != 0
-        or int(chk["hi"]) != rows - 1
+        or int(chk["lo"]) != base
+        or int(chk["hi"]) != base + rows - 1
     ):
         raise ValueError(
             f"docID assignment violated: rows={rows} distinct_ids={ids} "
@@ -391,6 +394,158 @@ def _make_dl_expr(analyzer: dict | None):
         )
 
     return dl_expr_for
+
+
+def _write_corpus(
+    spark: SparkSession,
+    corpus: DataFrame,
+    path: str,
+    *,
+    text_col: str,
+    fields: list[tuple[str, str]],
+    analyzer: dict | None,
+    doc_id_col: str | None,
+    order_cols: list[str] | None,
+    parts: int,
+    base: int = 0,
+) -> int:
+    """Stage 0 of a build and of an append: write the corpus snapshot
+    with docIDs from ``base``, its sha256 and each field's doc length
+    (computed in the pass that already holds the text, so the docs table
+    projects ints and never re-scans it); return its row count.
+
+    ``doc_id_col`` ids are shifted by ``base`` and range-clustered, so
+    files align with docID ranges. Otherwise _assign_doc_ids ranks by
+    ``order_cols``: its output is already range-clustered, so no second
+    repartition runs, and the footer check proves the ids dense."""
+    sorted_rows = None
+    if doc_id_col:
+        snap = corpus.withColumn("doc_id", F.col(doc_id_col).cast("long") + base)
+        if doc_id_col != "doc_id":
+            snap = snap.drop(doc_id_col)
+        snap = snap.repartitionByRange(parts, F.col("doc_id"))
+    else:
+        snap, sorted_rows = _assign_doc_ids(
+            corpus, order_cols or corpus.columns, parts, base
+        )
+    snap = snap.withColumn("sha256", F.sha2(F.col(text_col), 256))
+    for f, c in fields:
+        snap = snap.withColumn(
+            f"__dl__{f}", _make_dl_expr(analyzer)(c).cast("int")
+        )
+    try:
+        snap.write.mode("overwrite").parquet(path)
+    finally:
+        if sorted_rows is not None:
+            sorted_rows.unpersist()
+    if doc_id_col:
+        return _parquet_rows(path)
+    return _check_doc_ids(spark, path, base)
+
+
+def _dl_name(f: str, text_col: str) -> str:
+    """A field's docs-table dl column; the default field keeps the legacy
+    bare name (its norm column is likewise ``norm``, others ``norm__<f>``)."""
+    return "dl" if f == text_col else f"dl__{f}"
+
+
+def _norm_expr(dl) -> Column:
+    """SmallFloat.intToByte4(dl) (smallfloat.int_to_byte4) as a Catalyst
+    expression, so the docs write crosses into no Python worker. Below
+    NUM_FREE_VALUES (24) the length is its own byte; above, x = dl - 24
+    keeps its top 4 significant bits: sh = bit length(x) - 4, byte =
+    ((x >> sh) & 7 | (sh + 1) << 3) + 24, and x < 8 (sh < 0) is exact."""
+    x = dl - 24
+    sh = F.length(F.bin(x)) - 4
+    enc = F.call_function("shiftright", x, sh).bitwiseAND(7).bitwiseOR(
+        F.call_function("shiftleft", sh + 1, F.lit(3))
+    )
+    return (
+        F.when(dl < 24, dl).when(sh < 0, x + 24).otherwise(enc + 24).cast("int")
+    )
+
+
+def _doc_stat_aggs(field_names: list[str], text_col: str) -> list[Column]:
+    """A segment's collection statistics over its docs table: n, and per
+    field sum_dl__<f> (sumTotalTermFreq) and doc_count__<f> (docs with a
+    token)."""
+    aggs = [F.count(F.lit(1)).alias("n")]
+    for f in field_names:
+        dn = _dl_name(f, text_col)
+        aggs.append(F.sum(dn).alias(f"sum_dl__{f}"))
+        aggs.append(F.count(F.when(F.col(dn) > 0, 1)).alias(f"doc_count__{f}"))
+    return aggs
+
+
+def _field_stats(stats: dict, field_names: list[str]) -> dict:
+    """The manifest's field_stats from a _doc_stat_aggs row."""
+    return {
+        f: {
+            "sum_ttf": int(stats[f"sum_dl__{f}"] or 0),
+            "doc_count": int(stats[f"doc_count__{f}"]),
+        }
+        for f in field_names
+    }
+
+
+def _observed_write(df: DataFrame, path: str, aggs: list[Column]) -> dict:
+    """Write ``df`` to ``path`` and return ``aggs`` over its rows,
+    observed during the write (no job reads the table back). The
+    observed row count ``n`` is checked against the parquet footers."""
+    obs = Observation()
+    df.observe(obs, *aggs).write.mode("overwrite").parquet(path)
+    stats = dict(obs.get)
+    rows = _parquet_rows(path)
+    if int(stats["n"]) != rows:
+        raise RuntimeError(
+            f"observed {stats['n']} rows while writing {path}, "
+            f"its footers hold {rows}"
+        )
+    return stats
+
+
+def _write_docs(
+    corpus: DataFrame,
+    path: str,
+    *,
+    fields: list[tuple[str, str]],
+    text_col: str,
+    keep_cols: list[str],
+    analyzer: dict | None,
+    soft_deletes_field: str | None,
+) -> dict:
+    """Write a segment's docs table (doc_id, kept columns, per-field dl
+    and norm, the soft-deletes column) from its corpus snapshot and
+    return the segment's _doc_stat_aggs, observed during the write.
+
+    dl was computed during the stage0 write, so this is a column-pruned
+    int read — no text touched; snapshots without it (resume of an old
+    index) fall back to the full expression. norm is _norm_expr."""
+    dl_expr_for = _make_dl_expr(analyzer)
+
+    def dl_source(f: str, c: str):
+        if f"__dl__{f}" in corpus.columns:
+            return F.col(f"__dl__{f}")
+        return dl_expr_for(c).cast("int")
+
+    docs = corpus.select(
+        "doc_id",
+        *keep_cols,
+        *[dl_source(f, c).alias(_dl_name(f, text_col)) for f, c in fields],
+    )
+    for f, _c in fields:
+        dn = _dl_name(f, text_col)
+        docs = docs.withColumn(dn.replace("dl", "norm", 1), _norm_expr(F.col(dn)))
+    if soft_deletes_field:
+        if soft_deletes_field in docs.columns:
+            raise ValueError(
+                f"soft_deletes_field {soft_deletes_field!r} collides "
+                f"with an existing docs column"
+            )
+        docs = docs.withColumn(soft_deletes_field, F.lit(None).cast("long"))
+    return _observed_write(
+        docs, path, _doc_stat_aggs([f for f, _ in fields], text_col)
+    )
 
 
 # Payload sources (queries/payloads/PayloadScoreQuery.java consumes
@@ -668,11 +823,11 @@ def _read_postings(spark: SparkSession, paths: list[str]) -> DataFrame:
     )
 
 
-def write_term_stats(postings: DataFrame, path: str) -> DataFrame:
+def write_term_stats(postings: DataFrame, path: str) -> None:
     """Write a segment's terms dictionary — one (field, term) row with
-    df, ttf summed over its salt rows and the term's bucket — and return
-    the aggregate. Rows are sorted by (field, bucket, term) within each
-    task and written in ~1 MB row groups, so each row group's min/max
+    df, ttf summed over its salt rows and the term's bucket. Rows are
+    sorted by (field, bucket, term) within each task and written in
+    ~1 MB row groups, so each row group's min/max
     statistics span a narrow key range and ``Index.stats_for_terms``
     prunes a lookup to a few row groups at any dictionary size. The sort
     is task-local: no shuffle and no job beyond the write."""
@@ -684,7 +839,6 @@ def write_term_stats(postings: DataFrame, path: str) -> DataFrame:
     stats.sortWithinPartitions("field", "bucket", "term").write.mode(
         "overwrite"
     ).option("parquet.block.size", 1 << 20).parquet(path)
-    return stats
 
 
 def _parquet_rows(path: str) -> int:
@@ -832,37 +986,11 @@ def build_index(
 
     # ---- stage0: snapshot + docIDs ----
     if not (resume and _stage_done(index_dir, "stage0_corpus")):
-        # range-cluster by doc_id: files align with docID ranges (the
-        # salt sharding in stage1 and stored-field fetches both benefit),
-        # and the file count matches the parallelism so the tokenize
-        # stage is never starved by a handful of wide input files.
-        snap_parts = corpus_parts or spark.sparkContext.defaultParallelism * 2
-        if doc_id_col:
-            snap = corpus.withColumn("doc_id", F.col(doc_id_col).cast("long"))
-            if doc_id_col != "doc_id":
-                snap = snap.drop(doc_id_col)
-            snap = snap.repartitionByRange(snap_parts, F.col("doc_id"))
-        else:
-            # _assign_doc_ids output is ALREADY range-clustered by
-            # doc_id (= the key rank) — no second repartition, no
-            # sampling pass over the full rows
-            snap = _assign_doc_ids(
-                corpus, order_cols or corpus.columns, snap_parts
-            )
-        snap = snap.withColumn("sha256", F.sha2(F.col(text_col), 256))
-        # per-field doc length computed HERE, in the pass that already
-        # holds the text in memory for the sha256 + write: the docs
-        # table then projects these ints without a second full text
-        # scan (the dl re-scan was ~25% of stage1 wall and scaled worst)
-        for _f, _c in fields:
-            snap = snap.withColumn(
-                f"__dl__{_f}", _make_dl_expr(analyzer)(_c).cast("int")
-            )
-        snap.write.mode("overwrite").parquet(corpus_path)
-        if doc_id_col:
-            n_docs = _parquet_rows(corpus_path)
-        else:
-            n_docs = _check_doc_ids(spark, corpus_path)
+        n_docs = _write_corpus(
+            spark, corpus, corpus_path, text_col=text_col, fields=fields,
+            analyzer=analyzer, doc_id_col=doc_id_col, order_cols=order_cols,
+            parts=corpus_parts or spark.sparkContext.defaultParallelism * 2,
+        )
         _update_manifest(
             index_dir,
             "stage0_corpus",
@@ -907,55 +1035,20 @@ def build_index(
         # a postings rebuild invalidates any previously committed
         # term-vectors stage (its rows describe the OLD snapshot)
         _invalidate_stage(index_dir, "stage4_tvec", "tvec")
-        # docs table straight from the snapshot: dl was computed during
-        # the stage0 write (same token regex as the analyzer; each
-        # >255-char run contributes ceil(len/255) pieces,
-        # StandardTokenizer.java:77) so this is a column-pruned int read
-        # — no text touched. norm = SmallFloat.intToByte4(dl) via one
-        # vectorized Arrow UDF on ints. Pre-dl snapshots (resume of an
-        # old index) fall back to the full expression.
-        from lucene_spark.smallfloat import int_to_byte4
-
-        dl_expr_for = _make_dl_expr(analyzer)
-
-        @F.pandas_udf(T.IntegerType())
-        def norm_udf(dl: pd.Series) -> pd.Series:
-            return pd.Series(int_to_byte4(dl.to_numpy().astype(np.int64)).astype(np.int32))
-
-        # per-field dl/norm columns; the default field keeps the legacy
-        # bare names, extra fields get dl__<field>/norm__<field>
-        def dl_name(f: str) -> str:
-            return "dl" if f == text_col else f"dl__{f}"
-
-        def norm_name(f: str) -> str:
-            return "norm" if f == text_col else f"norm__{f}"
-
-        def dl_source(f: str, c: str):
-            if f"__dl__{f}" in corpus_ids.columns:
-                return F.col(f"__dl__{f}")
-            return dl_expr_for(c).cast("int")
-
-        docs = corpus_ids.select(
-            "doc_id",
-            *keep_cols,
-            *[dl_source(f, c).alias(dl_name(f)) for f, c in fields],
+        # docs table straight from the snapshot; the segment stats that
+        # stage 3 records are observed during its write
+        doc_stats = _write_docs(
+            corpus_ids, docs_path, fields=fields, text_col=text_col,
+            keep_cols=keep_cols, analyzer=analyzer,
+            soft_deletes_field=soft_deletes_field,
         )
-        for f, _c in fields:
-            docs = docs.withColumn(norm_name(f), norm_udf(F.col(dl_name(f))))
-        if soft_deletes_field:
-            if soft_deletes_field in docs.columns:
-                raise ValueError(
-                    f"soft_deletes_field {soft_deletes_field!r} collides "
-                    f"with an existing docs column"
-                )
-            docs = docs.withColumn(soft_deletes_field, F.lit(None).cast("long"))
-        docs.write.mode("overwrite").parquet(docs_path)
         _update_manifest(
             index_dir,
             "stage1_postings",
             {
                 "postings_rows": _parquet_rows(postings_path),
-                "docs_rows": _parquet_rows(docs_path),
+                "docs_rows": int(doc_stats["n"]),
+                "doc_stats": doc_stats,
                 "path": postings_path,
                 "postings_sec": round(t1_post - t1, 2),
                 "docs_sec": round(time.time() - t1_post, 2),
@@ -970,25 +1063,15 @@ def build_index(
     if not (resume and _stage_done(index_dir, "stage3_stats")):
         t3 = time.time()
         postings = read_parquet(spark, postings_path)
-        stats = write_term_stats(postings, stats_path)
-        docs = read_parquet(spark, docs_path)
-
-        def _dl_name(f: str) -> str:
-            return "dl" if f == text_col else f"dl__{f}"
-
-        aggs = [F.count(F.lit(1)).alias("N")]
-        for f in field_names:
-            dn = _dl_name(f)
-            aggs.append(F.sum(dn).alias(f"sum_dl__{f}"))
-            aggs.append(F.count(F.when(F.col(dn) > 0, 1)).alias(f"doc_count__{f}"))
-        gl = docs.agg(*aggs).collect()[0]
-        field_stats = {
-            f: {
-                "sum_ttf": int(gl[f"sum_dl__{f}"] or 0),
-                "doc_count": int(gl[f"doc_count__{f}"]),
-            }
-            for f in field_names
-        }
+        write_term_stats(postings, stats_path)
+        gl = _commits.read_manifest(index_dir)["stages"]["stage1_postings"].get(
+            "doc_stats"
+        )
+        if gl is None:  # stage 1 committed by a build that did not observe them
+            gl = read_parquet(spark, docs_path).agg(
+                *_doc_stat_aggs(field_names, text_col)
+            ).first().asDict()
+        field_stats = _field_stats(gl, field_names)
         # skew metrics: postings volume per (bucket, salt) reducer group
         # and the hottest terms — the observability the salting exists for
         grp = postings.groupBy("bucket", "salt").agg(F.sum("df").alias("p"))
@@ -997,7 +1080,8 @@ def build_index(
         ).collect()[0]
         hot = [
             {"term": r["term"], "df": int(r["df"])}
-            for r in stats.orderBy(F.desc("df"), F.asc("term")).limit(5).collect()
+            for r in read_parquet(spark, stats_path)
+            .orderBy(F.desc("df"), F.asc("term")).limit(5).collect()
         ]
         skew = {
             "groups": int(sk["groups"]),
@@ -1012,8 +1096,8 @@ def build_index(
             {"terms": _parquet_rows(stats_path), "elapsed_sec": time.time() - t3,
              "skew": skew},
             extra={
-                "N": int(gl["N"]),
-                "max_doc": int(gl["N"]),
+                "N": int(gl["n"]),
+                "max_doc": int(gl["n"]),
                 "sum_total_term_freq": field_stats[text_col]["sum_ttf"],
                 "doc_count_field": field_stats[text_col]["doc_count"],
                 "fields": dict(fields),
@@ -1276,7 +1360,12 @@ def compact_index(
     docs = apply_dv_overlays(spark, docs, manifest)
     if deletes is not None:
         docs = docs.join(F.broadcast(deletes), "doc_id", "left_anti")
-    docs.write.mode("overwrite").parquet(docs_path)
+    text_col_m = manifest["text_col"]
+    cfield_names = sorted(
+        manifest.get("fields", {text_col_m: text_col_m}),
+        key=lambda f: (f != text_col_m, f),
+    )
+    gl = _observed_write(docs, docs_path, _doc_stat_aggs(cfield_names, text_col_m))
     corpus_path = os.path.join(index_dir, f"corpus_compact{gen}")
     corpus = read_parquet(spark, *as_list(paths["corpus"]))
     if deletes is not None:
@@ -1286,20 +1375,6 @@ def compact_index(
     # ---- stats ----
     stats_path = os.path.join(index_dir, f"term_stats_compact{gen}")
     write_term_stats(read_parquet(spark, postings_path), stats_path)
-    text_col_m = manifest["text_col"]
-    cfield_names = sorted(
-        manifest.get("fields", {text_col_m: text_col_m}),
-        key=lambda f: (f != text_col_m, f),
-    )
-
-    def _cdl(f: str) -> str:
-        return "dl" if f == text_col_m else f"dl__{f}"
-
-    c_aggs = [F.count(F.lit(1)).alias("n")]
-    for f in cfield_names:
-        c_aggs.append(F.sum(_cdl(f)).alias(f"s__{f}"))
-        c_aggs.append(F.count(F.when(F.col(_cdl(f)) > 0, 1)).alias(f"wf__{f}"))
-    gl = read_parquet(spark, docs_path).agg(*c_aggs).collect()[0]
 
     manifest["paths"] = {
         "postings": postings_path,
@@ -1314,10 +1389,7 @@ def compact_index(
     # preserve the pre-compaction high-water mark.
     manifest["max_doc"] = int(manifest.get("max_doc", manifest["N"]))
     manifest["N"] = int(gl["n"])
-    manifest["field_stats"] = {
-        f: {"sum_ttf": int(gl[f"s__{f}"] or 0), "doc_count": int(gl[f"wf__{f}"])}
-        for f in cfield_names
-    }
+    manifest["field_stats"] = _field_stats(gl, cfield_names)
     manifest["sum_total_term_freq"] = manifest["field_stats"][text_col_m]["sum_ttf"]
     manifest["doc_count_field"] = manifest["field_stats"][text_col_m]["doc_count"]
     manifest["version"] = int(manifest.get("version", 0)) + 1
@@ -1730,25 +1802,12 @@ def append_to_index(
     t0 = time.time()
 
     # docIDs continue the global ingest order at `base`
-    if doc_id_col:
-        snap = new_docs.withColumn("doc_id", F.col(doc_id_col).cast("long") + base)
-        if doc_id_col != "doc_id":
-            snap = snap.drop(doc_id_col)
-    else:
-        parts = spark.sparkContext.defaultParallelism
-        snap = _assign_doc_ids(new_docs, order_cols or new_docs.columns, parts)
-        snap = snap.withColumn("doc_id", F.col("doc_id") + base)
-    snap = snap.withColumn("sha256", F.sha2(F.col(text_col), 256))
-    snap = snap.repartitionByRange(
-        max(2, spark.sparkContext.defaultParallelism), F.col("doc_id")
-    )
-    # dl in the snapshot pass, as in build_index stage0
-    for _f, _c in fields:
-        snap = snap.withColumn(
-            f"__dl__{_f}", _make_dl_expr(analyzer)(_c).cast("int")
-        )
     corpus_path = os.path.join(index_dir, f"corpus_seg{seg}")
-    snap.write.mode("overwrite").parquet(corpus_path)
+    _write_corpus(
+        spark, new_docs, corpus_path, text_col=text_col, fields=fields,
+        analyzer=analyzer, doc_id_col=doc_id_col, order_cols=order_cols,
+        parts=max(2, spark.sparkContext.defaultParallelism), base=base,
+    )
     corpus_ids = read_parquet(spark, corpus_path)
 
     postings_path = os.path.join(index_dir, f"postings_seg{seg}")
@@ -1766,40 +1825,12 @@ def append_to_index(
         schema=POSTINGS_SCHEMA,
     )
     postings.write.mode("overwrite").parquet(postings_path)
-
-    from lucene_spark.smallfloat import int_to_byte4
-
-    @F.pandas_udf(T.IntegerType())
-    def norm_udf(dl: pd.Series) -> pd.Series:
-        return pd.Series(int_to_byte4(dl.to_numpy().astype(np.int64)).astype(np.int32))
-
-    def _dl_name(f: str) -> str:
-        return "dl" if f == text_col else f"dl__{f}"
-
-    def _norm_name(f: str) -> str:
-        return "norm" if f == text_col else f"norm__{f}"
-
-    docs = corpus_ids.select(
-        "doc_id",
-        *keep_cols,
-        *[F.col(f"__dl__{f}").alias(_dl_name(f)) for f, _c in fields],
+    gl = _write_docs(
+        corpus_ids, docs_path, fields=fields, text_col=text_col,
+        keep_cols=keep_cols, analyzer=analyzer,
+        soft_deletes_field=manifest.get("soft_deletes_field"),
     )
-    for f, _c in fields:
-        docs = docs.withColumn(_norm_name(f), norm_udf(F.col(_dl_name(f))))
-    if manifest.get("soft_deletes_field"):
-        docs = docs.withColumn(
-            manifest["soft_deletes_field"], F.lit(None).cast("long")
-        )
-    docs.write.mode("overwrite").parquet(docs_path)
-
     write_term_stats(read_parquet(spark, postings_path), stats_path)
-
-    seg_aggs = [F.count(F.lit(1)).alias("n")]
-    for f in field_names:
-        dn = _dl_name(f)
-        seg_aggs.append(F.sum(dn).alias(f"sum_dl__{f}"))
-        seg_aggs.append(F.count(F.when(F.col(dn) > 0, 1)).alias(f"doc_count__{f}"))
-    gl = read_parquet(spark, docs_path).agg(*seg_aggs).collect()[0]
 
     # ---- commit: extend path lists + global stats, one atomic swap ----
     paths = manifest["paths"]
@@ -1818,10 +1849,10 @@ def append_to_index(
             "doc_count": int(manifest["doc_count_field"]),
         }
     }
-    for f in field_names:
+    for f, seg_fs in _field_stats(gl, field_names).items():
         cur = fs.setdefault(f, {"sum_ttf": 0, "doc_count": 0})
-        cur["sum_ttf"] = int(cur["sum_ttf"]) + int(gl[f"sum_dl__{f}"] or 0)
-        cur["doc_count"] = int(cur["doc_count"]) + int(gl[f"doc_count__{f}"])
+        cur["sum_ttf"] = int(cur["sum_ttf"]) + seg_fs["sum_ttf"]
+        cur["doc_count"] = int(cur["doc_count"]) + seg_fs["doc_count"]
     manifest["field_stats"] = fs
     manifest["sum_total_term_freq"] = fs[text_col]["sum_ttf"]
     manifest["doc_count_field"] = fs[text_col]["doc_count"]

@@ -1014,8 +1014,9 @@ class Searcher:
     def _synonym_scored(self, q: P.SynonymQ, k: int | None = None,
                         candidates: list[int] | None = None) -> DataFrame:
         """SynonymQuery.java:198-214: one pseudo-term, df = max(term dfs),
-        per-doc freq = sum of term freqs, scored once. Leaf-at-a-time
-        (_leaf_scored, evaluator _synonym_leaf): one scan of the terms'
+        ttf = sum(term ttfs), per-doc freq = sum of term freqs, scored
+        once. Leaf-at-a-time (_leaf_scored, evaluator _synonym_leaf): one
+        scan of the terms'
         doc blocks, one grouped call per salt that sums each doc's freqs,
         scores them and keeps the salt's top ``k``."""
         terms = list(dict.fromkeys(q.terms))
@@ -1024,7 +1025,7 @@ class Searcher:
         if not stats:
             return self._empty_scored()
         w = self._weight(max(s[0] for s in stats.values()), q.boost, fld,
-                         ttf=max(s[1] for s in stats.values()))
+                         ttf=sum(s[1] for s in stats.values()))
         rows = self.index.postings_for_terms(
             [t for t in terms if t in stats], fld).select("salt", "blocks")
         return self._leaf_scored(rows, _synonym_leaf(w, self._scorer(fld)), k,

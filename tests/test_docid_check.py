@@ -32,6 +32,18 @@ def test_footer_check_dense_ok(spark, tmp_path):
     assert _check_doc_ids(spark, d) == 1500
 
 
+def test_footer_check_from_base(spark, tmp_path):
+    # an appended segment's ids continue the index at its max_doc
+    d = str(tmp_path / "seg")
+    os.makedirs(d)
+    _write(d, "a.parquet", list(range(500, 700)))
+    _write(d, "b.parquet", list(range(700, 800)))
+    assert _check_doc_ids(spark, d, base=500) == 300
+    for base in (0, 501):
+        with pytest.raises(ValueError, match="docID assignment violated"):
+            _check_doc_ids(spark, d, base=base)
+
+
 def test_footer_check_catches_overlap(spark, tmp_path):
     d = str(tmp_path / "overlap")
     os.makedirs(d)

@@ -9,6 +9,8 @@ from lucene_spark.corpus import make_corpus
 from lucene_spark.index import Index, build_index
 from lucene_spark.oracle import PandasOracle
 from lucene_spark.search import BoolQ, PhraseQ, PrefixQ, Searcher, SynonymQ, TermQ
+from lucene_spark.similarities import LMDirichletSimilarity
+from lucene_spark.smallfloat import LENGTH_TABLE
 
 N_DOCS = 400
 
@@ -221,6 +223,30 @@ def test_synonym(built):
     }
     want = oracle.top_k(want_scores, 10)
     assert_hits_equal(got, want, 10)
+
+
+def test_synonym_lmdirichlet_sums_ttf(built):
+    """SynonymQuery.java:198-214: the pseudo-term's docFreq is the max of
+    its terms', its totalTermFreq the SUM. BM25 never reads ttf;
+    LMDirichlet's collection probability does."""
+    index, oracle, _ = built
+    sim = LMDirichletSimilarity()
+    terms = ("import", "return")
+    pls = [oracle.postings[t] for t in terms]
+    freq: dict[int, int] = {}
+    for pl in pls:
+        for d, ps in pl.items():
+            freq[d] = freq.get(d, 0) + len(ps)
+    w = sim.weight(max(len(pl) for pl in pls),
+                   sum(len(ps) for pl in pls for ps in pl.values()),
+                   oracle.doc_count, oracle.sum_ttf, 1.0)
+    docs = sorted(freq)
+    want = sim.score(np.array([freq[d] for d in docs], dtype=np.float64),
+                     LENGTH_TABLE[[oracle.norms[d] for d in docs]], w)
+    s = Searcher(index, scoring="double", similarity=sim)
+    got = dict(s.scored(SynonymQ(terms)).collect())
+    assert sorted(got) == docs
+    np.testing.assert_allclose([got[d] for d in docs], want, rtol=1e-12)
 
 
 def test_count_and_search_after(built):

@@ -20,7 +20,10 @@ visible in the executed plan (SURVEY.md §4 / the .explain discipline).
 - empty results: a query that resolves to nothing plans no Python task
 - jobs: a fresh reader builds a top-k plan without a Spark job (term
   stats and table schemas are read from parquet footers on the driver),
-  so a term query's first collect is its only job
+  so a term query's first collect is its only job; an NRT append runs
+  at most APPEND_JOBS jobs
+- stage 0: docID offsets are a literal array, not a broadcast join of
+  rows built in Python
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ from pyspark.sql import functions as F
 
 from lucene_spark.corpus import make_corpus
 from lucene_spark.index import Index, append_to_index, build_index
+from lucene_spark.index.builder import _assign_doc_ids, _check_doc_ids
 from lucene_spark.pipeline import textstats
 from lucene_spark.search import (BoolQ, PhraseQ, PrefixQ, Searcher, SynonymQ,
                                  TermAutomatonQ, TermQ)
@@ -40,8 +44,10 @@ from lucene_spark.search import plans as P
 from lucene_spark.search.executor import _SCORE_SCHEMA
 
 # jobs of a 60-doc append onto a 200-doc index; 19 while the builder
-# inferred the schema of every table it read back
-APPEND_JOBS = 16
+# inferred the schema of every table it read back, 16 while it broadcast
+# docID offsets from Python rows, range-shuffled the text twice and
+# aggregated the segment stats from the written docs table
+APPEND_JOBS = 11
 
 
 @pytest.fixture(scope="module")
@@ -244,15 +250,48 @@ def test_fresh_reader_plan_build_runs_no_job(spark, job_audit_dirs, shape):
 
 def test_append_jobs(spark, tmp_path):
     """A 60-doc append_to_index reads the tables it has just written with
-    their footer schemas: no schema-inference job per read."""
+    their footer schemas, ranks the batch without a second text shuffle
+    and observes the segment stats during its docs write. Neither the
+    build nor the append leaves its sorted text snapshot cached. The
+    segment's docIDs are proven dense in [base, base + n) from its corpus
+    footers, with no Spark job."""
+    sc = spark.sparkContext
     d = str(tmp_path / "append_jobs")
-    build_index(spark, spark.createDataFrame(make_corpus(200, seed=5)), d,
-                text_col="content", order_cols=["repo", "path", "commit"],
-                num_buckets=4, salt_rows=64)
+    cached = sc._jsc.getPersistentRDDs().size()
+    base = build_index(spark, spark.createDataFrame(make_corpus(200, seed=5)), d,
+                       text_col="content", order_cols=["repo", "path", "commit"],
+                       num_buckets=4, salt_rows=64)["max_doc"]
+    assert sc._jsc.getPersistentRDDs().size() == cached
     batch = spark.createDataFrame(make_corpus(60, seed=11))
-    n = _jobs_in_group(spark.sparkContext, "append_jobs", lambda: append_to_index(
-        spark, batch, d, order_cols=["repo", "path", "commit"]))
+    m = []
+    n = _jobs_in_group(sc, "append_jobs", lambda: m.append(append_to_index(
+        spark, batch, d, order_cols=["repo", "path", "commit"])))
     assert n <= APPEND_JOBS, n
+    assert sc._jsc.getPersistentRDDs().size() == cached
+    seg, got = m[0]["paths"]["corpus"][-1], []
+    assert _jobs_in_group(sc, "append_ids", lambda: got.append(
+        _check_doc_ids(spark, seg, base=base))) == 0
+    assert got == [m[0]["max_doc"] - base] and got[0] > 0
+    with pytest.raises(ValueError, match="docID assignment violated"):
+        _check_doc_ids(spark, seg, base=0)
+
+
+def test_corpus_write_plan_has_no_python_rows(spark, tmp_path):
+    """Stage 0 looks docID offsets up in a literal array: its plan has no
+    broadcast join of driver-built rows (no Scan ExistingRDD job)."""
+    src = str(tmp_path / "src")
+    pdf = make_corpus(100, seed=3)
+    spark.createDataFrame(pdf).write.parquet(src)
+    ranked, sorted_rows = _assign_doc_ids(
+        spark.read.parquet(src), ["repo", "path", "commit"], 4
+    )
+    try:
+        plan = plan_of(ranked)
+        ids = sorted(r["doc_id"] for r in ranked.select("doc_id").collect())
+    finally:
+        sorted_rows.unpersist()
+    assert "BroadcastHashJoin" not in plan and "Scan ExistingRDD" not in plan, plan
+    assert ids == list(range(len(pdf)))
 
 
 def test_multiterm_expansion_broadcast(searcher):

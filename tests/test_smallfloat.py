@@ -67,3 +67,22 @@ def test_byte4_roundtrip_monotone_floor():
     # values below NUM_FREE_VALUES + 8 are exact (subnormal int4 region)
     small = np.arange(sf.NUM_FREE_VALUES + 8)
     np.testing.assert_array_equal(sf.quantize_doc_len(small), small)
+
+
+def test_norm_expr_matches_int_to_byte4(spark):
+    """The docs table's norm column is a Catalyst expression
+    (builder._norm_expr); numpy int_to_byte4 is its oracle over every
+    length below 2^20, 2^n and 2^n - 1 for n = 20..30, and 2^31 - 1."""
+    from pyspark.sql import functions as F
+
+    from lucene_spark.index.builder import _norm_expr
+
+    extra = sorted({2**n for n in range(20, 31)} | {2**n - 1 for n in range(20, 31)}
+                   | {2**31 - 1})
+    dls = spark.range(1 << 20).union(
+        spark.createDataFrame([(v,) for v in extra], "id long")
+    ).select(F.col("id").cast("int").alias("dl"))
+    got = dls.select("dl", _norm_expr(F.col("dl")).alias("norm")).toPandas()
+    assert len(got) == (1 << 20) + len(extra)
+    want = sf.int_to_byte4(got["dl"].to_numpy()).astype(np.int64)
+    assert np.array_equal(got["norm"].to_numpy().astype(np.int64), want)
